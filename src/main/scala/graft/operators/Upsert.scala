@@ -22,7 +22,9 @@ import org.apache.spark.sql.functions._
   */
 object IdempotentInsert {
 
-  /** Rows of `incoming` whose key tuple is absent from `existing`.
+  /** Rows of `incoming` whose key tuple is absent from `existing`, in
+    * `incoming`'s column order (a USING join puts the keys first, and
+    * appended files must match the target's column order).
     * Also dedups within `incoming` itself (the DB PK would reject the
     * second occurrence of a pair within one load too). */
   def newRows(incoming: DataFrame, existing: DataFrame, keys: Seq[String])
@@ -31,6 +33,7 @@ object IdempotentInsert {
     incoming
       .dropDuplicates(keys)
       .join(existingKeys, keys, "left_anti")
+      .select(incoming.columns.toSeq.map(c => col(s"`$c`")): _*)
   }
 
   /** Variant (a): idempotent append into a parquet directory.

@@ -45,8 +45,9 @@ object Jobs {
         // representative (greatest payload struct) BEFORE the insert,
         // then the upsert is keyed on the PK, matching the reference's
         // keep-first uniqueness semantics without its batch-order
-        // nondeterminism.
-        val rows = ParcelaCiot.build(s, sfDir)
+        // nondeterminism. The sink keeps no row order, so the rows skip
+        // the query's R15 global sort.
+        val rows = ParcelaCiot.rows(s, sfDir)
         val pk = Seq("id_manifesto", "cd_parcela")
         val payloadCols = rows.columns.filterNot(pk.contains).toSeq
         val oneRep = graft.operators.Dedup.latestPerKey(rows,

@@ -28,7 +28,11 @@ import graft.sources.Catalog
   *   R8  post-left-join IS NOT NULL (Catalyst EliminateOuterJoin fires)
   *   R9-R14 arithmetic / CASE / ISNULL / CONVERT-103/108 /
   *          NULL-PROPAGATING date+time concat / snake_case aliasing
-  *   R15 global ORDER BY on the sink key
+  *   R15 global ORDER BY on the sink key — a property of the query
+  *       and oracle form ([[build]], [[sparkSql]]) only: the sink path
+  *       reads the unordered [[rows]], because the parcel sink is a
+  *       keyed set that keeps no order, and its dedup and idempotent
+  *       insert re-shuffle the rows anyway
   *
   * Scale notes: nation/region/supplier auto-broadcast; the orders ⋈
   * lineitem joins shuffle on orderkey (co-partitioned across both uses
@@ -43,7 +47,17 @@ object ParcelaCiot {
   val manifestFence = "1998-01-01"
   val contractFence = "1996-06-01"
 
-  def build(spark: SparkSession, sfDir: String): DataFrame = {
+  /** The query with R15's global sort: the q02 / oracle form. */
+  def build(spark: SparkSession, sfDir: String): DataFrame =
+    // R15 global sort; cd_parcela is non-unique in the synthetic data
+    // (duplicate (orderkey, linenumber) pairs), so extend the sort to
+    // a total order for a deterministic oracle hash.
+    rows(spark, sfDir).orderBy(col("id_manifesto"), col("cd_parcela"),
+      col("dt_parcela_str"), col("vl_parcela"), col("total_frete"),
+      col("cd_status"), col("ds_parcela"))
+
+  /** R1–R14: the query's rows in no particular order (the sink path). */
+  def rows(spark: SparkSession, sfDir: String): DataFrame = {
     def t(n: String) = Catalog.table(spark, sfDir, n)
     val dec2 = "decimal(18,2)"
     val dec4 = "decimal(18,4)"
@@ -132,12 +146,6 @@ object ParcelaCiot {
         col("cust_nation"),
         col("cust_region"),
         col("s_name").as("ds_banco"))
-      // R15 global sort; cd_parcela is non-unique in the synthetic data
-      // (duplicate (orderkey, linenumber) pairs), so extend the sort to
-      // a total order for a deterministic oracle hash.
-      .orderBy(col("id_manifesto"), col("cd_parcela"),
-        col("dt_parcela_str"), col("vl_parcela"), col("total_frete"),
-        col("cd_status"), col("ds_parcela"))
   }
 
   /** Spark SQL parity form (SURVEY §7.3 step 6): the same query as

@@ -1,6 +1,10 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Source catalog over the driver testdata (TESTDATA.md).
   *
@@ -11,6 +15,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Reads are plain `spark.read.parquet` so Catalyst's DSv2 pushdown
   * (PushedFilters / column pruning) applies — at 100 TB the scan is the
   * dominant cost and pruning at the source is the single biggest win.
+  *
+  * Schema inference reads parquet footers in a Spark job of its own, and
+  * an ETL pass asks for the same few files many times, so each path's
+  * schema is inferred once per file set (see [[readParquet]]).
   */
 object Catalog {
 
@@ -38,7 +46,7 @@ object Catalog {
     * an int32 day-number or a string ts) surfaces as a confusing
     * analysis error deep inside whichever operator touches it first. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = readParquet(spark, s"$sfDir/$name.parquet")
     eventTimeColumns.getOrElse(name, Nil).foldLeft(df) { (d, c) =>
       d.schema.fields.find(_.name == c).map(_.dataType) match {
         case Some(org.apache.spark.sql.types.LongType) =>
@@ -56,6 +64,56 @@ object Catalog {
           "normalization case in Catalog.eventTimeColumns handling.")
       }
     }
+  }
+
+  /** The schema inferred for a path, and what it was inferred from: every
+    * leaf file's (path, length, modification time) and the session's
+    * parquet-reading confs. */
+  private final case class Inferred(files: Seq[(String, Long, Long)],
+      confs: Map[String, String], schema: StructType)
+
+  private val inferred = new ConcurrentHashMap[String, Inferred]()
+
+  /** `spark.read.parquet(path)` without the footer-reading inference job
+    * when the path's files and the parquet confs are those its cached
+    * schema was inferred from. Every call lists the files through the
+    * Hadoop FileSystem API, which launches no Spark job, so a changed,
+    * added or removed file re-infers, and the returned relation lists
+    * the files afresh as any read does. A missing or empty path reads uncached, so Spark raises
+    * its usual error. */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val files = leafFiles(spark, path)
+    if (files.isEmpty) spark.read.parquet(path)
+    else {
+      val confs = spark.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") ||
+          k.startsWith("spark.sql.legacy.parquet.")
+      }
+      val schema = Option(inferred.get(path))
+        .filter(i => i.files == files && i.confs == confs)
+        .map(_.schema)
+        .getOrElse {
+          val s = spark.read.parquet(path).schema
+          inferred.put(path, Inferred(files, confs, s))
+          s
+        }
+      spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  private def leafFiles(spark: SparkSession, path: String)
+      : Seq[(String, Long, Long)] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val it = fs.listFiles(p, true)
+      val out = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      out.result().sorted
+    } catch { case _: java.io.FileNotFoundException => Nil }
   }
 
   /** Instant-semantics (event-time) columns normalized to TimestampType. */

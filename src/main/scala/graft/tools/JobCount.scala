@@ -1,5 +1,7 @@
 package graft.tools
 
+import org.apache.spark.GraftListenerBus
+
 import graft.{EngineSession, SparkEntry}
 
 /** Job/stage-count profiler: run registered queries through the same
@@ -40,7 +42,7 @@ object JobCount {
         (1 to runs).foreach { r =>
           // listener events post asynchronously — drain before and
           // after each run so counts attribute to the right query
-          Thread.sleep(1000)
+          GraftListenerBus.drain(spark.sparkContext, 10000)
           nJobs.set(0); nStages.set(0); nTasks.set(0)
           spark.sparkContext.addSparkListener(listener)
           val t0 = System.nanoTime()
@@ -51,7 +53,7 @@ object JobCount {
             System.err.println(s"[jobcount] $name failed: $e"); false
           }
           val sec = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(1000)
+          GraftListenerBus.drain(spark.sparkContext, 10000)
           spark.sparkContext.removeSparkListener(listener)
           spark.catalog.clearCache()
           if (ok) println(f"JOBCOUNT $name run=$r jobs=${nJobs.get}%d " +
