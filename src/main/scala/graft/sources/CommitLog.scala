@@ -724,18 +724,15 @@ object CommitLog {
     * unpartitioned. Partition-column allowlist matches the stager:
     * STRING / integral / BOOLEAN. */
   def setPartitionSpec(spark: SparkSession, table: String,
-      cols: Seq[String], maxRetries: Int = 20): Long = {
+      cols: Seq[String]): Long = {
     require(cols.forall(c => c.nonEmpty && !c.contains(",")),
       "setPartitionSpec: partition columns must be non-empty and " +
         "comma-free")
     val cs = caseSensitiveAnalysis(spark)
     def same(a: String, b: String) =
       if (cs) a == b else a.equalsIgnoreCase(b)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLog.setPartitionSpec: nothing committed at $table"))
+    val v = transact(spark, table, "CommitLog.setPartitionSpec") { tx =>
+      val cur = tx.existing
       val base = cur.schema.map(decodeSchema).getOrElse {
         if (cur.segments.isEmpty) throw new IllegalStateException(
           s"CommitLog.setPartitionSpec: $table has no recorded " +
@@ -759,21 +756,16 @@ object CommitLog {
       val snap = Snapshot(cur.version + 1L, cur.segments, cur.version,
         "set_partition_spec", schema = cur.schema, dv = cur.dv,
         partitionBy = Some(cols.mkString(",")))
-      if (tryPublish(spark, table, snap, Some(cur))) {
-        // the manifest field now governs forever; the marker is a
-        // dead derivative cache — reconcile it best-effort (losing
-        // this to a crash changes nothing: the field wins)
-        try {
-          deletePartitionMarker(spark, table)
-          if (cols.nonEmpty) writePartitionMarker(spark, table, cols)
-        } catch { case scala.util.control.NonFatal(_) => () }
-        return snap.version
-      }
-      attempt += 1
+      Publish(snap, snap.version)
     }
-    throw new java.io.IOException(
-      s"CommitLog.setPartitionSpec: lost the version race " +
-        s"$maxRetries times at $table")
+    // the manifest field now governs forever; the marker is a
+    // dead derivative cache — reconcile it best-effort (losing
+    // this to a crash changes nothing: the field wins)
+    try {
+      deletePartitionMarker(spark, table)
+      if (cols.nonEmpty) writePartitionMarker(spark, table, cols)
+    } catch { case scala.util.control.NonFatal(_) => () }
+    v
   }
 
   // ---- persistent CHECK constraints ------------------------------------
@@ -881,27 +873,19 @@ object CommitLog {
     * publish wins — by then the manifest carries the absolute truth,
     * so a crash between the two just leaves an ignored stale file. */
   private def commitConstraints(spark: SparkSession, table: String,
-      op: String, maxRetries: Int)(
+      op: String)(
       next: (Snapshot, Map[String, String]) => Map[String, String])
       : Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLog.$op: nothing committed at $table"))
+    val v = transact(spark, table, s"CommitLog.$op") { tx =>
+      val cur = tx.existing
       val cons = next(cur, constraintsOf(spark, table, Some(cur)))
       val snap = Snapshot(cur.version + 1L, cur.segments, cur.version,
         op, schema = cur.schema, dv = cur.dv,
         constraints = Some(encodeConstraints(cons)))
-      if (tryPublish(spark, table, snap, Some(cur))) {
-        deleteLegacyConstraintsFile(spark, table)
-        return snap.version
-      }
-      attempt += 1
+      Publish(snap, snap.version)
     }
-    throw new java.io.IOException(
-      s"CommitLog.$op: lost the version race $maxRetries times at " +
-        s"$table")
+    deleteLegacyConstraintsFile(spark, table)
+    v
   }
 
   /** Add (or replace) a named CHECK constraint, as an OCC commit
@@ -913,10 +897,10 @@ object CommitLog {
     * a concurrent append of violating rows cannot slip under the
     * constraint. Returns the committed version. */
   def setConstraint(spark: SparkSession, table: String,
-      name: String, exprSql: String, maxRetries: Int = 20): Long = {
+      name: String, exprSql: String): Long = {
     require(name.nonEmpty && exprSql.nonEmpty,
       "setConstraint: empty name or expression")
-    commitConstraints(spark, table, "set_constraint", maxRetries) {
+    commitConstraints(spark, table, "set_constraint") {
       (cur, cons) =>
         val pred = expr(exprSql)
         if (cur.segments.nonEmpty || cur.schema.isDefined) {
@@ -940,8 +924,8 @@ object CommitLog {
     * would mask a typo'd name while the real constraint keeps
     * refusing writes). Returns the committed version. */
   def dropConstraint(spark: SparkSession, table: String,
-      name: String, maxRetries: Int = 20): Long =
-    commitConstraints(spark, table, "drop_constraint", maxRetries) {
+      name: String): Long =
+    commitConstraints(spark, table, "drop_constraint") {
       (_, cons) =>
         require(cons.contains(name),
           s"CommitLog.dropConstraint: no CHECK constraint '$name' " +
@@ -1843,6 +1827,83 @@ object CommitLog {
     won
   }
 
+  /** Lost version races any OCC commit absorbs before giving up. */
+  private[sources] val MaxCommitRetries = 20
+
+  /** What one [[transact]] attempt decided: publish `snap` (returning
+    * `result` if it wins the version race), or finish with no commit. */
+  private[sources] sealed trait Attempt[+A]
+  private[sources] final case class Publish[A](snap: Snapshot, result: A)
+    extends Attempt[A]
+  private[sources] final case class Done[A](result: A) extends Attempt[A]
+
+  /** One OCC attempt: the snapshot it rebases on (`cur`, None = no
+    * table yet) and what it owns — directories it staged (`stage`)
+    * and frames it persisted (`pin`). */
+  private[sources] final class Tx private[CommitLog] (op: String,
+      table: String, val cur: Option[Snapshot], val attempt: Int) {
+    private[CommitLog] val staged =
+      scala.collection.mutable.ArrayBuffer.empty[String]
+    private[CommitLog] val pins =
+      scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def existing: Snapshot = cur.getOrElse(throw new IllegalStateException(
+      s"$op: nothing committed at $table"))
+    def stage(path: String): String = { staged += path; path }
+    def stage(paths: Seq[String]): Seq[String] = { staged ++= paths; paths }
+    def pin(df: DataFrame): DataFrame = {
+      val p = df.persist(
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      pins += p
+      p
+    }
+  }
+
+  /** THE optimistic-concurrency commit loop every retrying publish
+    * runs: resolve the snapshot (attempt 0 may reuse `first`, one the
+    * caller already holds), run `attempt`, publish what it returns,
+    * and on a lost race rebase and retry, at most [[MaxCommitRetries]]
+    * times. Pins are released after every attempt. Cleanup — nothing
+    * unreferenced survives a writer that loses or gives up:
+    *  - a lost race, or an exception from `attempt`, deletes that
+    *    attempt's staged paths; the exception (a refusal) also deletes
+    *    the stage-once `staged` paths;
+    *  - a `Done` (no commit) or exhausting the retries deletes both;
+    *  - an exception from the publish itself deletes NOTHING: the
+    *    manifest may already be linked. */
+  private[sources] def transact[A](spark: SparkSession, table: String,
+      op: String, staged: Seq[String] = Nil,
+      first: Option[Option[Snapshot]] = None)(
+      attempt: Tx => Attempt[A]): A = {
+    def drop(paths: Seq[String]): Unit = if (paths.nonEmpty) {
+      val f = fs(spark, table)
+      paths.foreach(p =>
+        f.delete(new org.apache.hadoop.fs.Path(p), true): Unit)
+    }
+    @scala.annotation.tailrec
+    def run(i: Int): A =
+      if (i == MaxCommitRetries) {
+        drop(staged)
+        throw new java.io.IOException(
+          s"$op: lost the version race $MaxCommitRetries times at $table")
+      } else {
+        val tx = new Tx(op, table,
+          first.filter(_ => i == 0).getOrElse(snapshot(spark, table)), i)
+        val outcome =
+          try attempt(tx)
+          catch {
+            case scala.util.control.NonFatal(e) =>
+              drop(tx.staged.toSeq ++ staged); throw e
+          } finally tx.pins.foreach(_.unpersist(): Unit)
+        outcome match {
+          case Done(r) => drop(tx.staged.toSeq ++ staged); r
+          case Publish(snap, r) =>
+            if (tryPublish(spark, table, snap, tx.cur)) r
+            else { drop(tx.staged.toSeq); run(i + 1) }
+        }
+      }
+    run(0)
+  }
+
   /** Force a full-state checkpoint at the CURRENT version — the
     * operational knob (and what vacuum uses to pin its retain floor
     * before dropping older manifests). Idempotent. Returns the
@@ -1870,34 +1931,28 @@ object CommitLog {
     * Lost-update-free under concurrency: a loser of the version race
     * re-reads the winner's manifest, so its retry carries BOTH
     * writers' segments. Returns the committed version. */
-  def append(spark: SparkSession, table: String, df: DataFrame,
-      maxRetries: Int = 20): Long = {
+  def append(spark: SparkSession, table: String, df: DataFrame): Long = {
     // identity tables take the allocating loop (stage-inside-retry:
     // a lost race reallocates against the winner's high-water mark);
     // everything else keeps the stage-once fast path
     val pre = snapshot(spark, table)
     val idFields = identityFields(pre.flatMap(_.schema).map(decodeSchema))
     if (idFields.nonEmpty)
-      return appendIdentity(spark, table, df, idFields, maxRetries,
-        "append", None).get
+      return appendIdentity(spark, table, df, idFields, "append", None).get
     val (seg, gated0) = writeSegmentGated(spark, table, df)
     var gated = gated0
-    var attempt = 0
-    while (attempt < maxRetries) {
-      // first iteration reuses the identity-probe resolution (the
-      // common uncontended append pays no extra manifest I/O for the
-      // probe); retries re-resolve as before
-      val cur = if (attempt == 0) pre else snapshot(spark, table)
+    // the first attempt reuses the identity-probe resolution (the
+    // common uncontended append pays no extra manifest I/O for the
+    // probe); retries re-resolve
+    transact(spark, table, "CommitLog.append", staged = Seq(seg),
+        first = Some(pre)) { tx =>
+      val cur = tx.cur
       gated = regateOnConstraintChange(spark, table, Seq(seg), gated, cur)
       val v = cur.fold(1L)(_.version + 1L)
-      val snap = Snapshot(v, cur.fold(Seq.empty[String])(_.segments) :+ seg,
+      Publish(Snapshot(v, cur.fold(Seq.empty[String])(_.segments) :+ seg,
         cur.fold(0L)(_.version), "append",
-        schema = cur.flatMap(_.schema), dv = cur.flatMap(_.dv))
-      if (tryPublish(spark, table, snap, cur)) return v
-      attempt += 1
+        schema = cur.flatMap(_.schema), dv = cur.flatMap(_.dv)), v)
     }
-    throw new java.io.IOException(
-      s"CommitLog.append: lost the version race $maxRetries times at $table")
   }
 
   /** The identity-allocating append: values are minted against the
@@ -1911,47 +1966,40 @@ object CommitLog {
   private def appendIdentity(spark: SparkSession, table: String,
       df: DataFrame,
       idFields: Seq[org.apache.spark.sql.types.StructField],
-      maxRetries: Int, op: String,
-      txn: Option[(String, Long)]): Option[Long] = {
+      op: String, txn: Option[(String, Long)]): Option[Long] = {
     val pinned = df.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val stats = identityStats(pinned, idFields)
-      var attempt = 0
-      while (attempt < maxRetries) {
+      transact(spark, table, "CommitLog.append") { tx =>
         // exactly-once streaming: re-check the batch watermark every
         // retry (a concurrent replica may have won with this batch)
         if (txn.exists { case (appId, batchId) =>
             lastTxn(spark, table, appId).exists(_ >= batchId) })
-          return None
-        val cur = snapshot(spark, table)
-        // the identity column SET must be the one the stats were
-        // computed for — a concurrent schema change mid-append is
-        // a caller coordination bug, not something to paper over
-        val nowFields = identityFields(
-          cur.flatMap(_.schema).map(decodeSchema))
-        require(nowFields.map(_.name) == idFields.map(_.name),
-          s"CommitLog.append: identity columns of $table changed " +
-            "concurrently — retry the append")
-        val (dfId, marks) = applyIdentity(pinned, nowFields,
-          decodeIdentity(cur.flatMap(_.identity)), stats)
-        val (seg, _) = writeSegmentGated(spark, table, dfId)
-        val v = cur.fold(1L)(_.version + 1L)
-        val snap = Snapshot(v,
-          cur.fold(Seq.empty[String])(_.segments) :+ seg,
-          cur.fold(0L)(_.version), op,
-          txnApp = txn.map(_._1), txnBatch = txn.map(_._2),
-          schema = cur.flatMap(_.schema), dv = cur.flatMap(_.dv),
-          identity = Some(encodeConstraints(
-            marks.map { case (k, x) => k -> x.toString })))
-        if (tryPublish(spark, table, snap, cur)) return Some(v)
-        fs(spark, table).delete(
-          new org.apache.hadoop.fs.Path(seg), true): Unit
-        attempt += 1
+          Done(None)
+        else {
+          val cur = tx.cur
+          // the identity column SET must be the one the stats were
+          // computed for — a concurrent schema change mid-append is
+          // a caller coordination bug, not something to paper over
+          val nowFields = identityFields(
+            cur.flatMap(_.schema).map(decodeSchema))
+          require(nowFields.map(_.name) == idFields.map(_.name),
+            s"CommitLog.append: identity columns of $table changed " +
+              "concurrently — retry the append")
+          val (dfId, marks) = applyIdentity(pinned, nowFields,
+            decodeIdentity(cur.flatMap(_.identity)), stats)
+          val seg = tx.stage(writeSegmentGated(spark, table, dfId)._1)
+          val v = cur.fold(1L)(_.version + 1L)
+          Publish(Snapshot(v,
+            cur.fold(Seq.empty[String])(_.segments) :+ seg,
+            cur.fold(0L)(_.version), op,
+            txnApp = txn.map(_._1), txnBatch = txn.map(_._2),
+            schema = cur.flatMap(_.schema), dv = cur.flatMap(_.dv),
+            identity = Some(encodeConstraints(
+              marks.map { case (k, x) => k -> x.toString }))), Some(v))
+        }
       }
-      throw new java.io.IOException(
-        s"CommitLog.append: lost the version race $maxRetries times " +
-          s"at $table")
     } finally pinned.unpersist(): Unit
   }
 
@@ -2020,12 +2068,12 @@ object CommitLog {
     * re-merges against the winner's schema on a lost race, so two
     * concurrent evolvers adding different columns both land (their
     * union), exactly like two appends' rows. */
-  def appendEvolve(spark: SparkSession, table: String, df: DataFrame,
-      maxRetries: Int = 20): Long = {
+  def appendEvolve(spark: SparkSession, table: String,
+      df: DataFrame): Long = {
     val seg = writeSegment(spark, table, df)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = snapshot(spark, table)
+    transact(spark, table, "CommitLog.appendEvolve",
+        staged = Seq(seg)) { tx =>
+      val cur = tx.cur
       val base = cur.map(s => s.schema.map(decodeSchema).getOrElse(
         readSegments(spark, s.segments, None).schema))
       // Mapping-active tables refuse NEW columns on this path: the
@@ -2042,28 +2090,20 @@ object CommitLog {
           val known = b.fieldNames
           val fresh = df.schema.fieldNames.filterNot(n =>
             known.exists(k => if (cs0) k == n else k.equalsIgnoreCase(n)))
-          if (fresh.nonEmpty) {
-            fs(spark, table).delete(
-              new org.apache.hadoop.fs.Path(seg), true): Unit
+          if (fresh.nonEmpty)
             throw new IllegalStateException(
               s"CommitLog.appendEvolve: table $table uses column " +
                 s"mapping — new column(s) ${fresh.mkString(", ")} " +
                 "need an explicit physical name; run ALTER TABLE … " +
                 "ADD COLUMNS first, then append")
-          }
         }
       val merged = base.fold(df.schema)(b =>
         evolveSchema(b, df.schema, caseSensitiveAnalysis(spark)))
       val v = cur.fold(1L)(_.version + 1L)
-      val snap = Snapshot(v, cur.fold(Seq.empty[String])(_.segments) :+ seg,
+      Publish(Snapshot(v, cur.fold(Seq.empty[String])(_.segments) :+ seg,
         cur.fold(0L)(_.version), "append",
-        schema = Some(encodeSchema(merged)), dv = cur.flatMap(_.dv))
-      if (tryPublish(spark, table, snap, cur)) return v
-      attempt += 1
+        schema = Some(encodeSchema(merged)), dv = cur.flatMap(_.dv)), v)
     }
-    throw new java.io.IOException(
-      s"CommitLog.appendEvolve: lost the version race $maxRetries " +
-        s"times at $table")
   }
 
   /** METADATA-ONLY add-column evolution — the `ALTER TABLE … ADD
@@ -2078,14 +2118,10 @@ object CommitLog {
     * concurrent evolver adding a different column and this one both
     * land (their union). */
   def evolveColumns(spark: SparkSession, table: String,
-      added: Seq[org.apache.spark.sql.types.StructField],
-      maxRetries: Int = 20): Long = {
+      added: Seq[org.apache.spark.sql.types.StructField]): Long = {
     require(added.nonEmpty, "CommitLog.evolveColumns: no columns to add")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLog.evolveColumns: nothing committed at $table"))
+    transact(spark, table, "CommitLog.evolveColumns") { tx =>
+      val cur = tx.existing
       val base = cur.schema.map(decodeSchema).getOrElse(
         readSegments(spark, cur.segments, None).schema)
       // duplicate probe under the ANALYZER's name resolution
@@ -2119,14 +2155,10 @@ object CommitLog {
               s"col-${java.util.UUID.randomUUID()}").build()))
       val merged = evolveSchema(base,
         org.apache.spark.sql.types.StructType(stampedAdds.toArray), cs)
-      val snap = Snapshot(cur.version + 1L, cur.segments, cur.version,
-        "evolve", schema = Some(encodeSchema(merged)), dv = cur.dv)
-      if (tryPublish(spark, table, snap, Some(cur))) return snap.version
-      attempt += 1
+      Publish(Snapshot(cur.version + 1L, cur.segments, cur.version,
+        "evolve", schema = Some(encodeSchema(merged)), dv = cur.dv),
+        cur.version + 1L)
     }
-    throw new java.io.IOException(
-      s"CommitLog.evolveColumns: lost the version race $maxRetries " +
-        s"times at $table")
   }
 
   /** `ALTER TABLE … RENAME COLUMN` — a METADATA-ONLY commit under
@@ -2141,15 +2173,12 @@ object CommitLog {
     * first, re-add under the new name); a table with no recorded
     * schema (nothing to rename against). */
   def renameColumn(spark: SparkSession, table: String, from: String,
-      to: String, maxRetries: Int = 20): Long = {
+      to: String): Long = {
     val cs = caseSensitiveAnalysis(spark)
     def same(a: String, b: String) =
       if (cs) a == b else a.equalsIgnoreCase(b)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLog.renameColumn: nothing committed at $table"))
+    transact(spark, table, "CommitLog.renameColumn") { tx =>
+      val cur = tx.existing
       // a plain-API table (no recorded schema yet) infers its current
       // schema from the segments and RECORDS it with this commit —
       // the appendEvolve precedent; an empty schemaless table has
@@ -2176,15 +2205,10 @@ object CommitLog {
               .withMetadata(f.metadata)
               .putString(PhysicalKey, physicalName(f)).build())
         })
-      val snap = Snapshot(cur.version + 1L, cur.segments, cur.version,
+      Publish(Snapshot(cur.version + 1L, cur.segments, cur.version,
         "rename_column", schema = Some(encodeSchema(renamed)),
-        dv = cur.dv, mapping = Some("name"))
-      if (tryPublish(spark, table, snap, Some(cur))) return snap.version
-      attempt += 1
+        dv = cur.dv, mapping = Some("name")), cur.version + 1L)
     }
-    throw new java.io.IOException(
-      s"CommitLog.renameColumn: lost the version race $maxRetries " +
-        s"times at $table")
   }
 
   /** `ALTER TABLE … DROP COLUMN` — a METADATA-ONLY commit under
@@ -2194,16 +2218,13 @@ object CommitLog {
     * mapping mode so a later re-ADD of the same name maps to a fresh
     * physical column instead of resurrecting the dropped data. Same
     * refusal set as [[renameColumn]], plus dropping the last column. */
-  def dropColumn(spark: SparkSession, table: String, name: String,
-      maxRetries: Int = 20): Long = {
+  def dropColumn(spark: SparkSession, table: String,
+      name: String): Long = {
     val cs = caseSensitiveAnalysis(spark)
     def same(a: String, b: String) =
       if (cs) a == b else a.equalsIgnoreCase(b)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLog.dropColumn: nothing committed at $table"))
+    transact(spark, table, "CommitLog.dropColumn") { tx =>
+      val cur = tx.existing
       // a plain-API table (no recorded schema yet) infers its current
       // schema from the segments and RECORDS it with this commit —
       // the appendEvolve precedent; an empty schemaless table has
@@ -2224,15 +2245,10 @@ object CommitLog {
             s"$table — DROP TABLE instead")
       val remaining = org.apache.spark.sql.types.StructType(
         base.fields.filterNot(f => same(f.name, name)))
-      val snap = Snapshot(cur.version + 1L, cur.segments, cur.version,
+      Publish(Snapshot(cur.version + 1L, cur.segments, cur.version,
         "drop_column", schema = Some(encodeSchema(remaining)),
-        dv = cur.dv, mapping = Some("name"))
-      if (tryPublish(spark, table, snap, Some(cur))) return snap.version
-      attempt += 1
+        dv = cur.dv, mapping = Some("name")), cur.version + 1L)
     }
-    throw new java.io.IOException(
-      s"CommitLog.dropColumn: lost the version race $maxRetries " +
-        s"times at $table")
   }
 
   /** The provably-safe METADATA-ONLY type promotions (Delta type
@@ -2277,16 +2293,12 @@ object CommitLog {
     * INT faces a full rewrite. Unsafe changes refuse loudly, naming
     * the safe set. */
   def widenColumn(spark: SparkSession, table: String, name: String,
-      to: org.apache.spark.sql.types.DataType,
-      maxRetries: Int = 20): Long = {
+      to: org.apache.spark.sql.types.DataType): Long = {
     val cs = caseSensitiveAnalysis(spark)
     def same(a: String, b: String) =
       if (cs) a == b else a.equalsIgnoreCase(b)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLog.widenColumn: nothing committed at $table"))
+    transact(spark, table, "CommitLog.widenColumn") { tx =>
+      val cur = tx.existing
       val base = cur.schema.map(decodeSchema).getOrElse {
         if (cur.segments.isEmpty) throw new IllegalStateException(
           s"CommitLog.widenColumn: $table has no recorded schema " +
@@ -2307,15 +2319,10 @@ object CommitLog {
       val widened = org.apache.spark.sql.types.StructType(
         base.fields.map(x =>
           if (same(x.name, name)) x.copy(dataType = to) else x))
-      val snap = Snapshot(cur.version + 1L, cur.segments, cur.version,
+      Publish(Snapshot(cur.version + 1L, cur.segments, cur.version,
         "widen_column", schema = Some(encodeSchema(widened)),
-        dv = cur.dv)
-      if (tryPublish(spark, table, snap, Some(cur))) return snap.version
-      attempt += 1
+        dv = cur.dv), cur.version + 1L)
     }
-    throw new java.io.IOException(
-      s"CommitLog.widenColumn: lost the version race $maxRetries " +
-        s"times at $table")
   }
 
   /** The rename/drop refusals shared by both verbs: partition
@@ -2443,26 +2450,17 @@ object CommitLog {
     * empty adds/removes). Returns None when the watermark already
     * covers `batchId` (replay), the committed version otherwise. */
   def commitTxnMarker(spark: SparkSession, table: String,
-      appId: String, batchId: Long, maxRetries: Int = 20)
-      : Option[Long] = {
+      appId: String, batchId: Long): Option[Long] = {
     if (lastTxn(spark, table, appId).exists(_ >= batchId)) return None
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLog.commitTxnMarker: nothing committed at $table"))
-      if (attempt > 0 && lastTxn(spark, table, appId)
-          .exists(_ >= batchId)) return None
-      val snap = Snapshot(cur.version + 1L, cur.segments, cur.version,
+    transact(spark, table, "CommitLog.commitTxnMarker") { tx =>
+      val cur = tx.existing
+      if (tx.attempt > 0 && lastTxn(spark, table, appId)
+          .exists(_ >= batchId)) Done(None)
+      else Publish(Snapshot(cur.version + 1L, cur.segments, cur.version,
         "txn_marker", txnApp = Some(appId), txnBatch = Some(batchId),
-        schema = cur.schema, dv = cur.dv, bucket = cur.bucket)
-      if (tryPublish(spark, table, snap, Some(cur)))
-        return Some(snap.version)
-      attempt += 1
+        schema = cur.schema, dv = cur.dv, bucket = cur.bucket),
+        Some(cur.version + 1L))
     }
-    throw new java.io.IOException(
-      s"CommitLog.commitTxnMarker: lost the version race " +
-        s"$maxRetries times at $table")
   }
 
   /** Exactly-once APPEND for an idempotent writer: commit `df` stamped
@@ -2474,7 +2472,7 @@ object CommitLog {
     * every lost version race, so an interleaved foreign writer never
     * confuses the dedup. */
   def appendTxn(spark: SparkSession, table: String, df: DataFrame,
-      appId: String, batchId: Long, maxRetries: Int = 20): Option[Long] = {
+      appId: String, batchId: Long): Option[Long] = {
     if (lastTxn(spark, table, appId).exists(_ >= batchId)) return None
     // identity tables allocate surrogate keys per micro-batch under
     // the same exactly-once stamps (the streaming-ingest use case)
@@ -2482,32 +2480,27 @@ object CommitLog {
     val idFields = identityFields(
       preI.flatMap(_.schema).map(decodeSchema))
     if (idFields.nonEmpty)
-      return appendIdentity(spark, table, df, idFields, maxRetries,
+      return appendIdentity(spark, table, df, idFields,
         "streaming-append", Some((appId, batchId)))
     val (seg, gated0) = writeSegmentGated(spark, table, df)
     var gated = gated0
-    var attempt = 0
-    while (attempt < maxRetries) {
-      if (lastTxn(spark, table, appId).exists(_ >= batchId)) {
-        // a concurrent replica of the same query won the race with
-        // this very batch: drop our orphaned segment, report skipped
-        fs(spark, table).delete(new org.apache.hadoop.fs.Path(seg), true)
-        return None
+    // first attempt reuses the identity-probe resolution (same
+    // rationale as append: a stale base can never WIN the publish)
+    transact(spark, table, "CommitLog.appendTxn", staged = Seq(seg),
+        first = Some(preI)) { tx =>
+      // a concurrent replica of the same query won the race with this
+      // very batch: report skipped (Done drops our orphaned segment)
+      if (lastTxn(spark, table, appId).exists(_ >= batchId)) Done(None)
+      else {
+        val cur = tx.cur
+        gated = regateOnConstraintChange(spark, table, Seq(seg), gated, cur)
+        val v = cur.fold(1L)(_.version + 1L)
+        Publish(Snapshot(v, cur.fold(Seq.empty[String])(_.segments) :+ seg,
+          cur.fold(0L)(_.version), "streaming-append",
+          txnApp = Some(appId), txnBatch = Some(batchId),
+          schema = cur.flatMap(_.schema), dv = cur.flatMap(_.dv)), Some(v))
       }
-      // first iteration reuses the identity-probe resolution (same
-      // rationale as append: a stale base can never WIN the publish)
-      val cur = if (attempt == 0) preI else snapshot(spark, table)
-      gated = regateOnConstraintChange(spark, table, Seq(seg), gated, cur)
-      val v = cur.fold(1L)(_.version + 1L)
-      val snap = Snapshot(v, cur.fold(Seq.empty[String])(_.segments) :+ seg,
-        cur.fold(0L)(_.version), "streaming-append",
-        txnApp = Some(appId), txnBatch = Some(batchId),
-        schema = cur.flatMap(_.schema), dv = cur.flatMap(_.dv))
-      if (tryPublish(spark, table, snap, cur)) return Some(v)
-      attempt += 1
     }
-    throw new java.io.IOException(
-      s"CommitLog.appendTxn: lost the version race $maxRetries times at $table")
   }
 
   /** Keyed MERGE (upsert-replace, the
@@ -2520,17 +2513,17 @@ object CommitLog {
     * against committed state, `SELECT.py:214-218`). Returns
     * (version, inserted, replaced) of the winning commit. */
   def merge(spark: SparkSession, table: String, incoming: DataFrame,
-      keys: Seq[String], maxRetries: Int = 20): (Long, Long, Long) = {
+      keys: Seq[String]): (Long, Long, Long) = {
     val payloadCols = incoming.columns.filterNot(keys.contains).toSeq
     val incOne = if (payloadCols.isEmpty) incoming.dropDuplicates(keys)
       else graft.operators.Dedup.latestPerKey(incoming,
         partition = keys.map(col),
         order = Seq(struct(payloadCols.map(col): _*).desc))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = snapshot(spark, table)
-      val (merged, inserted, replaced) = cur match {
-        case None => (incOne, -1L, 0L) // counted after materialize
+    // a lost race recomputes the merge against the winner's state
+    transact(spark, table, "CommitLog.merge") { tx =>
+      val cur = tx.cur
+      val (merged, exCount, replaced) = cur match {
+        case None => (incOne, 0L, 0L)
         case Some(s) =>
           val ex = readLive(spark, s)
           SchemaAssert.require(incOne, ex.schema)
@@ -2538,29 +2531,15 @@ object CommitLog {
             "left_anti")
           val exCount = ex.count()
           val keptCount = kept.count()
-          (kept.unionByName(incOne), -1L, exCount - keptCount)
+          (kept.unionByName(incOne), exCount, exCount - keptCount)
       }
-      val staged = merged.persist()
-      try {
-        val total = staged.count()
-        val ins = cur match {
-          case None => total
-          case Some(s) =>
-            total - readLive(spark, s).count()
-        }
-        val seg = writeSegment(spark, table, staged)
-        val v = cur.fold(1L)(_.version + 1L)
-        val snap = Snapshot(v, Seq(seg), cur.fold(0L)(_.version), "merge",
-          schema = cur.flatMap(_.schema))
-        if (tryPublish(spark, table, snap, cur)) return (v, ins, replaced)
-        // lost the race: drop the orphaned segment (never referenced)
-        // and recompute against the winner's state
-        fs(spark, table).delete(new org.apache.hadoop.fs.Path(seg), true)
-      } finally staged.unpersist()
-      attempt += 1
+      val staged = tx.pin(merged)
+      val ins = staged.count() - exCount
+      val seg = tx.stage(writeSegment(spark, table, staged))
+      val v = cur.fold(1L)(_.version + 1L)
+      Publish(Snapshot(v, Seq(seg), cur.fold(0L)(_.version), "merge",
+        schema = cur.flatMap(_.schema)), (v, ins, replaced))
     }
-    throw new java.io.IOException(
-      s"CommitLog.merge: lost the version race $maxRetries times at $table")
   }
 
 
@@ -2672,72 +2651,57 @@ object CommitLog {
     * touched segments are read again and rewritten; the untouched
     * bulk of the table is never opened. */
   def delete(spark: SparkSession, table: String,
-      predicate: org.apache.spark.sql.Column,
-      maxRetries: Int = 20): (Long, Long) = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLog.delete: nothing committed at $table"))
+      predicate: org.apache.spark.sql.Column): (Long, Long) =
+    transact(spark, table, "CommitLog.delete") { tx =>
+      val cur = tx.existing
       val matched = coalesce(predicate, lit(false))
       val touched = touchedSegments(spark, cur, matched)
-      if (touched.isEmpty) return (cur.version, 0L)
-      // DV-applied read of the touched subset: an already-DV-deleted
-      // row can neither re-report in CDC nor resurrect in the rewrite.
-      // The predicate materializes ONCE as a projected boolean: the
-      // kept set is its NEGATION, and a negated subquery predicate
-      // (`WHERE id IN (SELECT …)` and the correlated rewrites) nested
-      // under NOT plans as a null-aware anti join Spark can only run
-      // as a BroadcastNestedLoopJoin — in a projection it plans as a
-      // hash ExistenceJoin, and both polarities filter the boolean
-      // PIN the flagged frame when it is expensive to recompute
-      // (subquery predicates re-run an existence join per branch):
-      // the CDC write, the kept-row rewrite, its emptiness probe and
-      // the bucketed staging all filter it. Plain predicates skip the
-      // pin — a pushed-down parquet re-scan is cheaper than building
-      // the columnar cache (measured, q163).
-      val flagged0 = readLive(spark, cur, Some(touched))
-        .withColumn("__graft_matched", matched)
-      val flagged =
-        if (expensiveToRecompute(flagged0)) flagged0.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else flagged0
-      try {
-      val matchedDf = flagged.filter(col("__graft_matched"))
-        .drop("__graft_matched")
-      val changeDir = s"$table/_changes/${java.util.UUID.randomUUID()}"
-      val nDeleted = writeChanges(spark, changeDir,
-        matchedDf
-          .withColumn("_change_type", lit("delete"))
-          .transform(changePhysical(cur)))("delete")
-      val kept = flagged.filter(!col("__graft_matched"))
-        .drop("__graft_matched")
-      // a bucketed layout (SPJ spec) survives the DML: the kept rows
-      // re-land bucket-split and the commit carries the updated spec
-      val bucketStaged = CommitLogStats.stageDmlBucketed(spark, table,
-        cur, touched.toSet, kept)
-      // a fully-deleted segment set gets NO empty replacement segment
-      // (a zero-row parquet dir has no footer to infer schema from)
-      val keptSegs = bucketStaged.map(_._1).getOrElse {
-        if (kept.isEmpty) Seq.empty[String]
-        else Seq(writeSegment(spark, table, kept))
+      if (touched.isEmpty) Done((cur.version, 0L)) else {
+        // DV-applied read of the touched subset: an already-DV-deleted
+        // row can neither re-report in CDC nor resurrect in the rewrite.
+        // The predicate materializes ONCE as a projected boolean: the
+        // kept set is its NEGATION, and a negated subquery predicate
+        // (`WHERE id IN (SELECT …)` and the correlated rewrites) nested
+        // under NOT plans as a null-aware anti join Spark can only run
+        // as a BroadcastNestedLoopJoin — in a projection it plans as a
+        // hash ExistenceJoin, and both polarities filter the boolean
+        // PIN the flagged frame when it is expensive to recompute
+        // (subquery predicates re-run an existence join per branch):
+        // the CDC write, the kept-row rewrite, its emptiness probe and
+        // the bucketed staging all filter it. Plain predicates skip the
+        // pin — a pushed-down parquet re-scan is cheaper than building
+        // the columnar cache (measured, q163).
+        val flagged0 = readLive(spark, cur, Some(touched))
+          .withColumn("__graft_matched", matched)
+        val flagged =
+          if (expensiveToRecompute(flagged0)) tx.pin(flagged0) else flagged0
+        val matchedDf = flagged.filter(col("__graft_matched"))
+          .drop("__graft_matched")
+        val changeDir =
+          tx.stage(s"$table/_changes/${java.util.UUID.randomUUID()}")
+        val nDeleted = writeChanges(spark, changeDir,
+          matchedDf
+            .withColumn("_change_type", lit("delete"))
+            .transform(changePhysical(cur)))("delete")
+        val kept = flagged.filter(!col("__graft_matched"))
+          .drop("__graft_matched")
+        // a bucketed layout (SPJ spec) survives the DML: the kept rows
+        // re-land bucket-split and the commit carries the updated spec
+        val bucketStaged = CommitLogStats.stageDmlBucketed(spark, table,
+          cur, touched.toSet, kept)
+        // a fully-deleted segment set gets NO empty replacement segment
+        // (a zero-row parquet dir has no footer to infer schema from)
+        val keptSegs = tx.stage(bucketStaged.map(_._1).getOrElse {
+          if (kept.isEmpty) Seq.empty[String]
+          else Seq(writeSegment(spark, table, kept))
+        })
+        Publish(Snapshot(cur.version + 1L,
+          cur.segments.filterNot(touched.toSet) ++ keptSegs,
+          cur.version, "delete", changes = Some(changeDir),
+          schema = cur.schema, dv = cur.dv,
+          bucket = bucketStaged.map(_._2)), (cur.version + 1L, nDeleted))
       }
-      val snap = Snapshot(cur.version + 1L,
-        cur.segments.filterNot(touched.toSet) ++ keptSegs,
-        cur.version, "delete", changes = Some(changeDir),
-        schema = cur.schema, dv = cur.dv,
-        bucket = bucketStaged.map(_._2))
-      if (tryPublish(spark, table, snap, Some(cur))) return (snap.version, nDeleted)
-      keptSegs.foreach(s => fs(spark, table).delete(
-        new org.apache.hadoop.fs.Path(s), true): Unit)
-      fs(spark, table).delete(
-        new org.apache.hadoop.fs.Path(changeDir), true): Unit
-      attempt += 1
-      } finally flagged.unpersist(): Unit
     }
-    throw new java.io.IOException(
-      s"CommitLog.delete: lost the version race $maxRetries times at $table")
-  }
 
   /** SELECTIVE OVERWRITE — Delta's `replaceWhere` / filtered INSERT
     * OVERWRITE: atomically replace EXACTLY the rows matching
@@ -2772,8 +2736,7 @@ object CommitLog {
     * resolves the spec; re-run the bucketed OPTIMIZE after a slice
     * reload if the join layout matters. */
   def overwriteWhere(spark: SparkSession, table: String, df: DataFrame,
-      predicate: org.apache.spark.sql.Column,
-      maxRetries: Int = 20): (Long, Long, Long) = {
+      predicate: org.apache.spark.sql.Column): (Long, Long, Long) = {
     val pre = snapshot(spark, table).getOrElse(
       throw new IllegalStateException(
         s"CommitLog.overwriteWhere: nothing committed at $table"))
@@ -2813,9 +2776,9 @@ object CommitLog {
           (Seq(seg), g, ext)
         }
       var gated = gated0
-      var attempt = 0
-      while (attempt < maxRetries) {
-        val cur = snapshot(spark, table).getOrElse(pre)
+      transact(spark, table, "CommitLog.overwriteWhere",
+          staged = newSegs) { tx =>
+        val cur = tx.existing
         gated = regateOnConstraintChange(spark, table, newSegs, gated,
           Some(cur))
         // sidecar tier first: prune the candidate segment list by the
@@ -2841,59 +2804,53 @@ object CommitLog {
         val touched = touchedSegments(spark, cur, matched,
           Some(candidates))
         if (touched.isEmpty && newSegs.isEmpty)
-          return (cur.version, 0L, 0L)
-        val touchedDf =
-          if (touched.isEmpty) None
-          else Some(readLive(spark, cur, Some(touched)))
-        // CDC record: replaced rows as 'delete', new rows as 'insert'
-        // — both projected onto the table's column set (an input
-        // legally omitting a nullable column serves typed NULL)
-        val outCols: Seq[org.apache.spark.sql.types.StructField] =
-          logical.map(_.fields.toSeq).getOrElse(
-            touchedDf.map(_.schema.fields.toSeq)
-              .getOrElse(pinned.schema.fields.toSeq))
-        def project(d: DataFrame): DataFrame =
-          d.select(outCols.map(f =>
-            (if (d.columns.exists(_.equalsIgnoreCase(f.name)))
-              col(s"`${f.name}`").cast(f.dataType)
-            else lit(null).cast(f.dataType)).as(f.name)): _*)
-        val changeDir = s"$table/_changes/${java.util.UUID.randomUUID()}"
-        val delRows = touchedDf.map(t => project(t.filter(matched))
-            .withColumn("_change_type", lit("delete")))
-        val insRows =
-          if (nNew == 0L) None
-          else Some(project(pinned)
-            .withColumn("_change_type", lit("insert")))
-        val byType = writeChanges(spark, changeDir,
-          (delRows ++ insRows).reduce(_.unionByName(_))
-            .transform(changePhysical(cur)))
-        val nDel = byType.getOrElse("delete", 0L)
-        val nIns = byType.getOrElse("insert", 0L)
-        // copy-on-write: survivors of the touched segments re-land
-        val kept = touchedDf.map(_.filter(!matched))
-        val keptSegs = kept match {
-          case Some(k) if !k.isEmpty =>
-            Seq(writeSegment(spark, table, k))
-          case _ => Seq.empty[String]
+          Done((cur.version, 0L, 0L))
+        else {
+          val touchedDf =
+            if (touched.isEmpty) None
+            else Some(readLive(spark, cur, Some(touched)))
+          // CDC record: replaced rows as 'delete', new rows as 'insert'
+          // — both projected onto the table's column set (an input
+          // legally omitting a nullable column serves typed NULL)
+          val outCols: Seq[org.apache.spark.sql.types.StructField] =
+            logical.map(_.fields.toSeq).getOrElse(
+              touchedDf.map(_.schema.fields.toSeq)
+                .getOrElse(pinned.schema.fields.toSeq))
+          def project(d: DataFrame): DataFrame =
+            d.select(outCols.map(f =>
+              (if (d.columns.exists(_.equalsIgnoreCase(f.name)))
+                col(s"`${f.name}`").cast(f.dataType)
+              else lit(null).cast(f.dataType)).as(f.name)): _*)
+          val changeDir =
+            tx.stage(s"$table/_changes/${java.util.UUID.randomUUID()}")
+          val delRows = touchedDf.map(t => project(t.filter(matched))
+              .withColumn("_change_type", lit("delete")))
+          val insRows =
+            if (nNew == 0L) None
+            else Some(project(pinned)
+              .withColumn("_change_type", lit("insert")))
+          val byType = writeChanges(spark, changeDir,
+            (delRows ++ insRows).reduce(_.unionByName(_))
+              .transform(changePhysical(cur)))
+          val nDel = byType.getOrElse("delete", 0L)
+          val nIns = byType.getOrElse("insert", 0L)
+          // copy-on-write: survivors of the touched segments re-land
+          val kept = touchedDf.map(_.filter(!matched))
+          val keptSegs = tx.stage(kept match {
+            case Some(k) if !k.isEmpty =>
+              Seq(writeSegment(spark, table, k))
+            case _ => Seq.empty[String]
+          })
+          Publish(Snapshot(cur.version + 1L,
+            cur.segments.filterNot(touched.toSet) ++ keptSegs ++ newSegs,
+            cur.version, "replace_where", changes = Some(changeDir),
+            schema = cur.schema, dv = cur.dv,
+            identity = if (idExtents.isEmpty) None
+              else Some(encodeIdentityMarks(syncMarks(
+                decodeIdentity(cur.identity), idExtents)))),
+            (cur.version + 1L, nDel, nIns))
         }
-        val snap = Snapshot(cur.version + 1L,
-          cur.segments.filterNot(touched.toSet) ++ keptSegs ++ newSegs,
-          cur.version, "replace_where", changes = Some(changeDir),
-          schema = cur.schema, dv = cur.dv,
-          identity = if (idExtents.isEmpty) None
-            else Some(encodeIdentityMarks(syncMarks(
-              decodeIdentity(cur.identity), idExtents))))
-        if (tryPublish(spark, table, snap, Some(cur)))
-          return (snap.version, nDel, nIns)
-        keptSegs.foreach(s => fs(spark, table).delete(
-          new org.apache.hadoop.fs.Path(s), true): Unit)
-        fs(spark, table).delete(
-          new org.apache.hadoop.fs.Path(changeDir), true): Unit
-        attempt += 1
       }
-      throw new java.io.IOException(
-        s"CommitLog.overwriteWhere: lost the version race " +
-          s"$maxRetries times at $table")
     } finally pinned.unpersist(): Unit
   }
 
@@ -2917,10 +2874,9 @@ object CommitLog {
     * APIs). */
   def deleteVectored(spark: SparkSession, table: String,
       predicate: org.apache.spark.sql.Column,
-      maxDvRows: Long = 10000000L,
-      maxRetries: Int = 20): (Long, Long) =
+      maxDvRows: Long = 10000000L): (Long, Long) =
     deleteVectoredBy(spark, table,
-      _.filter(coalesce(predicate, lit(false))), maxDvRows, maxRetries)
+      _.filter(coalesce(predicate, lit(false))), maxDvRows)
 
   /** [[deleteVectored]] with a KEY-SET matcher: delete the rows whose
     * `keyCols` tuple appears in `keys` — the shape curation deletes
@@ -2931,8 +2887,7 @@ object CommitLog {
     * cannot re-match. */
   def deleteVectoredKeys(spark: SparkSession, table: String,
       keys: DataFrame, keyCols: Seq[String],
-      maxDvRows: Long = 10000000L,
-      maxRetries: Int = 20): (Long, Long) = {
+      maxDvRows: Long = 10000000L): (Long, Long) = {
     require(keyCols.nonEmpty, "CommitLog.deleteVectoredKeys: no keys")
     keyCols.foreach(k => require(keys.columns.contains(k),
       s"CommitLog.deleteVectoredKeys: key column '$k' absent from " +
@@ -2940,109 +2895,89 @@ object CommitLog {
     deleteVectoredBy(spark, table,
       _.join(keys.select(keyCols.map(col): _*), keyCols.toSeq,
         "left_semi"),
-      maxDvRows, maxRetries)
+      maxDvRows)
   }
 
   private def deleteVectoredBy(spark: SparkSession, table: String,
       matcher: DataFrame => DataFrame,
-      maxDvRows: Long, maxRetries: Int): (Long, Long) = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLog.deleteVectored: nothing committed at $table"))
-      if (cur.segments.isEmpty) return (cur.version, 0L)
-      val base = readSegments(spark, cur.segments, cur.schema)
-      val dataCols = base.columns.toSeq
-      val withPos = withDvPos(base)
-      val live = cur.dv.fold(withPos)(subtractDv(spark, withPos, _))
-      // one predicate-pushed scan; persisted so the CDC record and
-      // the DV positions are written from the SAME row set (a
-      // nondeterministic predicate cannot let them diverge)
-      val matches = matcher(live).persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      maxDvRows: Long): (Long, Long) =
+    transact(spark, table, "CommitLog.deleteVectored") { tx =>
+      val cur = tx.existing
+      if (cur.segments.isEmpty) Done((cur.version, 0L)) else {
+        val base = readSegments(spark, cur.segments, cur.schema)
+        val dataCols = base.columns.toSeq
+        val withPos = withDvPos(base)
+        val live = cur.dv.fold(withPos)(subtractDv(spark, withPos, _))
+        // one predicate-pushed scan; persisted so the CDC record and
+        // the DV positions are written from the SAME row set (a
+        // nondeterministic predicate cannot let them diverge)
+        val matches = tx.pin(matcher(live))
         val nDeleted = matches.count()
-        if (nDeleted == 0L) return (cur.version, 0L)
-        val priorDv = cur.dv.map(d =>
-          spark.read.parquet(d).count()).getOrElse(0L)
-        val changeDir = s"$table/_changes/${java.util.UUID.randomUUID()}"
-        matches.select(dataCols.map(col): _*)
-          .withColumn("_change_type", lit("delete"))
-          .transform(changePhysical(cur))
-        .write.mode(SaveMode.ErrorIfExists).parquet(changeDir)
-        if (priorDv + nDeleted > maxDvRows) {
-          // Past the bound, merge-on-read economics are gone — the
-          // vector is a relation every subsequent scan subtracts.
-          // Instead of refusing (the caller would have to know to
-          // switch APIs), fall back to COPY-ON-WRITE of exactly the
-          // touched segments: same final state, same CDC record,
-          // one 'delete' commit. `matches` already carries the live
-          // matched rows WITH their (file, pos) tags, so the kept
-          // rows are one anti-join away; the touched-file list is
-          // bounded by the table's file count (collected once, the
-          // same bound as subtractDv's dictionary).
-          val touchedFiles = matches.select(col("__graft_dv_file"))
-            .distinct().collect().map(_.getString(0))
-          val touchedSegs = cur.segments.filter { seg =>
-            val u = seg.substring(seg.lastIndexOf('/') + 1)
-            touchedFiles.exists(_.contains(u))
+        if (nDeleted == 0L) Done((cur.version, 0L)) else {
+          val priorDv = cur.dv.map(d =>
+            spark.read.parquet(d).count()).getOrElse(0L)
+          val changeDir =
+            tx.stage(s"$table/_changes/${java.util.UUID.randomUUID()}")
+          matches.select(dataCols.map(col): _*)
+            .withColumn("_change_type", lit("delete"))
+            .transform(changePhysical(cur))
+          .write.mode(SaveMode.ErrorIfExists).parquet(changeDir)
+          if (priorDv + nDeleted > maxDvRows) {
+            // Past the bound, merge-on-read economics are gone — the
+            // vector is a relation every subsequent scan subtracts.
+            // Instead of refusing (the caller would have to know to
+            // switch APIs), fall back to COPY-ON-WRITE of exactly the
+            // touched segments: same final state, same CDC record,
+            // one 'delete' commit. `matches` already carries the live
+            // matched rows WITH their (file, pos) tags, so the kept
+            // rows are one anti-join away; the touched-file list is
+            // bounded by the table's file count (collected once, the
+            // same bound as subtractDv's dictionary).
+            val touchedFiles = matches.select(col("__graft_dv_file"))
+              .distinct().collect().map(_.getString(0))
+            val touchedSegs = cur.segments.filter { seg =>
+              val u = seg.substring(seg.lastIndexOf('/') + 1)
+              touchedFiles.exists(_.contains(u))
+            }
+            val touchedTagged = withDvPos(
+              readSegments(spark, touchedSegs, cur.schema))
+            val touchedLive =
+              cur.dv.fold(touchedTagged)(subtractDv(spark, touchedTagged, _))
+            val kept = touchedLive.join(
+              matches.select(col("__graft_dv_file"),
+                col("__graft_dv_pos")),
+              Seq("__graft_dv_file", "__graft_dv_pos"), "left_anti")
+              .select(dataCols.map(col): _*)
+            val keptSegs = tx.stage(
+              if (kept.isEmpty) Seq.empty[String]
+              else Seq(writeSegment(spark, table, kept)))
+            // the untouched segments may still owe rows to the current
+            // vector — carry it; its entries for rewritten-away files
+            // match nothing (readers dictionary by live file paths)
+            Publish(Snapshot(cur.version + 1L,
+              cur.segments.filterNot(touchedSegs.toSet) ++ keptSegs,
+              cur.version, "delete", changes = Some(changeDir),
+              schema = cur.schema, dv = cur.dv), (cur.version + 1L, nDeleted))
+          } else {
+            val newPairs = matches.select(
+              col("__graft_dv_file").as("_dv_file"),
+              col("__graft_dv_pos").as("_dv_pos"))
+            val dvDir = tx.stage(s"$table/_dv/${java.util.UUID.randomUUID()}")
+            // repartition, NOT coalesce: coalesce(1) would collapse the
+            // upstream predicate scan into one task; the shuffle moves
+            // only the matched positions (bounded by maxDvRows)
+            cur.dv.map(d => spark.read.parquet(d).unionByName(newPairs))
+              .getOrElse(newPairs)
+              .repartition(1)
+              .write.mode(SaveMode.ErrorIfExists).parquet(dvDir)
+            Publish(Snapshot(cur.version + 1L, cur.segments,
+              cur.version, "delete_dv", changes = Some(changeDir),
+              schema = cur.schema, dv = Some(dvDir)),
+              (cur.version + 1L, nDeleted))
           }
-          val touchedTagged = withDvPos(
-            readSegments(spark, touchedSegs, cur.schema))
-          val touchedLive =
-            cur.dv.fold(touchedTagged)(subtractDv(spark, touchedTagged, _))
-          val kept = touchedLive.join(
-            matches.select(col("__graft_dv_file"),
-              col("__graft_dv_pos")),
-            Seq("__graft_dv_file", "__graft_dv_pos"), "left_anti")
-            .select(dataCols.map(col): _*)
-          val keptSegs =
-            if (kept.isEmpty) Seq.empty[String]
-            else Seq(writeSegment(spark, table, kept))
-          // the untouched segments may still owe rows to the current
-          // vector — carry it; its entries for rewritten-away files
-          // match nothing (readers dictionary by live file paths)
-          val snap = Snapshot(cur.version + 1L,
-            cur.segments.filterNot(touchedSegs.toSet) ++ keptSegs,
-            cur.version, "delete", changes = Some(changeDir),
-            schema = cur.schema, dv = cur.dv)
-          if (tryPublish(spark, table, snap, Some(cur)))
-            return (snap.version, nDeleted)
-          // lost the race: drop staged output, fall through to retry
-          keptSegs.foreach(sg => fs(spark, table).delete(
-            new org.apache.hadoop.fs.Path(sg), true): Unit)
-          fs(spark, table).delete(
-            new org.apache.hadoop.fs.Path(changeDir), true): Unit
-        } else {
-          val newPairs = matches.select(
-            col("__graft_dv_file").as("_dv_file"),
-            col("__graft_dv_pos").as("_dv_pos"))
-          val dvDir = s"$table/_dv/${java.util.UUID.randomUUID()}"
-          // repartition, NOT coalesce: coalesce(1) would collapse the
-          // upstream predicate scan into one task; the shuffle moves
-          // only the matched positions (bounded by maxDvRows)
-          cur.dv.map(d => spark.read.parquet(d).unionByName(newPairs))
-            .getOrElse(newPairs)
-            .repartition(1)
-            .write.mode(SaveMode.ErrorIfExists).parquet(dvDir)
-          val snap = Snapshot(cur.version + 1L, cur.segments,
-            cur.version, "delete_dv", changes = Some(changeDir),
-            schema = cur.schema, dv = Some(dvDir))
-          if (tryPublish(spark, table, snap, Some(cur)))
-            return (snap.version, nDeleted)
-          fs(spark, table).delete(
-            new org.apache.hadoop.fs.Path(changeDir), true): Unit
-          fs(spark, table).delete(
-            new org.apache.hadoop.fs.Path(dvDir), true): Unit
         }
-      } finally matches.unpersist()
-      attempt += 1
+      }
     }
-    throw new java.io.IOException(
-      s"CommitLog.deleteVectored: lost the version race $maxRetries " +
-        s"times at $table")
-  }
 
   /** MERGE-ON-READ update: the matched rows' old positions join the
     * deletion vector and their UPDATED copies land as one appended
@@ -3056,82 +2991,71 @@ object CommitLog {
   def updateVectored(spark: SparkSession, table: String,
       predicate: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column],
-      maxDvRows: Long = 10000000L,
-      maxRetries: Int = 20): (Long, Long) = {
+      maxDvRows: Long = 10000000L): (Long, Long) = {
     require(set.nonEmpty, "CommitLog.updateVectored: empty SET clause")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLog.updateVectored: nothing committed at $table"))
-      if (cur.segments.isEmpty) return (cur.version, 0L)
-      val schema = readSegments(spark, cur.segments, cur.schema).schema
-      val unknown = set.keySet -- schema.fieldNames.toSet
-      require(unknown.isEmpty,
-        s"CommitLog.updateVectored: SET names unknown column(s) " +
-          s"${unknown.mkString(", ")} — table has " +
-          schema.fieldNames.mkString(", "))
-      val logical = cur.schema.map(decodeSchema)
-      refuseGeneratedSet("updateVectored", set.keys, logical)
-      val matched = coalesce(predicate, lit(false))
-      val withPos = withDvPos(
-        readSegments(spark, cur.segments, cur.schema))
-      val live = cur.dv.fold(withPos)(subtractDv(spark, withPos, _))
-      val matches = live.filter(matched).persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+    transact(spark, table, "CommitLog.updateVectored") { tx =>
+      val cur = tx.existing
+      if (cur.segments.isEmpty) Done((cur.version, 0L)) else {
+        val schema = readSegments(spark, cur.segments, cur.schema).schema
+        val unknown = set.keySet -- schema.fieldNames.toSet
+        require(unknown.isEmpty,
+          s"CommitLog.updateVectored: SET names unknown column(s) " +
+            s"${unknown.mkString(", ")} — table has " +
+            schema.fieldNames.mkString(", "))
+        val logical = cur.schema.map(decodeSchema)
+        refuseGeneratedSet("updateVectored", set.keys, logical)
+        val matched = coalesce(predicate, lit(false))
+        val withPos = withDvPos(
+          readSegments(spark, cur.segments, cur.schema))
+        val live = cur.dv.fold(withPos)(subtractDv(spark, withPos, _))
+        val matches = tx.pin(live.filter(matched))
         val nUpdated = matches.count()
-        if (nUpdated == 0L) return (cur.version, 0L)
-        val priorDv = cur.dv.map(d =>
-          spark.read.parquet(d).count()).getOrElse(0L)
-        if (priorDv + nUpdated > maxDvRows)
+        if (nUpdated == 0L) Done((cur.version, 0L))
+        else if (cur.dv.map(d => spark.read.parquet(d).count())
+            .getOrElse(0L) + nUpdated > maxDvRows)
           // merge-on-read economics gone past the bound — ONE
           // dispatch to the copy-on-write [[update]] (same SET
           // semantics, same CDC pre/post recording) instead of a
           // refusal, mirroring [[deleteVectored]]'s fallback
-          return update(spark, table, predicate, set, maxRetries)
-        // post-image recompute: a SET touching a generation source
-        // propagates into the generated column (Delta's rule)
-        val applied = recomputeGenerated(
-          matches.select(schema.fieldNames.toSeq.map { f =>
-            set.get(f) match {
-              case Some(e) => e.cast(schema(f).dataType).as(f)
-              case None => col(f)
-            }
-          }: _*), logical)
-        val preImage = matches
-          .select(schema.fieldNames.toSeq.map(col): _*)
-        val changeDir = s"$table/_changes/${java.util.UUID.randomUUID()}"
-        preImage.withColumn("_change_type", lit("update_preimage"))
-          .unionByName(applied
-            .withColumn("_change_type", lit("update_postimage")))
-          .transform(changePhysical(cur))
-        .write.mode(SaveMode.ErrorIfExists).parquet(changeDir)
-        val newSeg = writeSegment(spark, table, applied)
-        val newPairs = matches.select(
-          col("__graft_dv_file").as("_dv_file"),
-          col("__graft_dv_pos").as("_dv_pos"))
-        val dvDir = s"$table/_dv/${java.util.UUID.randomUUID()}"
-        // repartition, NOT coalesce: coalesce(1) would collapse the
-        // upstream predicate scan into one task; the shuffle moves
-        // only the matched positions (bounded by maxDvRows)
-        cur.dv.map(d => spark.read.parquet(d).unionByName(newPairs))
-          .getOrElse(newPairs)
-          .repartition(1)
-          .write.mode(SaveMode.ErrorIfExists).parquet(dvDir)
-        val snap = Snapshot(cur.version + 1L, cur.segments :+ newSeg,
-          cur.version, "update_dv", changes = Some(changeDir),
-          schema = cur.schema, dv = Some(dvDir))
-        if (tryPublish(spark, table, snap, Some(cur)))
-          return (snap.version, nUpdated)
-        Seq(newSeg, changeDir, dvDir).foreach(p => fs(spark, table)
-          .delete(new org.apache.hadoop.fs.Path(p), true): Unit)
-      } finally matches.unpersist()
-      attempt += 1
+          Done(update(spark, table, predicate, set))
+        else {
+          // post-image recompute: a SET touching a generation source
+          // propagates into the generated column (Delta's rule)
+          val applied = recomputeGenerated(
+            matches.select(schema.fieldNames.toSeq.map { f =>
+              set.get(f) match {
+                case Some(e) => e.cast(schema(f).dataType).as(f)
+                case None => col(f)
+              }
+            }: _*), logical)
+          val preImage = matches
+            .select(schema.fieldNames.toSeq.map(col): _*)
+          val changeDir =
+            tx.stage(s"$table/_changes/${java.util.UUID.randomUUID()}")
+          preImage.withColumn("_change_type", lit("update_preimage"))
+            .unionByName(applied
+              .withColumn("_change_type", lit("update_postimage")))
+            .transform(changePhysical(cur))
+          .write.mode(SaveMode.ErrorIfExists).parquet(changeDir)
+          val newSeg = tx.stage(writeSegment(spark, table, applied))
+          val newPairs = matches.select(
+            col("__graft_dv_file").as("_dv_file"),
+            col("__graft_dv_pos").as("_dv_pos"))
+          val dvDir = tx.stage(s"$table/_dv/${java.util.UUID.randomUUID()}")
+          // repartition, NOT coalesce: coalesce(1) would collapse the
+          // upstream predicate scan into one task; the shuffle moves
+          // only the matched positions (bounded by maxDvRows)
+          cur.dv.map(d => spark.read.parquet(d).unionByName(newPairs))
+            .getOrElse(newPairs)
+            .repartition(1)
+            .write.mode(SaveMode.ErrorIfExists).parquet(dvDir)
+          Publish(Snapshot(cur.version + 1L, cur.segments :+ newSeg,
+            cur.version, "update_dv", changes = Some(changeDir),
+            schema = cur.schema, dv = Some(dvDir)),
+            (cur.version + 1L, nUpdated))
+        }
+      }
     }
-    throw new java.io.IOException(
-      s"CommitLog.updateVectored: lost the version race $maxRetries " +
-        s"times at $table")
   }
 
   /** Copy-on-write UPDATE: for rows matching `predicate`, replace each
@@ -3144,14 +3068,10 @@ object CommitLog {
     * as [[delete]]; unknown `set` columns fail fast naming the column. */
   def update(spark: SparkSession, table: String,
       predicate: org.apache.spark.sql.Column,
-      set: Map[String, org.apache.spark.sql.Column],
-      maxRetries: Int = 20): (Long, Long) = {
+      set: Map[String, org.apache.spark.sql.Column]): (Long, Long) = {
     require(set.nonEmpty, "CommitLog.update: empty SET clause")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLog.update: nothing committed at $table"))
+    transact(spark, table, "CommitLog.update") { tx =>
+      val cur = tx.existing
       val schema = readSegments(spark, cur.segments, cur.schema).schema
       val unknown = set.keySet -- schema.fieldNames.toSet
       require(unknown.isEmpty,
@@ -3162,72 +3082,63 @@ object CommitLog {
       refuseGeneratedSet("update", set.keys, logical)
       val matched = coalesce(predicate, lit(false))
       val touched = touchedSegments(spark, cur, matched)
-      if (touched.isEmpty) return (cur.version, 0L)
-      // projected-boolean evaluation — same planning rationale as
-      // [[delete]]: a subquery predicate in filter position under NOT
-      // would plan a nested-loop anti join; as a projected column it
-      // plans a hash ExistenceJoin and every branch filters the flag
-      // PIN the flagged rewrite frame when it is expensive to
-      // recompute (subquery predicates / SET values re-run their
-      // joins per branch; plain ones re-scan cheaper than they
-      // cache — measured, q163): the CDC write (pre+post image), the
-      // rewrite and the bucketed staging all filter it. Bounded by
-      // the copy-on-write working set; released on every exit path.
-      val touchedDf0 = readLive(spark, cur, Some(touched))
-        .withColumn("__graft_matched", matched)
-      val touchedDf =
-        if (expensiveToRecompute(touchedDf0)) touchedDf0.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else touchedDf0
-      try {
-      // generated columns recompute over the POST-image so a SET
-      // touching a generation source propagates (Delta's rule); the
-      // recompute is the identity on unmatched rows
-      def applied(onlyMatched: Boolean): DataFrame = {
-        val base =
-          if (onlyMatched) touchedDf.filter(col("__graft_matched"))
-          else touchedDf
-        recomputeGenerated(base.select(schema.fieldNames.toSeq.map { f =>
-          set.get(f) match {
-            case Some(e) if onlyMatched =>
-              e.cast(schema(f).dataType).as(f)
-            case Some(e) =>
-              when(col("__graft_matched"), e.cast(schema(f).dataType))
-                .otherwise(col(f)).as(f)
-            case None => col(f)
-          }
-        }: _*), logical)
+      if (touched.isEmpty) Done((cur.version, 0L)) else {
+        // projected-boolean evaluation — same planning rationale as
+        // [[delete]]: a subquery predicate in filter position under NOT
+        // would plan a nested-loop anti join; as a projected column it
+        // plans a hash ExistenceJoin and every branch filters the flag
+        // PIN the flagged rewrite frame when it is expensive to
+        // recompute (subquery predicates / SET values re-run their
+        // joins per branch; plain ones re-scan cheaper than they
+        // cache — measured, q163): the CDC write (pre+post image), the
+        // rewrite and the bucketed staging all filter it. Bounded by
+        // the copy-on-write working set; released on every exit path.
+        val touchedDf0 = readLive(spark, cur, Some(touched))
+          .withColumn("__graft_matched", matched)
+        val touchedDf =
+          if (expensiveToRecompute(touchedDf0)) tx.pin(touchedDf0)
+          else touchedDf0
+        // generated columns recompute over the POST-image so a SET
+        // touching a generation source propagates (Delta's rule); the
+        // recompute is the identity on unmatched rows
+        def applied(onlyMatched: Boolean): DataFrame = {
+          val base =
+            if (onlyMatched) touchedDf.filter(col("__graft_matched"))
+            else touchedDf
+          recomputeGenerated(base.select(schema.fieldNames.toSeq.map { f =>
+            set.get(f) match {
+              case Some(e) if onlyMatched =>
+                e.cast(schema(f).dataType).as(f)
+              case Some(e) =>
+                when(col("__graft_matched"), e.cast(schema(f).dataType))
+                  .otherwise(col(f)).as(f)
+              case None => col(f)
+            }
+          }: _*), logical)
+        }
+        val changeDir =
+          tx.stage(s"$table/_changes/${java.util.UUID.randomUUID()}")
+        val nUpdated = writeChanges(spark, changeDir,
+          touchedDf.filter(col("__graft_matched"))
+            .drop("__graft_matched")
+            .withColumn("_change_type", lit("update_preimage"))
+            .unionByName(applied(onlyMatched = true)
+              .withColumn("_change_type", lit("update_postimage")))
+            .transform(changePhysical(cur)))("update_preimage")
+        // a bucketed layout (SPJ spec) survives: post-image rows
+        // re-land bucket-split (SET on a bucket KEY still re-hashes
+        // correctly — purity per segment is the invariant)
+        val bucketStaged = CommitLogStats.stageDmlBucketed(spark, table,
+          cur, touched.toSet, applied(onlyMatched = false))
+        val newSegs = tx.stage(bucketStaged.map(_._1).getOrElse(
+          Seq(writeSegment(spark, table, applied(onlyMatched = false)))))
+        Publish(Snapshot(cur.version + 1L,
+          cur.segments.filterNot(touched.toSet) ++ newSegs,
+          cur.version, "update", changes = Some(changeDir),
+          schema = cur.schema, dv = cur.dv,
+          bucket = bucketStaged.map(_._2)), (cur.version + 1L, nUpdated))
       }
-      val changeDir = s"$table/_changes/${java.util.UUID.randomUUID()}"
-      val nUpdated = writeChanges(spark, changeDir,
-        touchedDf.filter(col("__graft_matched"))
-          .drop("__graft_matched")
-          .withColumn("_change_type", lit("update_preimage"))
-          .unionByName(applied(onlyMatched = true)
-            .withColumn("_change_type", lit("update_postimage")))
-          .transform(changePhysical(cur)))("update_preimage")
-      // a bucketed layout (SPJ spec) survives: post-image rows
-      // re-land bucket-split (SET on a bucket KEY still re-hashes
-      // correctly — purity per segment is the invariant)
-      val bucketStaged = CommitLogStats.stageDmlBucketed(spark, table,
-        cur, touched.toSet, applied(onlyMatched = false))
-      val newSegs = bucketStaged.map(_._1).getOrElse(
-        Seq(writeSegment(spark, table, applied(onlyMatched = false))))
-      val snap = Snapshot(cur.version + 1L,
-        cur.segments.filterNot(touched.toSet) ++ newSegs,
-        cur.version, "update", changes = Some(changeDir),
-        schema = cur.schema, dv = cur.dv,
-        bucket = bucketStaged.map(_._2))
-      if (tryPublish(spark, table, snap, Some(cur))) return (snap.version, nUpdated)
-      newSegs.foreach(s => fs(spark, table).delete(
-        new org.apache.hadoop.fs.Path(s), true): Unit)
-      fs(spark, table).delete(
-        new org.apache.hadoop.fs.Path(changeDir), true): Unit
-      attempt += 1
-      } finally touchedDf.unpersist(): Unit
     }
-    throw new java.io.IOException(
-      s"CommitLog.update: lost the version race $maxRetries times at $table")
   }
 
   /** APPEND guarded by CHECK constraints (Delta's table constraints,
@@ -3240,8 +3151,7 @@ object CommitLog {
     * not proof). Returns the committed version; raises with the first
     * violating constraint's name and its violation count. */
   def appendChecked(spark: SparkSession, table: String, df: DataFrame,
-      constraints: Map[String, org.apache.spark.sql.Column],
-      maxRetries: Int = 20): Long = {
+      constraints: Map[String, org.apache.spark.sql.Column]): Long = {
     require(constraints.nonEmpty, "appendChecked: no constraints — " +
       "use append")
     val seg = writeSegment(spark, table, df)
@@ -3260,19 +3170,14 @@ object CommitLog {
             s"$bad row(s) — nothing committed")
       }
     }
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = snapshot(spark, table)
+    transact(spark, table, "CommitLog.appendChecked",
+        staged = Seq(seg)) { tx =>
+      val cur = tx.cur
       val v = cur.fold(1L)(_.version + 1L)
-      val snap = Snapshot(v, cur.fold(Seq.empty[String])(_.segments) :+ seg,
+      Publish(Snapshot(v, cur.fold(Seq.empty[String])(_.segments) :+ seg,
         cur.fold(0L)(_.version), "append",
-        schema = cur.flatMap(_.schema), dv = cur.flatMap(_.dv))
-      if (tryPublish(spark, table, snap, cur)) return v
-      attempt += 1
+        schema = cur.flatMap(_.schema), dv = cur.flatMap(_.dv)), v)
     }
-    throw new java.io.IOException(
-      s"CommitLog.appendChecked: lost the version race $maxRetries " +
-        s"times at $table")
   }
 
   /** SHALLOW CLONE (Delta/Iceberg snapshot sharing): a NEW table whose
@@ -3401,13 +3306,9 @@ object CommitLog {
     * refuse (their omission semantics are allocation/computation,
     * not a default). */
   def setColumnDefault(spark: SparkSession, table: String,
-      column: String, default: Option[String],
-      maxRetries: Int = 20): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLog.setColumnDefault: nothing committed at $table"))
+      column: String, default: Option[String]): Long =
+    transact(spark, table, "CommitLog.setColumnDefault") { tx =>
+      val cur = tx.existing
       val base = cur.schema.map(decodeSchema).getOrElse(
         throw new IllegalStateException(
           s"CommitLog.setColumnDefault: $table has no recorded " +
@@ -3448,17 +3349,11 @@ object CommitLog {
           if (x.name.equalsIgnoreCase(column))
             x.copy(metadata = mb.build())
           else x))
-      val snap = Snapshot(cur.version + 1L, cur.segments,
+      Publish(Snapshot(cur.version + 1L, cur.segments,
         cur.version, "set_default",
-        schema = Some(encodeSchema(updated)), dv = cur.dv)
-      if (tryPublish(spark, table, snap, Some(cur)))
-        return snap.version
-      attempt += 1
+        schema = Some(encodeSchema(updated)), dv = cur.dv),
+        cur.version + 1L)
     }
-    throw new java.io.IOException(
-      s"CommitLog.setColumnDefault: lost the version race " +
-        s"$maxRetries times at $table")
-  }
 
   /** RESTORE (Delta RESTORE TABLE ... TO VERSION): roll the table
     * back to `toVersion`'s content as a NEW commit referencing that
@@ -3467,8 +3362,8 @@ object CommitLog {
     * manifest create under the usual OCC. The restored version's
     * schema rides along (restoring across an evolution restores the
     * old column set). Raises when `toVersion` is vacuumed. */
-  def restore(spark: SparkSession, table: String, toVersion: Long,
-      maxRetries: Int = 20): Long = {
+  def restore(spark: SparkSession, table: String,
+      toVersion: Long): Long = {
     val target = snapshot(spark, table, Some(toVersion)).getOrElse(
       throw new IllegalStateException(
         s"CommitLog.restore: version $toVersion of $table is vacuumed " +
@@ -3506,44 +3401,37 @@ object CommitLog {
         }
       }
     }
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLog.restore: nothing committed at $table"))
-      if (cur.version == toVersion) return cur.version
-      // the target's own constraint set rides the restore commit
-      // (explicit-empty when the target predates constraints), so
-      // time travel governs rules exactly as it governs data; on a
-      // pure-legacy table the field stays absent and the side file
-      // keeps governing (the guard above already vetted it)
-      val restoredCons: Option[String] =
-        if (cur.constraints.isDefined)
-          Some(target.constraints.getOrElse(
-            encodeConstraints(Map.empty)))
-        else None
-      // the partition spec time-travels exactly like constraints:
-      // a restore ACROSS a replace that changed the spec must serve
-      // the target's own value, or the rolled-back layout (segments
-      // partitioned the old way) would sit under the NEW spec —
-      // later partitioned inserts would then mix layouts, or refuse
-      // on a column the restored schema lacks. Same legacy guard:
-      // when the ancestry never recorded the field, stay absent so
-      // the `_partition.json` marker era keeps governing.
-      val restoredPb: Option[String] =
-        if (cur.partitionBy.isDefined)
-          Some(target.partitionBy.getOrElse(""))
-        else None
-      val snap = Snapshot(cur.version + 1L, target.segments,
-        cur.version, "restore", schema = target.schema,
-        dv = target.dv, constraints = restoredCons,
-        partitionBy = restoredPb)
-      if (tryPublish(spark, table, snap)) return snap.version
-      attempt += 1
+    transact(spark, table, "CommitLog.restore") { tx =>
+      val cur = tx.existing
+      if (cur.version == toVersion) Done(cur.version) else {
+        // the target's own constraint set rides the restore commit
+        // (explicit-empty when the target predates constraints), so
+        // time travel governs rules exactly as it governs data; on a
+        // pure-legacy table the field stays absent and the side file
+        // keeps governing (the guard above already vetted it)
+        val restoredCons: Option[String] =
+          if (cur.constraints.isDefined)
+            Some(target.constraints.getOrElse(
+              encodeConstraints(Map.empty)))
+          else None
+        // the partition spec time-travels exactly like constraints:
+        // a restore ACROSS a replace that changed the spec must serve
+        // the target's own value, or the rolled-back layout (segments
+        // partitioned the old way) would sit under the NEW spec —
+        // later partitioned inserts would then mix layouts, or refuse
+        // on a column the restored schema lacks. Same legacy guard:
+        // when the ancestry never recorded the field, stay absent so
+        // the `_partition.json` marker era keeps governing.
+        val restoredPb: Option[String] =
+          if (cur.partitionBy.isDefined)
+            Some(target.partitionBy.getOrElse(""))
+          else None
+        Publish(Snapshot(cur.version + 1L, target.segments,
+          cur.version, "restore", schema = target.schema,
+          dv = target.dv, constraints = restoredCons,
+          partitionBy = restoredPb), cur.version + 1L)
+      }
     }
-    throw new java.io.IOException(
-      s"CommitLog.restore: lost the version race $maxRetries times " +
-        s"at $table")
   }
 
   /** Reference a SOURCE column inside [[mergeInto]]'s matched-clause
@@ -3631,8 +3519,7 @@ object CommitLog {
       whenNotMatchedBySourceUpdateCondition:
         Option[org.apache.spark.sql.Column] = None,
       whenNotMatchedBySourceDelete: Option[org.apache.spark.sql.Column] =
-        None,
-      maxRetries: Int = 20): (Long, Long, Long, Long) = {
+        None): (Long, Long, Long, Long) = {
     // the single-UPDATE/single-DELETE surface in clause-list form,
     // DELETE tested first (this method's documented order)
     def side(del: Option[org.apache.spark.sql.Column],
@@ -3647,8 +3534,7 @@ object CommitLog {
       notMatchedInsertCondition = whenNotMatchedInsertCondition,
       notMatchedBySource = side(whenNotMatchedBySourceDelete,
         whenNotMatchedBySourceUpdate,
-        whenNotMatchedBySourceUpdateCondition),
-      maxRetries = maxRetries)
+        whenNotMatchedBySourceUpdateCondition))
   }
 
   /** The N-CLAUSE MERGE executor behind [[mergeInto]] (Delta's full
@@ -3668,8 +3554,7 @@ object CommitLog {
       notMatchedInsertCondition: Option[org.apache.spark.sql.Column] =
         None,
       notMatchedBySource: Seq[MergeClause] = Nil,
-      txn: Option[(String, Long)] = None,
-      maxRetries: Int = 20): (Long, Long, Long, Long) = {
+      txn: Option[(String, Long)] = None): (Long, Long, Long, Long) = {
     require(keys.nonEmpty, "CommitLog.mergeInto: empty key list")
     // (appId, batchId) stamp → exactly-once under streaming crash
     // replay, the same [[lastTxn]] watermark contract as [[appendTxn]]
@@ -3706,347 +3591,325 @@ object CommitLog {
         keys.zipWithIndex.map { case (k, i) => s"$k=${dup(0).get(i)}" }
           .mkString(", ") + ") — a matched row's outcome would be " +
         "nondeterministic; deduplicate the source first")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      // frames persisted inside this attempt (identity allocation
-      // pins its insert candidates); released before the next attempt
-      // or return — a lost OCC race reallocates against fresh marks
-      val pins = scala.collection.mutable.ArrayBuffer
-        .empty[DataFrame]
-      try {
-      val cur = snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLog.mergeInto: nothing committed at $table"))
+    // frames pinned inside an attempt (the rewrite frame; identity
+    // allocation pins its insert candidates) are released before the
+    // next attempt — a lost OCC race reallocates against fresh marks
+    transact(spark, table, "CommitLog.mergeInto") { tx =>
+      val cur = tx.existing
       // a concurrent replica of the same streaming query may have won
       // the race with this very batch between attempts — re-check the
       // watermark on the fresh snapshot (nothing is staged yet this
       // attempt; a lost previous attempt already cleaned up)
-      txn.foreach { case (a, b) =>
-        if (cur.txnApp.contains(a) && cur.txnBatch.exists(_ >= b))
-          return (cur.version, 0L, 0L, 0L)
-        if (attempt > 0 && lastTxn(spark, table, a).exists(_ >= b))
-          return (cur.version, 0L, 0L, 0L)
-      }
-      val schema = readSegments(spark, cur.segments, cur.schema).schema
-      val unknownKeys = keys.toSet -- schema.fieldNames.toSet
-      require(unknownKeys.isEmpty,
-        s"CommitLog.mergeInto: key(s) ${unknownKeys.mkString(", ")} " +
-          s"absent from table schema ${schema.fieldNames.mkString(", ")}")
-      val allSets = updateSets(matched) ++ updateSets(notMatchedBySource)
-      val unknownSet = allSets.flatMap(_.keySet).toSet --
-        schema.fieldNames.toSet
-      require(unknownSet.isEmpty,
-        s"CommitLog.mergeInto: SET names unknown column(s) " +
-          unknownSet.mkString(", "))
-      val logical = cur.schema.map(decodeSchema)
-      refuseGeneratedSet("mergeInto", allSets.flatMap(_.keys), logical)
-      val nonKeySrc = source.columns.filterNot(keys.contains).toSeq
-      val srcRenamed = source.select(keys.map(col) ++
-        nonKeySrc.map(c => col(c).as(s"__src_$c")) :+
-        lit(true).as("__src_matched"): _*)
-      // touched segments: files holding at least one matched key
-      // (DV-applied: a vector-deleted row cannot match or re-insert;
-      // file identity from the `_metadata` tag — input_file_name()
-      // refuses multi-source plans once the DV relation joins in)
-      val all = readLive(spark, cur)
-      val tagged = {
-        val wp = withDvPos(readSegments(spark, cur.segments,
-          cur.schema))
-        cur.dv.fold(wp)(subtractDv(spark, wp, _))
-      }
-      /** OR over a side's clause conditions (could ANY clause fire on
-        * this row?) — the file-probe predicate. */
-      def anyClauseHit(cs: Seq[MergeClause]): org.apache.spark.sql.Column =
-        cs.map {
-          case MergeUpdate(_, c) => coalesce(c.getOrElse(lit(true)),
-            lit(false))
-          case MergeDelete(c) => coalesce(c.getOrElse(lit(true)),
-            lit(false))
-        }.reduceOption(_ || _).getOrElse(lit(false))
-      // only probe for matched files when a matched clause can FIRE —
-      // an insert-only (or by-source-only) merge must not rewrite the
-      // segments its matched keys merely sit in. When BOTH probes are
-      // needed, ONE scan + key join serves them (guide §2.4: one
-      // exchange serves two operations keyed the same way): per file,
-      // "any live row matched" and "any unmatched row satisfies a
-      // BY-SOURCE clause condition" fold in the same aggregation —
-      // previously two separate full-scan+join jobs.
-      val (matchedFiles, nmbsFiles) =
-        if (matched.nonEmpty && nmbsActive) {
-          val probed = tagged
-            .join(srcRenamed.select(keys.map(col): _*)
-              .withColumn("__probe_m", lit(true)), keys, "left_outer")
-            .select(col("__graft_dv_file").as("__file"),
-              coalesce(col("__probe_m"), lit(false)).as("__m"),
-              anyClauseHit(notMatchedBySource).as("__h"))
-            .groupBy(col("__file"))
-            .agg(max(when(col("__m"), 1).otherwise(0)).as("__am"),
-              max(when(!col("__m") && coalesce(col("__h"),
-                lit(false)), 1).otherwise(0)).as("__ah"))
-            .filter(col("__am") === 1 || col("__ah") === 1)
-            .collect()
-          (probed.filter(_.getInt(1) == 1).map(_.getString(0)),
-            probed.filter(_.getInt(2) == 1).map(_.getString(0)))
-        } else {
-          val mf =
-            if (matched.isEmpty) Array.empty[String]
-            else tagged
-              .select((keys.map(col) :+
-                col("__graft_dv_file").as("__file")): _*)
-              .join(srcRenamed.select(keys.map(col): _*), keys,
-                "left_semi")
-              .select("__file").distinct().collect()
-              .map(_.getString(0))
-          // NOT-MATCHED-BY-SOURCE widens the rewrite to files holding
-          // at least one unmatched row that satisfies a BY-SOURCE
-          // clause condition (target-column predicates — pushable to
-          // the scan); files whose unmatched rows all fail every
-          // condition are never opened for rewrite
-          val nf =
-            if (!nmbsActive) Array.empty[String]
-            else tagged
-              .join(srcRenamed.select(keys.map(col): _*), keys,
-                "left_anti")
-              .filter(anyClauseHit(notMatchedBySource))
-              .select(col("__graft_dv_file").as("__file"))
-              .distinct().collect().map(_.getString(0))
-          (mf, nf)
+      if (txn.exists { case (a, b) =>
+          (cur.txnApp.contains(a) && cur.txnBatch.exists(_ >= b)) ||
+            (tx.attempt > 0 && lastTxn(spark, table, a).exists(_ >= b)) })
+        Done((cur.version, 0L, 0L, 0L))
+      else {
+        val schema = readSegments(spark, cur.segments, cur.schema).schema
+        val unknownKeys = keys.toSet -- schema.fieldNames.toSet
+        require(unknownKeys.isEmpty,
+          s"CommitLog.mergeInto: key(s) ${unknownKeys.mkString(", ")} " +
+            s"absent from table schema ${schema.fieldNames.mkString(", ")}")
+        val allSets = updateSets(matched) ++ updateSets(notMatchedBySource)
+        val unknownSet = allSets.flatMap(_.keySet).toSet --
+          schema.fieldNames.toSet
+        require(unknownSet.isEmpty,
+          s"CommitLog.mergeInto: SET names unknown column(s) " +
+            unknownSet.mkString(", "))
+        val logical = cur.schema.map(decodeSchema)
+        refuseGeneratedSet("mergeInto", allSets.flatMap(_.keys), logical)
+        val nonKeySrc = source.columns.filterNot(keys.contains).toSeq
+        val srcRenamed = source.select(keys.map(col) ++
+          nonKeySrc.map(c => col(c).as(s"__src_$c")) :+
+          lit(true).as("__src_matched"): _*)
+        // touched segments: files holding at least one matched key
+        // (DV-applied: a vector-deleted row cannot match or re-insert;
+        // file identity from the `_metadata` tag — input_file_name()
+        // refuses multi-source plans once the DV relation joins in)
+        val all = readLive(spark, cur)
+        val tagged = {
+          val wp = withDvPos(readSegments(spark, cur.segments,
+            cur.schema))
+          cur.dv.fold(wp)(subtractDv(spark, wp, _))
         }
-      val touchedFiles = (matchedFiles ++ nmbsFiles).distinct
-      val touched = cur.segments.filter { seg =>
-        val uuid = seg.substring(seg.lastIndexOf('/') + 1)
-        touchedFiles.exists(_.contains(uuid))
-      }
-      // empty touched list: an insert-only merge — keep a same-schema
-      // empty frame (an empty parquet path list cannot infer one);
-      // the join still runs so src() references stay resolvable
-      val touchedDf =
-        if (touched.isEmpty) all.filter(lit(false))
-        else readLive(spark, cur, Some(touched))
-      // PIN the rewrite frame (guide §5: cache only what is reused
-      // and expensive): every CDC branch (deletes, each update
-      // clause's pre+post image) and the rewrite (survivors, each
-      // clause's post image) filters this same join — unpinned, each
-      // branch re-scans the touched segments and re-runs the join
-      // (and for SQL merges re-runs the source's own joins), 3+2·u
-      // recomputations for u update clauses. Bounded by the
-      // copy-on-write working set; released per attempt via `pins`.
-      val joined = {
-        val j = touchedDf.join(srcRenamed, keys, "left_outer")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        pins += j
-        j
-      }
-      // plan-audit hook (guide §7.2): dump the rewrite frame's
-      // physical plan — join strategy, exchanges, pushed filters —
-      // without touching the UI. Off unless explicitly enabled.
-      if (spark.conf.getOption("spark.graft.debug.explainRewrite")
-          .contains("true"))
-        System.err.println(s"[mergeInto rewrite plan] $table\n" +
-          joined.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode
-              .fromString("formatted")))
-      val isMatched = coalesce(col("__src_matched"), lit(false))
-      /** Index of the FIRST satisfied clause on a side (-1 = none):
-        * first-match-wins materialized as one nested CASE. */
-      def fireIndex(active: org.apache.spark.sql.Column,
-          cs: Seq[MergeClause]): org.apache.spark.sql.Column =
-        cs.zipWithIndex.foldRight(lit(-1): org.apache.spark.sql.Column) {
-          case ((cl, i), rest) =>
-            val c = cl match {
-              case MergeUpdate(_, cond) => cond.getOrElse(lit(true))
-              case MergeDelete(cond) => cond.getOrElse(lit(true))
-            }
-            when(active && coalesce(c, lit(false)), lit(i))
-              .otherwise(rest)
-        }
-      val mFire = fireIndex(isMatched, matched)
-      val nFire = if (nmbsActive) fireIndex(!isMatched, notMatchedBySource)
-        else lit(-1)
-      def deleteIdx(cs: Seq[MergeClause]): Seq[Int] =
-        cs.zipWithIndex.collect { case (MergeDelete(_), i) => i }
-      def isIn(c: org.apache.spark.sql.Column, is: Seq[Int]) =
-        if (is.isEmpty) lit(false) else c.isin(is.map(Int.box): _*)
-      val delCond = isIn(mFire, deleteIdx(matched))
-      val nmbsDelCond = isIn(nFire, deleteIdx(notMatchedBySource))
-      // (clauseIndex, SET map) per update clause, each its own
-      // projection — different clauses write different post-images
-      def updates(cs: Seq[MergeClause]): Seq[(Int, Map[String,
-          org.apache.spark.sql.Column])] =
-        cs.zipWithIndex.collect { case (MergeUpdate(set, _), i) =>
-          (i, set) }
-      val mUpdates = updates(matched)
-      val nUpdates = updates(notMatchedBySource)
-      def project(df: DataFrame,
-          set: Map[String, org.apache.spark.sql.Column]): DataFrame = {
-        val sel = df.select(schema.fieldNames.toSeq.map { f =>
-          set.get(f) match {
-            case Some(e) => e.cast(schema(f).dataType).as(f)
-            case _ => col(f)
+        /** OR over a side's clause conditions (could ANY clause fire on
+          * this row?) — the file-probe predicate. */
+        def anyClauseHit(cs: Seq[MergeClause]): org.apache.spark.sql.Column =
+          cs.map {
+            case MergeUpdate(_, c) => coalesce(c.getOrElse(lit(true)),
+              lit(false))
+            case MergeDelete(c) => coalesce(c.getOrElse(lit(true)),
+              lit(false))
+          }.reduceOption(_ || _).getOrElse(lit(false))
+        // only probe for matched files when a matched clause can FIRE —
+        // an insert-only (or by-source-only) merge must not rewrite the
+        // segments its matched keys merely sit in. When BOTH probes are
+        // needed, ONE scan + key join serves them (guide §2.4: one
+        // exchange serves two operations keyed the same way): per file,
+        // "any live row matched" and "any unmatched row satisfies a
+        // BY-SOURCE clause condition" fold in the same aggregation —
+        // previously two separate full-scan+join jobs.
+        val (matchedFiles, nmbsFiles) =
+          if (matched.nonEmpty && nmbsActive) {
+            val probed = tagged
+              .join(srcRenamed.select(keys.map(col): _*)
+                .withColumn("__probe_m", lit(true)), keys, "left_outer")
+              .select(col("__graft_dv_file").as("__file"),
+                coalesce(col("__probe_m"), lit(false)).as("__m"),
+                anyClauseHit(notMatchedBySource).as("__h"))
+              .groupBy(col("__file"))
+              .agg(max(when(col("__m"), 1).otherwise(0)).as("__am"),
+                max(when(!col("__m") && coalesce(col("__h"),
+                  lit(false)), 1).otherwise(0)).as("__ah"))
+              .filter(col("__am") === 1 || col("__ah") === 1)
+              .collect()
+            (probed.filter(_.getInt(1) == 1).map(_.getString(0)),
+              probed.filter(_.getInt(2) == 1).map(_.getString(0)))
+          } else {
+            val mf =
+              if (matched.isEmpty) Array.empty[String]
+              else tagged
+                .select((keys.map(col) :+
+                  col("__graft_dv_file").as("__file")): _*)
+                .join(srcRenamed.select(keys.map(col): _*), keys,
+                  "left_semi")
+                .select("__file").distinct().collect()
+                .map(_.getString(0))
+            // NOT-MATCHED-BY-SOURCE widens the rewrite to files holding
+            // at least one unmatched row that satisfies a BY-SOURCE
+            // clause condition (target-column predicates — pushable to
+            // the scan); files whose unmatched rows all fail every
+            // condition are never opened for rewrite
+            val nf =
+              if (!nmbsActive) Array.empty[String]
+              else tagged
+                .join(srcRenamed.select(keys.map(col): _*), keys,
+                  "left_anti")
+                .filter(anyClauseHit(notMatchedBySource))
+                .select(col("__graft_dv_file").as("__file"))
+                .distinct().collect().map(_.getString(0))
+            (mf, nf)
           }
-        }: _*)
-        // updated rows recompute generated columns over the
-        // POST-image (a SET touching a generation source propagates
-        // — Delta's rule); pass-through rows keep their gate-proven
-        // values byte-identical
-        if (set.nonEmpty) recomputeGenerated(sel, logical) else sel
-      }
-      /** (pre, post) image pairs for every update clause on both
-        * sides, each filtered to exactly the rows its clause won. */
-      def updateImages: Seq[(DataFrame, DataFrame)] =
-        mUpdates.map { case (i, set) =>
-          (project(joined.filter(mFire === i), Map.empty),
-            project(joined.filter(mFire === i), set))
-        } ++ nUpdates.map { case (i, set) =>
-          (project(joined.filter(nFire === i), Map.empty),
-            project(joined.filter(nFire === i), set))
+        val touchedFiles = (matchedFiles ++ nmbsFiles).distinct
+        val touched = cur.segments.filter { seg =>
+          val uuid = seg.substring(seg.lastIndexOf('/') + 1)
+          touchedFiles.exists(_.contains(uuid))
         }
-      // inserts check NOT-MATCHED against the WHOLE table, not just
-      // touched segments
-      val idFs = identityFields(logical)
-      var idMarks: Option[Map[String, Long]] = None
-      val inserts =
-        if (!notMatchedInsert) None
-        else {
-          // WHEN NOT MATCHED [AND cond]: the condition gates inserts
-          // only (evaluated over source columns), never the matched
-          // clauses — SQL MERGE semantics
-          val anti0 = source
-            .filter(notMatchedInsertCondition.getOrElse(lit(true)))
-            .join(all.select(keys.map(col): _*), keys, "left_anti")
-          // identity tables: MERGE inserts ALLOCATE exactly like the
-          // append path (omission/NULLs allocate; GENERATED ALWAYS
-          // refuses explicit values; BY DEFAULT passes values through
-          // and auto-SYNCs the mark past their extent) — and the
-          // committed snapshot carries the advanced high-water marks
-          // under the merge's own OCC, so a subsequent append can
-          // never re-mint an id this merge inserted
-          val anti =
-            if (idFs.isEmpty) anti0
-            else {
-              val pinned = anti0.persist(
-                org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              pins += pinned
-              val st = identityStats(pinned, idFs)
-              val (withIds, marks) = applyIdentity(pinned, idFs,
-                decodeIdentity(cur.identity), st)
-              idMarks = Some(marks)
-              withIds
+        // empty touched list: an insert-only merge — keep a same-schema
+        // empty frame (an empty parquet path list cannot infer one);
+        // the join still runs so src() references stay resolvable
+        val touchedDf =
+          if (touched.isEmpty) all.filter(lit(false))
+          else readLive(spark, cur, Some(touched))
+        // PIN the rewrite frame (guide §5: cache only what is reused
+        // and expensive): every CDC branch (deletes, each update
+        // clause's pre+post image) and the rewrite (survivors, each
+        // clause's post image) filters this same join — unpinned, each
+        // branch re-scans the touched segments and re-runs the join
+        // (and for SQL merges re-runs the source's own joins), 3+2·u
+        // recomputations for u update clauses. Bounded by the
+        // copy-on-write working set; released per attempt.
+        val joined = tx.pin(touchedDf.join(srcRenamed, keys, "left_outer"))
+        // plan-audit hook (guide §7.2): dump the rewrite frame's
+        // physical plan — join strategy, exchanges, pushed filters —
+        // without touching the UI. Off unless explicitly enabled.
+        if (spark.conf.getOption("spark.graft.debug.explainRewrite")
+            .contains("true"))
+          System.err.println(s"[mergeInto rewrite plan] $table\n" +
+            joined.queryExecution.explainString(
+              org.apache.spark.sql.execution.ExplainMode
+                .fromString("formatted")))
+        val isMatched = coalesce(col("__src_matched"), lit(false))
+        /** Index of the FIRST satisfied clause on a side (-1 = none):
+          * first-match-wins materialized as one nested CASE. */
+        def fireIndex(active: org.apache.spark.sql.Column,
+            cs: Seq[MergeClause]): org.apache.spark.sql.Column =
+          cs.zipWithIndex.foldRight(lit(-1): org.apache.spark.sql.Column) {
+            case ((cl, i), rest) =>
+              val c = cl match {
+                case MergeUpdate(_, cond) => cond.getOrElse(lit(true))
+                case MergeDelete(cond) => cond.getOrElse(lit(true))
+              }
+              when(active && coalesce(c, lit(false)), lit(i))
+                .otherwise(rest)
+          }
+        val mFire = fireIndex(isMatched, matched)
+        val nFire = if (nmbsActive) fireIndex(!isMatched, notMatchedBySource)
+          else lit(-1)
+        def deleteIdx(cs: Seq[MergeClause]): Seq[Int] =
+          cs.zipWithIndex.collect { case (MergeDelete(_), i) => i }
+        def isIn(c: org.apache.spark.sql.Column, is: Seq[Int]) =
+          if (is.isEmpty) lit(false) else c.isin(is.map(Int.box): _*)
+        val delCond = isIn(mFire, deleteIdx(matched))
+        val nmbsDelCond = isIn(nFire, deleteIdx(notMatchedBySource))
+        // (clauseIndex, SET map) per update clause, each its own
+        // projection — different clauses write different post-images
+        def updates(cs: Seq[MergeClause]): Seq[(Int, Map[String,
+            org.apache.spark.sql.Column])] =
+          cs.zipWithIndex.collect { case (MergeUpdate(set, _), i) =>
+            (i, set) }
+        val mUpdates = updates(matched)
+        val nUpdates = updates(notMatchedBySource)
+        def project(df: DataFrame,
+            set: Map[String, org.apache.spark.sql.Column]): DataFrame = {
+          val sel = df.select(schema.fieldNames.toSeq.map { f =>
+            set.get(f) match {
+              case Some(e) => e.cast(schema(f).dataType).as(f)
+              case _ => col(f)
             }
-          val projected0 = anti.select(schema.fieldNames.toSeq.map { f =>
-            if (anti.columns.contains(f))
-              col(f).cast(schema(f).dataType).as(f)
-            else lit(null).cast(schema(f).dataType).as(f)
           }: _*)
-          // a source OMITTING a generated column gets it COMPUTED
-          // (not NULL-filled — NULL would refuse at the gate); a
-          // source PROVIDING it passes through for the gate to
-          // validate, the same contract as plain INSERT
-          val omittedGens = generatedColumns(logical).map(_.name)
-            .filterNot(g => anti.columns.exists(_.equalsIgnoreCase(g)))
-            .toSet
-          val projected =
-            if (omittedGens.isEmpty) projected0
-            else recomputeGenerated(projected0, logical,
-              only = Some(omittedGens))
-          // PIN the insert frame: its anti join re-scans the WHOLE
-          // table's keys, and unpinned it would run three times (the
-          // emptiness probe here, the CDC write, the rewrite) —
-          // bounded by the source delta, released via `pins`
-          val pinned = projected.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          pins += pinned
-          if (pinned.isEmpty) None else Some(pinned)
+          // updated rows recompute generated columns over the
+          // POST-image (a SET touching a generation source propagates
+          // — Delta's rule); pass-through rows keep their gate-proven
+          // values byte-identical
+          if (set.nonEmpty) recomputeGenerated(sel, logical) else sel
         }
-      if (touched.isEmpty && inserts.isEmpty)
-        return (cur.version, 0L, 0L, 0L)
-      val changeDir = s"$table/_changes/${java.util.UUID.randomUUID()}"
-      // every clause records under the SAME CDC vocabulary (delete /
-      // update_pre+postimage) regardless of side or position — a
-      // change-feed consumer sees one uniform merge commit, exactly
-      // as Delta records it
-      val deletedRows = project(joined.filter(delCond || nmbsDelCond),
-          Map.empty)
-        .withColumn("_change_type", lit("delete"))
-      val insRows = inserts.map(_.withColumn("_change_type",
-        lit("insert"))).getOrElse(deletedRows.filter(lit(false)))
-      val changeRows = updateImages.foldLeft(
-        deletedRows.unionByName(insRows)) { case (acc, (pre, post)) =>
-          acc.unionByName(pre.withColumn("_change_type",
-              lit("update_preimage")))
-            .unionByName(post.withColumn("_change_type",
-              lit("update_postimage")))
+        /** (pre, post) image pairs for every update clause on both
+          * sides, each filtered to exactly the rows its clause won. */
+        def updateImages: Seq[(DataFrame, DataFrame)] =
+          mUpdates.map { case (i, set) =>
+            (project(joined.filter(mFire === i), Map.empty),
+              project(joined.filter(mFire === i), set))
+          } ++ nUpdates.map { case (i, set) =>
+            (project(joined.filter(nFire === i), Map.empty),
+              project(joined.filter(nFire === i), set))
+          }
+        // inserts check NOT-MATCHED against the WHOLE table, not just
+        // touched segments
+        val idFs = identityFields(logical)
+        var idMarks: Option[Map[String, Long]] = None
+        val inserts =
+          if (!notMatchedInsert) None
+          else {
+            // WHEN NOT MATCHED [AND cond]: the condition gates inserts
+            // only (evaluated over source columns), never the matched
+            // clauses — SQL MERGE semantics
+            val anti0 = source
+              .filter(notMatchedInsertCondition.getOrElse(lit(true)))
+              .join(all.select(keys.map(col): _*), keys, "left_anti")
+            // identity tables: MERGE inserts ALLOCATE exactly like the
+            // append path (omission/NULLs allocate; GENERATED ALWAYS
+            // refuses explicit values; BY DEFAULT passes values through
+            // and auto-SYNCs the mark past their extent) — and the
+            // committed snapshot carries the advanced high-water marks
+            // under the merge's own OCC, so a subsequent append can
+            // never re-mint an id this merge inserted
+            val anti =
+              if (idFs.isEmpty) anti0
+              else {
+                val pinned = tx.pin(anti0)
+                val st = identityStats(pinned, idFs)
+                val (withIds, marks) = applyIdentity(pinned, idFs,
+                  decodeIdentity(cur.identity), st)
+                idMarks = Some(marks)
+                withIds
+              }
+            val projected0 = anti.select(schema.fieldNames.toSeq.map { f =>
+              if (anti.columns.contains(f))
+                col(f).cast(schema(f).dataType).as(f)
+              else lit(null).cast(schema(f).dataType).as(f)
+            }: _*)
+            // a source OMITTING a generated column gets it COMPUTED
+            // (not NULL-filled — NULL would refuse at the gate); a
+            // source PROVIDING it passes through for the gate to
+            // validate, the same contract as plain INSERT
+            val omittedGens = generatedColumns(logical).map(_.name)
+              .filterNot(g => anti.columns.exists(_.equalsIgnoreCase(g)))
+              .toSet
+            val projected =
+              if (omittedGens.isEmpty) projected0
+              else recomputeGenerated(projected0, logical,
+                only = Some(omittedGens))
+            // PIN the insert frame: its anti join re-scans the WHOLE
+            // table's keys, and unpinned it would run three times (the
+            // emptiness probe here, the CDC write, the rewrite) —
+            // bounded by the source delta, released per attempt
+            val pinned = tx.pin(projected)
+            if (pinned.isEmpty) None else Some(pinned)
+          }
+        if (touched.isEmpty && inserts.isEmpty)
+          Done((cur.version, 0L, 0L, 0L))
+        else {
+          val changeDir =
+            tx.stage(s"$table/_changes/${java.util.UUID.randomUUID()}")
+          // every clause records under the SAME CDC vocabulary (delete /
+          // update_pre+postimage) regardless of side or position — a
+          // change-feed consumer sees one uniform merge commit, exactly
+          // as Delta records it
+          val deletedRows = project(joined.filter(delCond || nmbsDelCond),
+              Map.empty)
+            .withColumn("_change_type", lit("delete"))
+          val insRows = inserts.map(_.withColumn("_change_type",
+            lit("insert"))).getOrElse(deletedRows.filter(lit(false)))
+          val changeRows = updateImages.foldLeft(
+            deletedRows.unionByName(insRows)) { case (acc, (pre, post)) =>
+              acc.unionByName(pre.withColumn("_change_type",
+                  lit("update_preimage")))
+                .unionByName(post.withColumn("_change_type",
+                  lit("update_postimage")))
+            }
+          val byType = writeChanges(spark, changeDir,
+            changeRows.transform(changePhysical(cur)))
+          val nDel = byType.getOrElse("delete", 0L)
+          val nUpd = byType.getOrElse("update_preimage", 0L)
+          val nIns = byType.getOrElse("insert", 0L)
+          // rewritten touched rows (survivors: no clause fired →
+          // byte-identical pass-through; update clauses → post-images) +
+          // inserts → one segment
+          val untouched = project(
+            joined.filter(mFire === -1 && nFire === -1), Map.empty)
+          val survivors = updateImages.foldLeft(untouched) {
+            case (acc, (_, post)) => acc.unionByName(post)
+          }
+          val newRows = inserts.fold(survivors)(survivors.unionByName(_))
+          // a bucketed layout (SPJ spec) survives the merge: survivors,
+          // updates AND inserts re-land bucket-split
+          val bucketStaged = CommitLogStats.stageDmlBucketed(spark, table,
+            cur, touched.toSet, newRows)
+          val newSegs = tx.stage(bucketStaged.map(_._1).getOrElse {
+            if (newRows.isEmpty) Seq.empty[String]
+            else Seq(writeSegment(spark, table, newRows))
+          })
+          // BY DEFAULT identity columns touched by SET (ALWAYS refuses at
+          // refuseGeneratedSet): fold the post-image extent into the
+          // marks — the same auto-SYNC the append path gives provided
+          // values — so a later allocation cannot collide with an id an
+          // update just wrote
+          val updatedIdFs = idFs.filter(f =>
+            allSets.flatMap(_.keys).exists(_.equalsIgnoreCase(f.name)))
+          if (updatedIdFs.nonEmpty && touched.nonEmpty) {
+            val aggs = updatedIdFs.flatMap(f => Seq(
+              min(col(f.name)).cast("long").as(s"__mn_${f.name}"),
+              max(col(f.name)).cast("long").as(s"__mx_${f.name}")))
+            val postAll = updateImages.map(_._2)
+              .reduceOption(_ unionByName _)
+              .getOrElse(untouched.filter(lit(false)))
+            val r = postAll
+              .agg(aggs.head, aggs.tail: _*).collect()(0)
+            val base = idMarks.getOrElse(decodeIdentity(cur.identity))
+            idMarks = Some(updatedIdFs.foldLeft(base) { (m, f) =>
+              val step = f.metadata.getLong(IdentityStepKey)
+              val start = f.metadata.getLong(IdentityStartKey)
+              val hwm = m.getOrElse(f.name, start - step)
+              val ext = Option(r.getAs[java.lang.Long](
+                if (step > 0L) s"__mx_${f.name}" else s"__mn_${f.name}"))
+                .map(_.longValue)
+              m + (f.name -> ext.fold(hwm)(e =>
+                if (step > 0L) math.max(hwm, e) else math.min(hwm, e)))
+            })
+          }
+          Publish(Snapshot(cur.version + 1L,
+            cur.segments.filterNot(touched.toSet) ++ newSegs,
+            cur.version, "merge_into", changes = Some(changeDir),
+            txnApp = txn.map(_._1), txnBatch = txn.map(_._2),
+            schema = cur.schema, dv = cur.dv,
+            identity = idMarks.map(m => encodeConstraints(
+              m.map { case (k, x) => k -> x.toString })),
+            bucket = bucketStaged.map(_._2)),
+            (cur.version + 1L, nUpd, nDel, nIns))
         }
-      val byType = writeChanges(spark, changeDir,
-        changeRows.transform(changePhysical(cur)))
-      val nDel = byType.getOrElse("delete", 0L)
-      val nUpd = byType.getOrElse("update_preimage", 0L)
-      val nIns = byType.getOrElse("insert", 0L)
-      // rewritten touched rows (survivors: no clause fired →
-      // byte-identical pass-through; update clauses → post-images) +
-      // inserts → one segment
-      val untouched = project(
-        joined.filter(mFire === -1 && nFire === -1), Map.empty)
-      val survivors = updateImages.foldLeft(untouched) {
-        case (acc, (_, post)) => acc.unionByName(post)
       }
-      val newRows = inserts.fold(survivors)(survivors.unionByName(_))
-      // a bucketed layout (SPJ spec) survives the merge: survivors,
-      // updates AND inserts re-land bucket-split
-      val bucketStaged = CommitLogStats.stageDmlBucketed(spark, table,
-        cur, touched.toSet, newRows)
-      val newSegs = bucketStaged.map(_._1).getOrElse {
-        if (newRows.isEmpty) Seq.empty[String]
-        else Seq(writeSegment(spark, table, newRows))
-      }
-      // BY DEFAULT identity columns touched by SET (ALWAYS refuses at
-      // refuseGeneratedSet): fold the post-image extent into the
-      // marks — the same auto-SYNC the append path gives provided
-      // values — so a later allocation cannot collide with an id an
-      // update just wrote
-      val updatedIdFs = idFs.filter(f =>
-        allSets.flatMap(_.keys).exists(_.equalsIgnoreCase(f.name)))
-      if (updatedIdFs.nonEmpty && touched.nonEmpty) {
-        val aggs = updatedIdFs.flatMap(f => Seq(
-          min(col(f.name)).cast("long").as(s"__mn_${f.name}"),
-          max(col(f.name)).cast("long").as(s"__mx_${f.name}")))
-        val postAll = updateImages.map(_._2)
-          .reduceOption(_ unionByName _)
-          .getOrElse(untouched.filter(lit(false)))
-        val r = postAll
-          .agg(aggs.head, aggs.tail: _*).collect()(0)
-        val base = idMarks.getOrElse(decodeIdentity(cur.identity))
-        idMarks = Some(updatedIdFs.foldLeft(base) { (m, f) =>
-          val step = f.metadata.getLong(IdentityStepKey)
-          val start = f.metadata.getLong(IdentityStartKey)
-          val hwm = m.getOrElse(f.name, start - step)
-          val ext = Option(r.getAs[java.lang.Long](
-            if (step > 0L) s"__mx_${f.name}" else s"__mn_${f.name}"))
-            .map(_.longValue)
-          m + (f.name -> ext.fold(hwm)(e =>
-            if (step > 0L) math.max(hwm, e) else math.min(hwm, e)))
-        })
-      }
-      val snap = Snapshot(cur.version + 1L,
-        cur.segments.filterNot(touched.toSet) ++ newSegs,
-        cur.version, "merge_into", changes = Some(changeDir),
-        txnApp = txn.map(_._1), txnBatch = txn.map(_._2),
-        schema = cur.schema, dv = cur.dv,
-        identity = idMarks.map(m => encodeConstraints(
-          m.map { case (k, x) => k -> x.toString })),
-        bucket = bucketStaged.map(_._2))
-      if (tryPublish(spark, table, snap, Some(cur)))
-        return (snap.version, nUpd, nDel, nIns)
-      newSegs.foreach(s => fs(spark, table).delete(
-        new org.apache.hadoop.fs.Path(s), true): Unit)
-      fs(spark, table).delete(
-        new org.apache.hadoop.fs.Path(changeDir), true): Unit
-      attempt += 1
-      } finally pins.foreach(_.unpersist(): Unit)
     }
-    throw new java.io.IOException(
-      s"CommitLog.mergeInto: lost the version race $maxRetries times " +
-        s"at $table")
     } finally {
       if (srcPin) source.unpersist(): Unit
     }
@@ -4207,13 +4070,10 @@ object CommitLog {
     * old segments (immutable); a concurrent append/merge beats the
     * compaction harmlessly — the retry recompacts the new state. */
   def compact(spark: SparkSession, table: String,
-      targetRowsPerFile: Long, maxRetries: Int = 20): Long = {
+      targetRowsPerFile: Long): Long = {
     require(targetRowsPerFile > 0, "targetRowsPerFile must be > 0")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLog.compact: nothing committed at $table"))
+    transact(spark, table, "CommitLog.compact") { tx =>
+      val cur = tx.existing
       // DV-applied: compaction MATERIALIZES a deletion vector — the
       // rewritten segment holds live rows only and the new version
       // carries no dv field
@@ -4221,15 +4081,10 @@ object CommitLog {
       val n = df.count()
       val files = math.max(1L,
         (n + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-      val seg = writeSegment(spark, table, df.repartition(files))
-      val snap = Snapshot(cur.version + 1L, Seq(seg), cur.version,
-        "compact", schema = cur.schema)
-      if (tryPublish(spark, table, snap, Some(cur))) return snap.version
-      fs(spark, table).delete(new org.apache.hadoop.fs.Path(seg), true)
-      attempt += 1
+      val seg = tx.stage(writeSegment(spark, table, df.repartition(files)))
+      Publish(Snapshot(cur.version + 1L, Seq(seg), cur.version,
+        "compact", schema = cur.schema), cur.version + 1L)
     }
-    throw new java.io.IOException(
-      s"CommitLog.compact: lost the version race $maxRetries times at $table")
   }
 
   /** Incremental change feed over the APPEND history: one

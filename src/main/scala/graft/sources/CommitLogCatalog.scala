@@ -791,38 +791,26 @@ private[sources] class StagedCommitLogTable(spark: SparkSession,
     val segs = staged.iterator().asScala.toSeq
     val schemaB64 = CommitLog.encodeSchema(declaredSchema)
     val pb = Some(partitionCols.mkString(","))
-    var attempt = 0
-    while (attempt < 20) {
-      CommitLog.snapshot(spark, path) match {
+    // a refusal or giving up drops the staged segments; a CREATE that
+    // loses v1 to a concurrent creator fails loudly on its retry, a
+    // CREATE OR REPLACE retries as a replace of the winner
+    val replaced = CommitLog.transact(spark, path, "commitlog CTAS/RTAS",
+        staged = segs) { tx =>
+      tx.cur match {
         case None =>
-          if (replace && !orCreate) {
-            abortStagedChanges()
-            throw new NoSuchTableException(ident)
-          }
-          val snap = CommitLog.Snapshot(1L, segs, 0L, "ctas",
+          if (replace && !orCreate) throw new NoSuchTableException(ident)
+          CommitLog.Publish(CommitLog.Snapshot(1L, segs, 0L, "ctas",
             schema = Some(schemaB64), partitionBy = pb,
             constraints =
-              Some(CommitLog.encodeConstraints(Map.empty)))
-          if (CommitLog.tryPublish(spark, path, snap)) {
-            reconcileMarker(); return
-          }
-          // lost v1 to a concurrent creator: CREATE fails loudly,
-          // CREATE OR REPLACE retries as a replace of the winner
-          if (!replace) {
-            abortStagedChanges()
-            throw new TableAlreadyExistsException(ident)
-          }
+              Some(CommitLog.encodeConstraints(Map.empty))), false)
         case Some(cur) =>
-          if (!replace) {
-            abortStagedChanges()
-            throw new TableAlreadyExistsException(ident)
-          }
+          if (!replace) throw new TableAlreadyExistsException(ident)
           // the new definition starts clean: the replace commit
           // ITSELF records the explicit-empty constraint set (a kept
           // rule could reference columns the new schema dropped) —
           // atomic with the publish, so no crash window can strand
           // the old definition's rules on the new schema
-          val snap = CommitLog.Snapshot(cur.version + 1L, segs,
+          CommitLog.Publish(CommitLog.Snapshot(cur.version + 1L, segs,
             cur.version, "replace", schema = Some(schemaB64),
             partitionBy = pb,
             constraints =
@@ -833,19 +821,13 @@ private[sources] class StagedCommitLogTable(spark: SparkSession,
             // column would start allocating from the dead table's
             // mark instead of its declared START
             identity =
-              Some(CommitLog.encodeConstraints(Map.empty)))
-          if (CommitLog.tryPublish(spark, path, snap, Some(cur))) {
-            // legacy side-file cleanup only (ignored once the field
-            // exists); losing this to a crash changes nothing
-            CommitLog.clearConstraints(spark, path)
-            reconcileMarker(); return
-          }
+              Some(CommitLog.encodeConstraints(Map.empty))), true)
       }
-      attempt += 1
     }
-    abortStagedChanges()
-    throw new java.io.IOException(
-      s"commitlog CTAS/RTAS: lost the version race 20 times at $path")
+    // legacy side-file cleanup only (ignored once the field exists);
+    // losing this to a crash changes nothing
+    if (replaced) CommitLog.clearConstraints(spark, path)
+    reconcileMarker()
   }
 
   /** Post-publish, reconcile the derivative `_partition.json` cache

@@ -501,7 +501,7 @@ object CommitLogFsck {
     * repair, no commit. `dryRun = true` reports the same rows
     * without committing. */
   def repair(spark: SparkSession, table: String,
-      dryRun: Boolean = false, maxRetries: Int = 20): DataFrame = {
+      dryRun: Boolean = false): DataFrame = {
     import spark.implicits._
     val shallow = fsck(spark, table, deep = false)
       .filter(org.apache.spark.sql.functions.col("level") === "ERROR")
@@ -516,11 +516,8 @@ object CommitLogFsck {
         "log (upgrade the engine / RESTORE / UNSET the constraint) " +
         "first.")
     val f = CommitLog.fs(spark, table)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = CommitLog.snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLogFsck.repair: nothing committed at $table"))
+    CommitLog.transact(spark, table, "CommitLogFsck.repair") { tx =>
+      val cur = tx.existing
       // distributed existence sweep over the CURRENT references —
       // the same executor-side stat pass the deep fsck runs
       val confB = spark.sparkContext.broadcast(
@@ -550,19 +547,13 @@ object CommitLogFsck {
           "deletion vector is gone — rows it subtracted return " +
             "(nothing left to subtract with); re-delete if the " +
             "deletions must hold")).toSeq
-      if (actions.isEmpty || dryRun)
-        return actions.toDF("action", "object", "detail")
-      val snap = CommitLog.Snapshot(cur.version + 1L,
+      val report = actions.toDF("action", "object", "detail")
+      if (actions.isEmpty || dryRun) CommitLog.Done(report)
+      else CommitLog.Publish(CommitLog.Snapshot(cur.version + 1L,
         cur.segments.filterNot(missingSegs.toSet),
         cur.version, "fsck_repair", schema = cur.schema,
-        dv = if (dvMissing.isDefined) None else cur.dv)
-      if (CommitLog.tryPublish(spark, table, snap, Some(cur)))
-        return actions.toDF("action", "object", "detail")
-      attempt += 1
+        dv = if (dvMissing.isDefined) None else cur.dv), report)
     }
-    throw new java.io.IOException(
-      s"CommitLogFsck.repair: lost the version race $maxRetries " +
-        s"times at $table")
   }
 
   /** One-row rollup of [[fsck]] — `(errors, warnings, infos, clean)`

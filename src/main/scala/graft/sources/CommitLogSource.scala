@@ -1165,42 +1165,29 @@ object CommitLogTable {
     * usual OCC; history preserved (time travel still reaches the
     * replaced versions until vacuum). */
   private[sources] def overwrite(spark: SparkSession, table: String,
-      df: DataFrame): Unit = {
-    val seg = CommitLog.writeSegment(spark, table, df)
-    var attempt = 0
-    while (attempt < 20) {
-      val cur = CommitLog.snapshot(spark, table)
-      val v = cur.fold(1L)(_.version + 1L)
-      val snap = CommitLog.Snapshot(v, Seq(seg),
-        cur.fold(0L)(_.version), "overwrite",
-        schema = cur.flatMap(_.schema))
-      if (CommitLog.tryPublish(spark, table, snap, cur)) return
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"commitlog overwrite: lost the version race 20 times at $table")
-  }
+      df: DataFrame): Unit =
+    publishOverwrite(spark, table,
+      Seq(CommitLog.writeSegment(spark, table, df)))
 
   /** [[overwrite]] for a PARTITIONED BY table: the replacement state
     * lands as one sidecar'd segment per partition tuple (the same
     * staging as a partitioned append), published as one `overwrite`
     * version. */
   private[sources] def overwritePartitioned(spark: SparkSession,
-      table: String, df: DataFrame, cols: Seq[String]): Unit = {
-    val segs = CommitLogStats.stagePartitioned(spark, table, df, cols)
-    var attempt = 0
-    while (attempt < 20) {
-      val cur = CommitLog.snapshot(spark, table)
-      val v = cur.fold(1L)(_.version + 1L)
-      val snap = CommitLog.Snapshot(v, segs,
-        cur.fold(0L)(_.version), "overwrite",
-        schema = cur.flatMap(_.schema))
-      if (CommitLog.tryPublish(spark, table, snap, cur)) return
-      attempt += 1
+      table: String, df: DataFrame, cols: Seq[String]): Unit =
+    publishOverwrite(spark, table,
+      CommitLogStats.stagePartitioned(spark, table, df, cols))
+
+  /** Publish `segs` as the table's whole content (`op = "overwrite"`). */
+  private def publishOverwrite(spark: SparkSession, table: String,
+      segs: Seq[String]): Unit =
+    CommitLog.transact(spark, table, "commitlog overwrite",
+        staged = segs) { tx =>
+      val cur = tx.cur
+      CommitLog.Publish(CommitLog.Snapshot(cur.fold(1L)(_.version + 1L),
+        segs, cur.fold(0L)(_.version), "overwrite",
+        schema = cur.flatMap(_.schema)), ())
     }
-    throw new java.io.IOException(
-      s"commitlog overwrite: lost the version race 20 times at $table")
-  }
 }
 
 object CommitLogStreamSource {

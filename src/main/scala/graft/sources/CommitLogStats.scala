@@ -575,28 +575,23 @@ object CommitLogStats {
     * Identical OCC publish loop; the sidecar is in place before the
     * first manifest names the segment. */
   def appendWithStats(spark: SparkSession, table: String, df: DataFrame,
-      statsCols: Seq[String], maxRetries: Int = 20): Long = {
+      statsCols: Seq[String]): Long = {
     val (seg, gated0) = CommitLog.writeSegmentGated(spark, table, df)
     var gated = gated0
     // the segment's file bytes carry physical names (writeSegment's
     // mapping fold); the sidecar keys must match them
     writeSidecar(spark, seg, statsCols, physicalKeyFn(spark, table))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = CommitLog.snapshot(spark, table)
+    CommitLog.transact(spark, table, "CommitLogStats.appendWithStats",
+        staged = Seq(seg)) { tx =>
+      val cur = tx.cur
       gated = CommitLog.regateOnConstraintChange(spark, table,
         Seq(seg), gated, cur)
       val v = cur.fold(1L)(_.version + 1L)
-      val snap = CommitLog.Snapshot(v,
+      CommitLog.Publish(CommitLog.Snapshot(v,
         cur.fold(Seq.empty[String])(_.segments) :+ seg,
         cur.fold(0L)(_.version), "append",
-        schema = cur.flatMap(_.schema), dv = cur.flatMap(_.dv))
-      if (CommitLog.tryPublish(spark, table, snap, cur)) return v
-      attempt += 1
+        schema = cur.flatMap(_.schema), dv = cur.flatMap(_.dv)), v)
     }
-    throw new java.io.IOException(
-      s"CommitLogStats.appendWithStats: lost the version race " +
-        s"$maxRetries times at $table")
   }
 
   /** SLICED APPEND: land a frame carrying a caller-computed integer
@@ -611,8 +606,7 @@ object CommitLogStats {
     * so [[planSkipping]] and the SQL read path prune exactly as for
     * the loop-built layout. */
   def appendSliced(spark: SparkSession, table: String, df: DataFrame,
-      sliceCol: String, statsCols: Seq[String],
-      maxRetries: Int = 20): Long = {
+      sliceCol: String, statsCols: Seq[String]): Long = {
     require(df.schema.fieldNames.contains(sliceCol),
       s"appendSliced: slice column '$sliceCol' absent from frame")
     require(df.schema(sliceCol).dataType == IntegerType,
@@ -648,13 +642,13 @@ object CommitLogStats {
         (writeBucketedSegments(spark, table, persisted, sliceCol,
           Seq.empty, statsCols).map(_._2), ext)
       } finally persisted.unpersist()
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = CommitLog.snapshot(spark, table)
+    CommitLog.transact(spark, table, "CommitLogStats.appendSliced",
+        staged = segs) { tx =>
+      val cur = tx.cur
       gated = CommitLog.regateOnConstraintChange(spark, table,
         segs, gated, cur)
       val v = cur.fold(1L)(_.version + 1L)
-      val snap = CommitLog.Snapshot(v,
+      CommitLog.Publish(CommitLog.Snapshot(v,
         cur.fold(Seq.empty[String])(_.segments) ++ segs,
         cur.fold(0L)(_.version), "append",
         schema = cur.flatMap(_.schema), dv = cur.flatMap(_.dv),
@@ -664,13 +658,8 @@ object CommitLogStats {
         identity = if (idExtents.isEmpty) None
           else Some(CommitLog.encodeIdentityMarks(CommitLog.syncMarks(
             CommitLog.decodeIdentity(cur.flatMap(_.identity)),
-            idExtents))))
-      if (CommitLog.tryPublish(spark, table, snap, cur)) return v
-      attempt += 1
+            idExtents)))), v)
     }
-    throw new java.io.IOException(
-      s"CommitLogStats.appendSliced: lost the version race " +
-        s"$maxRetries times at $table")
   }
 
   /** PARTITIONED APPEND: land `df` as one segment PER DISTINCT
@@ -698,31 +687,25 @@ object CommitLogStats {
     * non-partition columns. */
   def appendPartitioned(spark: SparkSession, table: String,
       df: DataFrame, partitionCols: Seq[String],
-      statsCols: Seq[String] = Seq.empty,
-      maxRetries: Int = 20): Long = {
+      statsCols: Seq[String] = Seq.empty): Long = {
     val (segs, gated0, idExtents) = stagePartitionedGated(spark, table,
       df, partitionCols, statsCols)
     var gated = gated0
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = CommitLog.snapshot(spark, table)
+    CommitLog.transact(spark, table, "CommitLogStats.appendPartitioned",
+        staged = segs) { tx =>
+      val cur = tx.cur
       gated = CommitLog.regateOnConstraintChange(spark, table,
         segs, gated, cur)
       val v = cur.fold(1L)(_.version + 1L)
-      val snap = CommitLog.Snapshot(v,
+      CommitLog.Publish(CommitLog.Snapshot(v,
         cur.fold(Seq.empty[String])(_.segments) ++ segs,
         cur.fold(0L)(_.version), "append",
         schema = cur.flatMap(_.schema), dv = cur.flatMap(_.dv),
         identity = if (idExtents.isEmpty) None
           else Some(CommitLog.encodeIdentityMarks(CommitLog.syncMarks(
             CommitLog.decodeIdentity(cur.flatMap(_.identity)),
-            idExtents))))
-      if (CommitLog.tryPublish(spark, table, snap, cur)) return v
-      attempt += 1
+            idExtents)))), v)
     }
-    throw new java.io.IOException(
-      s"CommitLogStats.appendPartitioned: lost the version race " +
-        s"$maxRetries times at $table")
   }
 
   /** [[appendPartitioned]] with [[CommitLog.appendTxn]]'s
@@ -734,42 +717,34 @@ object CommitLogStats {
     * its staged segments. Returns None when skipped. */
   def appendPartitionedTxn(spark: SparkSession, table: String,
       df: DataFrame, partitionCols: Seq[String], appId: String,
-      batchId: Long, statsCols: Seq[String] = Seq.empty,
-      maxRetries: Int = 20): Option[Long] = {
+      batchId: Long, statsCols: Seq[String] = Seq.empty): Option[Long] = {
     if (CommitLog.lastTxn(spark, table, appId).exists(_ >= batchId))
       return None
     val (segs, gated0, idExtents) = stagePartitionedGated(spark, table,
       df, partitionCols, statsCols)
     var gated = gated0
-    var attempt = 0
-    while (attempt < maxRetries) {
-      if (CommitLog.lastTxn(spark, table, appId).exists(_ >= batchId)) {
-        // a concurrent replica of the same query won the race with
-        // this very batch: drop the orphaned segments, report skipped
-        val f = fs(spark, table)
-        segs.foreach(s =>
-          f.delete(new org.apache.hadoop.fs.Path(s), true): Unit)
-        return None
+    CommitLog.transact(spark, table, "CommitLogStats.appendPartitionedTxn",
+        staged = segs) { tx =>
+      // a concurrent replica of the same query won the race with this
+      // very batch: report skipped (Done drops the orphaned segments)
+      if (CommitLog.lastTxn(spark, table, appId).exists(_ >= batchId))
+        CommitLog.Done(None)
+      else {
+        val cur = tx.cur
+        gated = CommitLog.regateOnConstraintChange(spark, table,
+          segs, gated, cur)
+        val v = cur.fold(1L)(_.version + 1L)
+        CommitLog.Publish(CommitLog.Snapshot(v,
+          cur.fold(Seq.empty[String])(_.segments) ++ segs,
+          cur.fold(0L)(_.version), "streaming-append",
+          txnApp = Some(appId), txnBatch = Some(batchId),
+          schema = cur.flatMap(_.schema), dv = cur.flatMap(_.dv),
+          identity = if (idExtents.isEmpty) None
+            else Some(CommitLog.encodeIdentityMarks(CommitLog.syncMarks(
+              CommitLog.decodeIdentity(cur.flatMap(_.identity)),
+              idExtents)))), Some(v))
       }
-      val cur = CommitLog.snapshot(spark, table)
-      gated = CommitLog.regateOnConstraintChange(spark, table,
-        segs, gated, cur)
-      val v = cur.fold(1L)(_.version + 1L)
-      val snap = CommitLog.Snapshot(v,
-        cur.fold(Seq.empty[String])(_.segments) ++ segs,
-        cur.fold(0L)(_.version), "streaming-append",
-        txnApp = Some(appId), txnBatch = Some(batchId),
-        schema = cur.flatMap(_.schema), dv = cur.flatMap(_.dv),
-        identity = if (idExtents.isEmpty) None
-          else Some(CommitLog.encodeIdentityMarks(CommitLog.syncMarks(
-            CommitLog.decodeIdentity(cur.flatMap(_.identity)),
-            idExtents))))
-      if (CommitLog.tryPublish(spark, table, snap, cur)) return Some(v)
-      attempt += 1
     }
-    throw new java.io.IOException(
-      s"CommitLogStats.appendPartitionedTxn: lost the version race " +
-        s"$maxRetries times at $table")
   }
 
   /** [[appendPartitioned]]'s staging step alone: land `df` as one
@@ -962,15 +937,13 @@ object CommitLogStats {
     * too: a vectored delete losing to a compact rebases onto the
     * rewritten segment set inside its own OCC loop. */
   def compactClustered(spark: SparkSession, table: String,
-      clusterCols: Seq[String], nSegments: Int, statsCols: Seq[String],
-      maxRetries: Int = 20): Long = {
+      clusterCols: Seq[String], nSegments: Int,
+      statsCols: Seq[String]): Long = {
     require(nSegments >= 1, "nSegments must be >= 1")
     require(clusterCols.nonEmpty, "clusterCols must be non-empty")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = CommitLog.snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLogStats.compactClustered: nothing committed at $table"))
+    CommitLog.transact(spark, table,
+        "CommitLogStats.compactClustered") { tx =>
+      val cur = tx.existing
       val df = CommitLog.readLive(spark, cur)
       // rank + total in ONE pass (the offset fold already counts;
       // a separate count() re-read the whole ranked relation)
@@ -979,25 +952,14 @@ object CommitLogStats {
       val n = math.max(1L, total)
       // floor division — Spark's `/` on integral columns is DOUBLE
       // division; floor() is exact here ((rn-1)*nSegments ≪ 2^53)
-      val bucketed = ranked.withColumn("__bucket",
-        floor(((col("__rn") - 1L) * nSegments) / lit(n))
-          .cast("int")).persist()
-      try {
-        val segs = writeBucketedSegments(spark, table, bucketed,
-          "__bucket", Seq("__rn"), statsCols,
-          orderWithin = clusterCols.map(col)).map(_._2)
-        val snap = CommitLog.Snapshot(cur.version + 1L, segs,
-          cur.version, "compact", schema = cur.schema)
-        if (CommitLog.tryPublish(spark, table, snap, Some(cur))) return snap.version
-        val f = fs(spark, table)
-        segs.foreach(s =>
-          f.delete(new org.apache.hadoop.fs.Path(s), true): Unit)
-      } finally bucketed.unpersist()
-      attempt += 1
+      val bucketed = tx.pin(ranked.withColumn("__bucket",
+        floor(((col("__rn") - 1L) * nSegments) / lit(n)).cast("int")))
+      val segs = tx.stage(writeBucketedSegments(spark, table, bucketed,
+        "__bucket", Seq("__rn"), statsCols,
+        orderWithin = clusterCols.map(col)).map(_._2))
+      CommitLog.Publish(CommitLog.Snapshot(cur.version + 1L, segs,
+        cur.version, "compact", schema = cur.schema), cur.version + 1L)
     }
-    throw new java.io.IOException(
-      s"CommitLogStats.compactClustered: lost the version race " +
-        s"$maxRetries times at $table")
   }
 
   /** Stage `df` range-clustered on `clusterCols` and publish it as a
@@ -1012,42 +974,33 @@ object CommitLogStats {
   private[graft] def installClustered(spark: SparkSession,
       table: String, df: DataFrame, clusterCols: Seq[String],
       nSegments: Int, statsCols: Seq[String],
-      txn: Option[(String, Long)] = None,
-      maxRetries: Int = 20): Long = {
+      txn: Option[(String, Long)] = None): Long = {
     require(nSegments >= 1, "nSegments must be >= 1")
     require(clusterCols.nonEmpty, "clusterCols must be non-empty")
-    require(CommitLog.currentVersion(spark, table).isEmpty,
+    def refuseExisting(): Nothing = throw new IllegalStateException(
       s"CommitLogStats.installClustered: $table already exists — " +
         "content replacement must record CDC (overwriteWhere + " +
         "compactClustered)")
+    if (CommitLog.currentVersion(spark, table).isDefined) refuseExisting()
     val (ranked, total) = graft.operators.DistributedRank
       .globalRowNumberCounted(df, clusterCols.map(col), "__rn")
     val n = math.max(1L, total)
     val bucketed = ranked.withColumn("__bucket",
       floor(((col("__rn") - 1L) * nSegments) / lit(n))
         .cast("int")).persist()
-    try {
-      val segs = writeBucketedSegments(spark, table, bucketed,
+    val segs =
+      try writeBucketedSegments(spark, table, bucketed,
         "__bucket", Seq("__rn"), statsCols,
         orderWithin = clusterCols.map(col)).map(_._2)
-      var attempt = 0
-      while (attempt < maxRetries) {
-        val cur = CommitLog.snapshot(spark, table)
-        val snap = CommitLog.Snapshot(cur.fold(1L)(_.version + 1L),
-          segs, cur.fold(0L)(_.version), "append",
-          txnApp = txn.map(_._1), txnBatch = txn.map(_._2),
-          schema = cur.flatMap(_.schema), dv = cur.flatMap(_.dv))
-        if (CommitLog.tryPublish(spark, table, snap, cur))
-          return snap.version
-        attempt += 1
-      }
-      val f = fs(spark, table)
-      segs.foreach(s =>
-        f.delete(new org.apache.hadoop.fs.Path(s), true): Unit)
-      throw new java.io.IOException(
-        s"CommitLogStats.installClustered: lost the version race " +
-          s"$maxRetries times at $table")
-    } finally bucketed.unpersist(): Unit
+      finally bucketed.unpersist(): Unit
+    // the segments are the WHOLE table: a writer that created the
+    // table while they staged wins, and they are dropped
+    CommitLog.transact(spark, table, "CommitLogStats.installClustered",
+        staged = segs) { tx =>
+      if (tx.cur.isDefined) refuseExisting()
+      CommitLog.Publish(CommitLog.Snapshot(1L, segs, 0L, "append",
+        txnApp = txn.map(_._1), txnBatch = txn.map(_._2)), 1L)
+    }
   }
 
   /** INCREMENTAL clustered OPTIMIZE — rewrite only the unsorted tail,
@@ -1076,8 +1029,7 @@ object CommitLogStats {
     * (committedVersion, segmentsRewritten, segmentsKept). */
   def compactClusteredIncremental(spark: SparkSession, table: String,
       clusterCols: Seq[String], targetRowsPerSegment: Long,
-      statsCols: Seq[String], maxDepth: Int = 2,
-      maxRetries: Int = 20): (Long, Int, Int) = {
+      statsCols: Seq[String], maxDepth: Int = 2): (Long, Int, Int) = {
     require(clusterCols.nonEmpty, "clusterCols must be non-empty")
     require(targetRowsPerSegment > 0, "targetRowsPerSegment must be > 0")
     require(maxDepth >= 2,
@@ -1088,12 +1040,9 @@ object CommitLogStats {
         s"cluster column '$rangeCol' — without its sidecar every " +
         "rewritten segment is opaque to the NEXT call, which would " +
         "rewrite the whole table every run instead of converging")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = CommitLog.snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLogStats.compactClusteredIncremental: nothing " +
-            s"committed at $table"))
+    CommitLog.transact(spark, table,
+        "CommitLogStats.compactClusteredIncremental") { tx =>
+      val cur = tx.existing
       // sidecar ranges; a segment without a sidecar or the column has
       // an unknowable range → must rewrite. A segment whose range
       // column is ALL NULL is its own class: invisible to range
@@ -1155,53 +1104,46 @@ object CommitLogStats {
         m
       }
       if (opaque.isEmpty && maxD <= maxDepth)
-        return (cur.version, 0, cur.segments.size)
-      // interval scheduling: keep a maximum chain of segments with
-      // disjoint INTERIORS — a boundary-value tie is allowed only for
-      // a non-degenerate newcomer (matching the sweep): a [v,v]
-      // segment repeating the chain's current max is a REDUCIBLE
-      // stack member and must go to the rewrite set to be merged
-      val chain = scala.collection.mutable.ArrayBuffer.empty[String]
-      var lastMax: Option[Any] = None
-      known.sortWith((a, b) => cmp(a._2, a._4, b._4) < 0).foreach {
-        case (seg, _, mn, mx) =>
-          val admit = lastMax.forall { lm =>
-            val c = cmp(tag, mn, lm)
-            c > 0 || (c == 0 && cmp(tag, mx, mn) > 0)
-          }
-          if (admit) { chain += seg; lastMax = Some(mx) }
+        CommitLog.Done((cur.version, 0, cur.segments.size))
+      else {
+        // interval scheduling: keep a maximum chain of segments with
+        // disjoint INTERIORS — a boundary-value tie is allowed only for
+        // a non-degenerate newcomer (matching the sweep): a [v,v]
+        // segment repeating the chain's current max is a REDUCIBLE
+        // stack member and must go to the rewrite set to be merged
+        val chain = scala.collection.mutable.ArrayBuffer.empty[String]
+        var lastMax: Option[Any] = None
+        known.sortWith((a, b) => cmp(a._2, a._4, b._4) < 0).foreach {
+          case (seg, _, mn, mx) =>
+            val admit = lastMax.forall { lm =>
+              val c = cmp(tag, mn, lm)
+              c > 0 || (c == 0 && cmp(tag, mx, mn) > 0)
+            }
+            if (admit) { chain += seg; lastMax = Some(mx) }
+        }
+        val kept = chain.toSet ++ allNull
+        val rewrite = cur.segments.filterNot(kept)
+        if (rewrite.isEmpty)
+          CommitLog.Done((cur.version, 0, cur.segments.size))
+        else {
+          val df = CommitLog.readLive(spark, cur, Some(rewrite))
+          val (ranked, total) = graft.operators.DistributedRank
+            .globalRowNumberCounted(df, clusterCols.map(col), "__rn")
+          val n = math.max(1L, total)
+          val nSegments = math.max(1L,
+            (n + targetRowsPerSegment - 1) / targetRowsPerSegment).toInt
+          val bucketed = tx.pin(ranked.withColumn("__bucket",
+            floor(((col("__rn") - 1L) * nSegments) / lit(n)).cast("int")))
+          val segs = tx.stage(writeBucketedSegments(spark, table, bucketed,
+            "__bucket", Seq("__rn"), statsCols,
+            orderWithin = clusterCols.map(col)).map(_._2))
+          CommitLog.Publish(CommitLog.Snapshot(cur.version + 1L,
+            cur.segments.filter(kept) ++ segs,
+            cur.version, "compact", schema = cur.schema, dv = cur.dv),
+            (cur.version + 1L, rewrite.size, kept.size))
+        }
       }
-      val kept = chain.toSet ++ allNull
-      val rewrite = cur.segments.filterNot(kept)
-      if (rewrite.isEmpty)
-        return (cur.version, 0, cur.segments.size)
-      val df = CommitLog.readLive(spark, cur, Some(rewrite))
-      val (ranked, total) = graft.operators.DistributedRank
-        .globalRowNumberCounted(df, clusterCols.map(col), "__rn")
-      val n = math.max(1L, total)
-      val nSegments = math.max(1L,
-        (n + targetRowsPerSegment - 1) / targetRowsPerSegment).toInt
-      val bucketed = ranked.withColumn("__bucket",
-        floor(((col("__rn") - 1L) * nSegments) / lit(n))
-          .cast("int")).persist()
-      try {
-        val segs = writeBucketedSegments(spark, table, bucketed,
-          "__bucket", Seq("__rn"), statsCols,
-          orderWithin = clusterCols.map(col)).map(_._2)
-        val snap = CommitLog.Snapshot(cur.version + 1L,
-          cur.segments.filter(kept) ++ segs,
-          cur.version, "compact", schema = cur.schema, dv = cur.dv)
-        if (CommitLog.tryPublish(spark, table, snap, Some(cur)))
-          return (snap.version, rewrite.size, kept.size)
-        val f = fs(spark, table)
-        segs.foreach(s =>
-          f.delete(new org.apache.hadoop.fs.Path(s), true): Unit)
-      } finally bucketed.unpersist()
-      attempt += 1
     }
-    throw new java.io.IOException(
-      s"CommitLogStats.compactClusteredIncremental: lost the version " +
-        s"race $maxRetries times at $table")
   }
 
   /** Z-ORDER OPTIMIZE: [[compactClustered]]'s 2-D sibling — segments
@@ -1217,10 +1159,9 @@ object CommitLogStats {
     * the q123 tier). */
   def compactZOrder(spark: SparkSession, table: String,
       xCol: String, yCol: String, tieBreak: Seq[String],
-      nSegments: Int, statsCols: Seq[String],
-      maxRetries: Int = 20): Long =
+      nSegments: Int, statsCols: Seq[String]): Long =
     compactZOrderN(spark, table, Seq(xCol, yCol), tieBreak,
-      nSegments, statsCols, maxRetries = maxRetries)
+      nSegments, statsCols)
 
   /** N-DIMENSIONAL [[compactZOrder]]: segments range-disjoint in the
     * N-way Morton order ([[graft.queries.Pipeline10.zOrderN]] — bit
@@ -1236,17 +1177,14 @@ object CommitLogStats {
     * OPTIMIZE. */
   def compactZOrderN(spark: SparkSession, table: String,
       zCols: Seq[String], tieBreak: Seq[String],
-      nSegments: Int, statsCols: Seq[String], bits: Int = 0,
-      maxRetries: Int = 20): Long = {
+      nSegments: Int, statsCols: Seq[String], bits: Int = 0): Long = {
     require(nSegments >= 1, "nSegments must be >= 1")
     require(zCols.size >= 2,
       s"compactZOrderN: need >= 2 z-order columns, got ${zCols.size}")
     val b = if (bits > 0) bits else 62 / zCols.size
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = CommitLog.snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLogStats.compactZOrder: nothing committed at $table"))
+    CommitLog.transact(spark, table,
+        "CommitLogStats.compactZOrder") { tx =>
+      val cur = tx.existing
       val df = CommitLog.readLive(spark, cur)
         .withColumn("__z", graft.queries.Pipeline10.zOrderN(
           zCols.map(col), b))
@@ -1254,24 +1192,13 @@ object CommitLogStats {
         .globalRowNumberCounted(df, col("__z") +: tieBreak.map(col),
           "__rn")
       val n = math.max(1L, total)
-      val bucketed = ranked.withColumn("__bucket",
-        floor(((col("__rn") - 1L) * nSegments) / lit(n))
-          .cast("int")).persist()
-      try {
-        val segs = writeBucketedSegments(spark, table, bucketed,
-          "__bucket", Seq("__z", "__rn"), statsCols).map(_._2)
-        val snap = CommitLog.Snapshot(cur.version + 1L, segs,
-          cur.version, "compact", schema = cur.schema)
-        if (CommitLog.tryPublish(spark, table, snap, Some(cur))) return snap.version
-        val f = fs(spark, table)
-        segs.foreach(s =>
-          f.delete(new org.apache.hadoop.fs.Path(s), true): Unit)
-      } finally bucketed.unpersist()
-      attempt += 1
+      val bucketed = tx.pin(ranked.withColumn("__bucket",
+        floor(((col("__rn") - 1L) * nSegments) / lit(n)).cast("int")))
+      val segs = tx.stage(writeBucketedSegments(spark, table, bucketed,
+        "__bucket", Seq("__z", "__rn"), statsCols).map(_._2))
+      CommitLog.Publish(CommitLog.Snapshot(cur.version + 1L, segs,
+        cur.version, "compact", schema = cur.schema), cur.version + 1L)
     }
-    throw new java.io.IOException(
-      s"CommitLogStats.compactZOrder: lost the version race " +
-        s"$maxRetries times at $table")
   }
 
   /** KEY-BUCKETED OPTIMIZE: rewrite the snapshot as `nBuckets`
@@ -1366,8 +1293,7 @@ object CommitLogStats {
   }
 
   def compactBucketed(spark: SparkSession, table: String,
-      keys: Seq[String], nBuckets: Int, statsCols: Seq[String],
-      maxRetries: Int = 20): Long = {
+      keys: Seq[String], nBuckets: Int, statsCols: Seq[String]): Long = {
     require(nBuckets >= 1, "nBuckets must be >= 1")
     require(keys.nonEmpty, "keys must be non-empty")
     // canonical layout order: two tables bucketed on the same key SET
@@ -1375,38 +1301,25 @@ object CommitLogStats {
     // positional expression compare lines up
     val ckeys = keys.sortBy(_.toLowerCase)
     val ns = gridNs(nBuckets, ckeys.size)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = CommitLog.snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLogStats.compactBucketed: nothing committed at $table"))
-      val df = CommitLog.readLive(spark, cur)
-        .withColumn("__bucket", gridBucketCol(ckeys, ns))
-        .persist()
-      try {
-        val bySeg = writeBucketedSegments(spark, table, df,
-          "__bucket", Seq.empty, statsCols)
-        val segs = bySeg.map(_._2)
-        // record the layout in the manifest (keys, per-key ns, uuid →
-        // bucket): the DSv2 scan reports KeyGroupedPartitioning (one
-        // single-ref bucket transform per key) from it, so a join of
-        // two same-(keys, grid) tables plans with ZERO shuffle
-        // exchanges. The field is NOT inherited — any later commit
-        // changes the segment set and the claim dies with it.
-        val snap = CommitLog.Snapshot(cur.version + 1L, segs,
-          cur.version, "compact", schema = cur.schema,
-          bucket = Some(CommitLog.encodeBucketSpec(ckeys, ns,
-            bySeg)))
-        if (CommitLog.tryPublish(spark, table, snap, Some(cur))) return snap.version
-        val f = fs(spark, table)
-        segs.foreach(s =>
-          f.delete(new org.apache.hadoop.fs.Path(s), true): Unit)
-      } finally df.unpersist()
-      attempt += 1
+    CommitLog.transact(spark, table,
+        "CommitLogStats.compactBucketed") { tx =>
+      val cur = tx.existing
+      val df = tx.pin(CommitLog.readLive(spark, cur)
+        .withColumn("__bucket", gridBucketCol(ckeys, ns)))
+      val bySeg = writeBucketedSegments(spark, table, df,
+        "__bucket", Seq.empty, statsCols)
+      val segs = tx.stage(bySeg.map(_._2))
+      // record the layout in the manifest (keys, per-key ns, uuid →
+      // bucket): the DSv2 scan reports KeyGroupedPartitioning (one
+      // single-ref bucket transform per key) from it, so a join of
+      // two same-(keys, grid) tables plans with ZERO shuffle
+      // exchanges. The field is NOT inherited — any later commit
+      // changes the segment set and the claim dies with it.
+      CommitLog.Publish(CommitLog.Snapshot(cur.version + 1L, segs,
+        cur.version, "compact", schema = cur.schema,
+        bucket = Some(CommitLog.encodeBucketSpec(ckeys, ns, bySeg))),
+        cur.version + 1L)
     }
-    throw new java.io.IOException(
-      s"CommitLogStats.compactBucketed: lost the version race " +
-        s"$maxRetries times at $table")
   }
 
   /** Stage a DML rewrite PRESERVING the table's bucketed layout: when

@@ -5609,45 +5609,15 @@ class CommitLogSpec extends AnyFunSuite {
       // violating append stages (gate sees NO constraints), then its
       // v2 publish is intercepted — a setConstraint wins v2 instead —
       // and the append's retry must re-gate against the new rule
-      val inNested = new ThreadLocal[Boolean] {
-        override def initialValue(): Boolean = false
-      }
-      @volatile var intercepted = false
-      val real = new CommitLog.ConditionalPutStore((dst, content) => {
-        // default-store behavior via the filesystem primitive
-        val p = java.nio.file.Paths.get(
-          new java.net.URI("file://" + dst).getPath)
-        try {
-          val tmp = java.nio.file.Files.createTempFile(
-            p.getParent, ".tmp-", "")
-          java.nio.file.Files.write(tmp, content)
-          try { java.nio.file.Files.createLink(p, tmp); true }
-          catch {
-            case _: java.nio.file.FileAlreadyExistsException => false
-          } finally java.nio.file.Files.deleteIfExists(tmp): Unit
-        } catch { case _: java.nio.file.NoSuchFileException => false }
-      })
-      val store = new CommitLog.ManifestStore {
-        override def createIfAbsent(dst: String,
-            content: Array[Byte]): Boolean = {
-          if (!intercepted && !inNested.get() &&
-              dst.endsWith("00000000000000000002.manifest")) {
-            intercepted = true
-            inNested.set(true)
-            try CommitLog.setConstraint(spark, t, "v_pos", "v > 0"): Unit
-            finally inNested.set(false)
-            false // the data append lost v2 to the SET
-          } else real.createIfAbsent(dst, content)
-        }
-      }
-      CommitLog.registerManifestStore(t, store)
-      try {
+      val store = new ManifestStores.LoseOnce(() =>
+        CommitLog.setConstraint(spark, t, "v_pos", "v > 0"): Unit)
+      ManifestStores.withStore(t, store) {
         val e = intercept[IllegalStateException] {
           CommitLog.append(spark, t, df((2L, "bad", -2.0)))
         }
         assert(e.getMessage.contains("v_pos"))
-      } finally CommitLog.unregisterManifestStore(t)
-      assert(intercepted, "the interleave never happened")
+      }
+      assert(store.fired, "the interleave never happened")
       // the SET's version is the only new commit; content is clean
       assert(CommitLog.versions(spark, t) === Seq(1L, 2L))
       assert(CommitLog.snapshot(spark, t).get.op === "set_constraint")
