@@ -52,6 +52,23 @@ object Pipeline20 {
     (target, source)
   }
 
+  /** Each key's LAST change in a change feed (its deletes and
+    * post-images), as q221's replica replay applies it. Within one
+    * version an upsert wins over a delete: a version that deletes and
+    * re-inserts a key (a replaceWhere's 'delete' + 'insert' pair) leaves
+    * the new row, and without the tie-break the window would pick either
+    * row. */
+  private[graft] def netEffect(feed: DataFrame, key: String): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col(key))
+      .orderBy(col("_commit_version").desc,
+        when(col("_change_type") === "delete", 1).otherwise(0))
+    feed.filter(col("_change_type")
+        .isin("delete", "update_postimage", "insert"))
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1)
+  }
+
   private def mergeResult(s: SparkSession, tbl: String,
       nUpd: Long, nDel: Long, nIns: Long): DataFrame =
     CommitLog.read(s, tbl)
@@ -535,13 +552,7 @@ object Pipeline20 {
         // One delete-merge + one upsert-merge lands byte-equal to the
         // version-by-version replay, and the versions_replayed witness
         // still counts the feed's versions.
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("o_orderkey"))
-          .orderBy(col("_commit_version").desc)
-        val net = feed.filter(col("_change_type")
-            .isin("delete", "update_postimage", "insert"))
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1)
+        val net = netEffect(feed, "o_orderkey")
         if (versions.exists(_._2 > 0L))
           CommitLog.mergeIntoClauses(s, rep,
             net.filter(col("_change_type") === "delete")

@@ -1043,8 +1043,8 @@ object CommitLog {
     val staged = snap.flatMap(_.schema)
       .map(decodeSchema).filterNot(isIdentityMapping) match {
       case Some(sch) =>
-        fromPhysicalFrame(spark.read.parquet(stagedPaths: _*), sch)
-      case None => spark.read.parquet(stagedPaths: _*)
+        fromPhysicalFrame(ParquetFooters.read(spark, stagedPaths), sch)
+      case None => ParquetFooters.read(spark, stagedPaths)
     }
     constraintViolation(spark, table, staged, snap).foreach { msg =>
       val f = fs(spark, table)
@@ -1383,7 +1383,9 @@ object CommitLog {
   /** Read a segment list under an optionally-pinned (possibly evolved)
     * schema: segments written before a column was added serve NULLs
     * for it, and column set/order is stable regardless of which file
-    * the parquet reader would have sampled. */
+    * the parquet reader would have sampled. Without a recorded schema
+    * the inferred one comes from [[ParquetFooters]], which reads no
+    * footer in a Spark job. */
   private[graft] def readSegments(spark: SparkSession,
       segments: Seq[String], schema: Option[String]): DataFrame =
     schema.map(decodeSchema) match {
@@ -1396,7 +1398,7 @@ object CommitLog {
           .select(sch.fields.map(f =>
             col(s"`${physicalName(f)}`").as(f.name, f.metadata)): _*)
       case Some(sch) => spark.read.schema(sch).parquet(segments: _*)
-      case None => spark.read.parquet(segments: _*)
+      case None => ParquetFooters.read(spark, segments)
     }
 
   /** The snapshot's LIVE content: its segments minus its deletion
@@ -1473,7 +1475,7 @@ object CommitLog {
 
   private def subtractDv(spark: SparkSession, tagged: DataFrame,
       dvDir: String): DataFrame = {
-    val dvRaw = spark.read.parquet(dvDir)
+    val dvRaw = ParquetFooters.read(spark, Seq(dvDir))
     val fileIds = dvRaw.select("_dv_file").distinct()
       .collect().map(_.getString(0)).zipWithIndex.toMap
     val idOf = typedLit(fileIds)
@@ -1501,10 +1503,17 @@ object CommitLog {
   /** Write `df` as a fresh immutable segment under the table; returns
     * the segment directory path. Never visible until a manifest names
     * it, so a crashed writer leaves only unreferenced garbage (removed
-    * by [[vacuum]]), never a corrupt table. */
+    * by [[vacuum]]), never a corrupt table. Gated against the table's
+    * current snapshot. */
   private[graft] def writeSegment(spark: SparkSession, table: String,
       df: DataFrame): String =
-    writeSegmentGated(spark, table, df)._1
+    writeSegment(spark, table, df, snapshot(spark, table))
+
+  /** [[writeSegment]] gated against `cur`, the snapshot a [[transact]]
+    * attempt already holds (`tx.cur`) — no second resolve. */
+  private[graft] def writeSegment(spark: SparkSession, table: String,
+      df: DataFrame, cur: Option[Snapshot]): String =
+    writeSegmentGated(spark, table, df, cur)._1
 
   /** [[writeSegment]] plus the CHECK-constraint set the gate ran
     * against — append-family OCC loops compare it to the re-read
@@ -1512,11 +1521,25 @@ object CommitLog {
     * so a constraint committed by a concurrent SET between staging
     * and publish cannot be slipped under. */
   private[sources] def writeSegmentGated(spark: SparkSession,
-      table: String, df: DataFrame): (String, Map[String, String]) = {
+      table: String, df: DataFrame, cur: Option[Snapshot])
+      : (String, Map[String, String]) =
+    gatedSegment(spark, table, df, cur, keepEmpty = true).get
+
+  /** Stage a DML rewrite's rows as one gated segment of the attempt,
+    * or nothing when `df` holds no rows. The row count rides the write
+    * itself, so no emptiness probe runs first; an empty result's
+    * directory is deleted, and no manifest names it. */
+  private def stageRows(spark: SparkSession, tx: Tx, table: String,
+      df: DataFrame): Seq[String] =
+    tx.stage(gatedSegment(spark, table, df, tx.cur, keepEmpty = false)
+      .map(_._1).toSeq)
+
+  private def gatedSegment(spark: SparkSession, table: String,
+      df: DataFrame, cur: Option[Snapshot], keepEmpty: Boolean)
+      : Option[(String, Map[String, String])] = {
     // column mapping: file bytes store PHYSICAL names (identity → the
-    // rename fold is a no-op); ONE snapshot resolution serves the
-    // mapping AND the constraint gate below
-    val cur = snapshot(spark, table)
+    // rename fold is a no-op); the one snapshot serves the mapping AND
+    // the constraint gate below
     // identity columns allocate ONLY on [[appendIdentity]] (which
     // lands them in the frame before this point) — any other gated
     // path omitting one would silently serve NULL ids; refuse loud
@@ -1553,12 +1576,17 @@ object CommitLog {
     val mapped = cur.flatMap(_.schema)
       .map(decodeSchema).filterNot(isIdentityMapping)
       .map(sch => toPhysicalFrame(withGen, sch)).getOrElse(withGen)
-    val seg = stageSegmentUnchecked(spark, table, mapped)
-    // persistent CHECK constraints gate EVERY segment before any
-    // manifest can name it — one columnar scan of the new data only,
-    // nothing when the table has no constraints (one field probe)
-    enforceConstraints(spark, table, Seq(seg), cur)
-    (seg, constraintsOf(spark, table, cur))
+    val (seg, rows) = stageCounted(table, mapped)
+    if (rows.contains(0L) && !keepEmpty) {
+      fs(spark, table).delete(new org.apache.hadoop.fs.Path(seg), true)
+      None
+    } else {
+      // persistent CHECK constraints gate EVERY segment before any
+      // manifest can name it — one columnar scan of the new data only,
+      // nothing when the table has no constraints (one field probe)
+      enforceConstraints(spark, table, Seq(seg), cur)
+      Some((seg, constraintsOf(spark, table, cur)))
+    }
   }
 
   /** Close the gate-vs-SET race at the publish boundary: when the
@@ -1586,10 +1614,31 @@ object CommitLog {
     * any pre-replace definition. Invisible until a manifest names
     * it, exactly like [[writeSegment]]'s output. */
   private[sources] def stageSegmentUnchecked(spark: SparkSession,
-      table: String, df: DataFrame): String = {
+      table: String, df: DataFrame): String =
+    stageCounted(table, df)._1
+
+  /** [[stageSegmentUnchecked]] plus the segment's row count, observed
+    * by the write (None when the write reported no metrics). */
+  private def stageCounted(table: String,
+      df: DataFrame): (String, Option[Long]) = {
     val seg = s"$table/data/${java.util.UUID.randomUUID().toString}"
-    df.write.mode(SaveMode.ErrorIfExists).parquet(seg)
-    seg
+    val n = observedWrite(df, seg, Seq(count(lit(1)).as("n"))).get("n")
+      .collect { case x: Number => x.longValue }
+    (seg, n)
+  }
+
+  /** Write `df` as parquet at the fresh path `path` and return `aggs`
+    * over the written rows, measured by an
+    * [[org.apache.spark.sql.Observation]] riding the write itself: no
+    * second job re-reads what the write job already saw. Observation
+    * metrics are exact under task retries (CollectMetrics counts only
+    * committed tasks). */
+  private def observedWrite(df: DataFrame, path: String,
+      aggs: Seq[org.apache.spark.sql.Column]): Map[String, Any] = {
+    val obs = org.apache.spark.sql.Observation()
+    df.observe(obs, aggs.head, aggs.tail: _*)
+      .write.mode(SaveMode.ErrorIfExists).parquet(path)
+    obs.get
   }
 
   /** Delete the LEGACY `_constraints.json` side file — a derivative
@@ -1939,7 +1988,7 @@ object CommitLog {
     val idFields = identityFields(pre.flatMap(_.schema).map(decodeSchema))
     if (idFields.nonEmpty)
       return appendIdentity(spark, table, df, idFields, "append", None).get
-    val (seg, gated0) = writeSegmentGated(spark, table, df)
+    val (seg, gated0) = writeSegmentGated(spark, table, df, pre)
     var gated = gated0
     // the first attempt reuses the identity-probe resolution (the
     // common uncontended append pays no extra manifest I/O for the
@@ -1989,7 +2038,7 @@ object CommitLog {
               "concurrently — retry the append")
           val (dfId, marks) = applyIdentity(pinned, nowFields,
             decodeIdentity(cur.flatMap(_.identity)), stats)
-          val seg = tx.stage(writeSegmentGated(spark, table, dfId)._1)
+          val seg = tx.stage(writeSegment(spark, table, dfId, cur))
           val v = cur.fold(1L)(_.version + 1L)
           Publish(Snapshot(v,
             cur.fold(Seq.empty[String])(_.segments) :+ seg,
@@ -2482,7 +2531,7 @@ object CommitLog {
     if (idFields.nonEmpty)
       return appendIdentity(spark, table, df, idFields,
         "streaming-append", Some((appId, batchId)))
-    val (seg, gated0) = writeSegmentGated(spark, table, df)
+    val (seg, gated0) = writeSegmentGated(spark, table, df, preI)
     var gated = gated0
     // first attempt reuses the identity-probe resolution (same
     // rationale as append: a stale base can never WIN the publish)
@@ -2535,7 +2584,7 @@ object CommitLog {
       }
       val staged = tx.pin(merged)
       val ins = staged.count() - exCount
-      val seg = tx.stage(writeSegment(spark, table, staged))
+      val seg = tx.stage(writeSegment(spark, table, staged, cur))
       val v = cur.fold(1L)(_.version + 1L)
       Publish(Snapshot(v, Seq(seg), cur.fold(0L)(_.version), "merge",
         schema = cur.flatMap(_.schema)), (v, ins, replaced))
@@ -2555,22 +2604,12 @@ object CommitLog {
     Seq("delete", "insert", "update_preimage", "update_postimage")
 
   /** Write a CDC frame to `changeDir` and return its per-_change_type
-    * row counts, measured by an [[org.apache.spark.sql.Observation]]
-    * riding the write itself. The counts previously came from a full
-    * re-read of the just-written directory — a second scan (and a
-    * second Spark job) per DML statement for numbers the write job
-    * already saw every row of. Observation metrics are exact under
-    * task retries (CollectMetrics counts only committed tasks), so
-    * the returned counts equal what the re-read reported. Absent
-    * types read 0 (sum over an empty frame observes NULL). */
-  private def writeChanges(spark: SparkSession, changeDir: String,
+    * row counts, observed by the write itself ([[observedWrite]]).
+    * Absent types read 0 (sum over an empty frame observes NULL). */
+  private def writeChanges(changeDir: String,
       changes: DataFrame): Map[String, Long] = {
-    val obs = org.apache.spark.sql.Observation()
-    val aggs = ChangeTypes.map(t =>
-      sum(when(col("_change_type") === t, 1L)).as(t))
-    changes.observe(obs, aggs.head, aggs.tail: _*)
-      .write.mode(SaveMode.ErrorIfExists).parquet(changeDir)
-    val got = obs.get
+    val got = observedWrite(changes, changeDir, ChangeTypes.map(t =>
+      sum(when(col("_change_type") === t, 1L)).as(t)))
     ChangeTypes.map(t => t -> (got.get(t) match {
       case Some(n: java.lang.Number) => n.longValue
       case _ => 0L
@@ -2615,6 +2654,23 @@ object CommitLog {
     }
   }
 
+  /** True when `df` reads rows the session already holds in memory — a
+    * local relation or a checkpointed RDD, under deterministic
+    * projections and filters — so re-reading it is as cheap as reading
+    * a cache of it, and as stable. */
+  private def inMemoryRows(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    def leaf(p: LogicalPlan): Boolean = p match {
+      case _: LocalRelation => true
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.isCheckpointed
+      case Project(exprs, child) => exprs.forall(_.deterministic) && leaf(child)
+      case Filter(cond, child) => cond.deterministic && leaf(child)
+      case _ => false
+    }
+    leaf(df.queryExecution.optimizedPlan)
+  }
+
   /** True when recomputing `df` involves more than a (pushdown-
     * friendly) scan+filter: a join anywhere in the plan, or a
     * subquery expression. Gates the update/delete rewrite-frame pin
@@ -2655,7 +2711,11 @@ object CommitLog {
     transact(spark, table, "CommitLog.delete") { tx =>
       val cur = tx.existing
       val matched = coalesce(predicate, lit(false))
-      val touched = touchedSegments(spark, cur, matched)
+      // a lone segment is touched iff a row matches, which the counted
+      // CDC write below tells — the probe could not narrow the rewrite
+      val touched =
+        if (cur.segments.size == 1) cur.segments
+        else touchedSegments(spark, cur, matched)
       if (touched.isEmpty) Done((cur.version, 0L)) else {
         // DV-applied read of the touched subset: an already-DV-deleted
         // row can neither re-report in CDC nor resurrect in the rewrite.
@@ -2667,10 +2727,10 @@ object CommitLog {
         // hash ExistenceJoin, and both polarities filter the boolean
         // PIN the flagged frame when it is expensive to recompute
         // (subquery predicates re-run an existence join per branch):
-        // the CDC write, the kept-row rewrite, its emptiness probe and
-        // the bucketed staging all filter it. Plain predicates skip the
-        // pin — a pushed-down parquet re-scan is cheaper than building
-        // the columnar cache (measured, q163).
+        // the CDC write, the kept-row rewrite and the bucketed staging
+        // all filter it. Plain predicates skip the pin — a pushed-down
+        // parquet re-scan is cheaper than building the columnar cache
+        // (measured, q163).
         val flagged0 = readLive(spark, cur, Some(touched))
           .withColumn("__graft_matched", matched)
         val flagged =
@@ -2679,27 +2739,27 @@ object CommitLog {
           .drop("__graft_matched")
         val changeDir =
           tx.stage(s"$table/_changes/${java.util.UUID.randomUUID()}")
-        val nDeleted = writeChanges(spark, changeDir,
+        val nDeleted = writeChanges(changeDir,
           matchedDf
             .withColumn("_change_type", lit("delete"))
             .transform(changePhysical(cur)))("delete")
-        val kept = flagged.filter(!col("__graft_matched"))
-          .drop("__graft_matched")
-        // a bucketed layout (SPJ spec) survives the DML: the kept rows
-        // re-land bucket-split and the commit carries the updated spec
-        val bucketStaged = CommitLogStats.stageDmlBucketed(spark, table,
-          cur, touched.toSet, kept)
-        // a fully-deleted segment set gets NO empty replacement segment
-        // (a zero-row parquet dir has no footer to infer schema from)
-        val keptSegs = tx.stage(bucketStaged.map(_._1).getOrElse {
-          if (kept.isEmpty) Seq.empty[String]
-          else Seq(writeSegment(spark, table, kept))
-        })
-        Publish(Snapshot(cur.version + 1L,
-          cur.segments.filterNot(touched.toSet) ++ keptSegs,
-          cur.version, "delete", changes = Some(changeDir),
-          schema = cur.schema, dv = cur.dv,
-          bucket = bucketStaged.map(_._2)), (cur.version + 1L, nDeleted))
+        if (nDeleted == 0L) Done((cur.version, 0L)) else {
+          val kept = flagged.filter(!col("__graft_matched"))
+            .drop("__graft_matched")
+          // a bucketed layout (SPJ spec) survives the DML: the kept rows
+          // re-land bucket-split and the commit carries the updated spec
+          val bucketStaged = CommitLogStats.stageDmlBucketed(spark, table,
+            cur, touched.toSet, kept)
+          // a fully-deleted segment set gets NO empty replacement segment
+          // (a zero-row parquet dir has no footer to infer schema from)
+          val keptSegs = bucketStaged.fold(
+            stageRows(spark, tx, table, kept))(b => tx.stage(b._1))
+          Publish(Snapshot(cur.version + 1L,
+            cur.segments.filterNot(touched.toSet) ++ keptSegs,
+            cur.version, "delete", changes = Some(changeDir),
+            schema = cur.schema, dv = cur.dv,
+            bucket = bucketStaged.map(_._2)), (cur.version + 1L, nDeleted))
+        }
       }
     }
 
@@ -2772,7 +2832,7 @@ object CommitLog {
             Some(pre))
           val ext = stagedIdentityExtents("overwriteWhere", table,
             pinned, Some(pre))
-          val (seg, g) = writeSegmentGated(spark, table, pinned)
+          val (seg, g) = writeSegmentGated(spark, table, pinned, Some(pre))
           (Seq(seg), g, ext)
         }
       var gated = gated0
@@ -2829,18 +2889,15 @@ object CommitLog {
             if (nNew == 0L) None
             else Some(project(pinned)
               .withColumn("_change_type", lit("insert")))
-          val byType = writeChanges(spark, changeDir,
+          val byType = writeChanges(changeDir,
             (delRows ++ insRows).reduce(_.unionByName(_))
               .transform(changePhysical(cur)))
           val nDel = byType.getOrElse("delete", 0L)
           val nIns = byType.getOrElse("insert", 0L)
           // copy-on-write: survivors of the touched segments re-land
           val kept = touchedDf.map(_.filter(!matched))
-          val keptSegs = tx.stage(kept match {
-            case Some(k) if !k.isEmpty =>
-              Seq(writeSegment(spark, table, k))
-            case _ => Seq.empty[String]
-          })
+          val keptSegs =
+            kept.fold(Seq.empty[String])(stageRows(spark, tx, table, _))
           Publish(Snapshot(cur.version + 1L,
             cur.segments.filterNot(touched.toSet) ++ keptSegs ++ newSegs,
             cur.version, "replace_where", changes = Some(changeDir),
@@ -2948,9 +3005,7 @@ object CommitLog {
                 col("__graft_dv_pos")),
               Seq("__graft_dv_file", "__graft_dv_pos"), "left_anti")
               .select(dataCols.map(col): _*)
-            val keptSegs = tx.stage(
-              if (kept.isEmpty) Seq.empty[String]
-              else Seq(writeSegment(spark, table, kept)))
+            val keptSegs = stageRows(spark, tx, table, kept)
             // the untouched segments may still owe rows to the current
             // vector — carry it; its entries for rewritten-away files
             // match nothing (readers dictionary by live file paths)
@@ -3037,7 +3092,7 @@ object CommitLog {
               .withColumn("_change_type", lit("update_postimage")))
             .transform(changePhysical(cur))
           .write.mode(SaveMode.ErrorIfExists).parquet(changeDir)
-          val newSeg = tx.stage(writeSegment(spark, table, applied))
+          val newSeg = tx.stage(writeSegment(spark, table, applied, tx.cur))
           val newPairs = matches.select(
             col("__graft_dv_file").as("_dv_file"),
             col("__graft_dv_pos").as("_dv_pos"))
@@ -3118,7 +3173,7 @@ object CommitLog {
         }
         val changeDir =
           tx.stage(s"$table/_changes/${java.util.UUID.randomUUID()}")
-        val nUpdated = writeChanges(spark, changeDir,
+        val nUpdated = writeChanges(changeDir,
           touchedDf.filter(col("__graft_matched"))
             .drop("__graft_matched")
             .withColumn("_change_type", lit("update_preimage"))
@@ -3131,7 +3186,8 @@ object CommitLog {
         val bucketStaged = CommitLogStats.stageDmlBucketed(spark, table,
           cur, touched.toSet, applied(onlyMatched = false))
         val newSegs = tx.stage(bucketStaged.map(_._1).getOrElse(
-          Seq(writeSegment(spark, table, applied(onlyMatched = false)))))
+          Seq(writeSegment(spark, table, applied(onlyMatched = false),
+            tx.cur))))
         Publish(Snapshot(cur.version + 1L,
           cur.segments.filterNot(touched.toSet) ++ newSegs,
           cur.version, "update", changes = Some(changeDir),
@@ -3571,26 +3627,39 @@ object CommitLog {
     def updateSets(cs: Seq[MergeClause]) =
       cs.collect { case MergeUpdate(set, _) => set }
     // MATERIALIZE the source once (Delta's merge does the same): the
-    // body scans it up to four times per attempt — the duplicate-key
-    // guard, the touched-file probe(s), the CDC write and the
+    // body scans it up to three times per attempt — the touched-file
+    // probe(s) with the duplicate-key guard, the CDC write and the
     // copy-on-write rewrite — and a merge source is delta-sized by
-    // contract, so pinning it trades bounded cache for three full
+    // contract, so pinning it trades bounded cache for two full
     // recomputations (which for SQL merges re-run joins/aggregates).
     // Respect a caller's own pin: never persist or unpersist a frame
     // the caller already cached (it may keep using it after we return).
+    // Rows already held in memory (a local relation, a checkpointed RDD)
+    // re-read for free, and building their cache is one more Spark job.
     val srcPin = source.storageLevel ==
-      org.apache.spark.storage.StorageLevel.NONE
+      org.apache.spark.storage.StorageLevel.NONE && !inMemoryRows(source)
     if (srcPin) source.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): Unit
     try {
-    val dup = source.groupBy(keys.map(col): _*)
+    // the source's repeated keys, one row each — what the duplicate-key
+    // guard refuses
+    val dups = source.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("__n")).filter(col("__n") > 1L)
-      .limit(1).collect()
-    if (dup.nonEmpty) throw new IllegalStateException(
-      "CommitLog.mergeInto: source has duplicate keys (e.g. " +
-        keys.zipWithIndex.map { case (k, i) => s"$k=${dup(0).get(i)}" }
-          .mkString(", ") + ") — a matched row's outcome would be " +
-        "nondeterministic; deduplicate the source first")
+      .select(struct(keys.map(col): _*).as("__dup"))
+    def refuseDuplicate(dup: Option[org.apache.spark.sql.Row]): Unit =
+      dup.foreach { d =>
+        throw new IllegalStateException(
+          "CommitLog.mergeInto: source has duplicate keys (e.g. " +
+            keys.zipWithIndex.map { case (k, i) => s"$k=${d.get(i)}" }
+              .mkString(", ") + ") — a matched row's outcome would be " +
+            "nondeterministic; deduplicate the source first")
+      }
+    // the guard refuses before anything stages: a merge with matched
+    // clauses answers it in its touched-file probe's collect (inside
+    // the attempt, before the CDC staging); any other merge runs no
+    // such probe, so it asks here
+    if (matched.isEmpty)
+      refuseDuplicate(dups.limit(1).collect().headOption.map(_.getStruct(0)))
     // frames pinned inside an attempt (the rewrite frame; identity
     // allocation pins its insert candidates) are released before the
     // next attempt — a lost OCC race reallocates against fresh marks
@@ -3632,6 +3701,28 @@ object CommitLog {
             cur.schema))
           cur.dv.fold(wp)(subtractDv(spark, wp, _))
         }
+        /** ONE collect answers the touched-file probe AND the
+          * duplicate-key guard: `rows` (a `__file` per live target row,
+          * plus the probe's flags) and the source's duplicate keys (as
+          * `__file`-less rows) fold into one aggregation per file.
+          * Refuses on a duplicate; otherwise returns the per-file rows
+          * `keep` selects: `__file`, `__dup`, then `aggs`. */
+        def probeFiles(rows: DataFrame,
+            aggs: Seq[org.apache.spark.sql.Column],
+            keep: org.apache.spark.sql.Column)
+            : Array[org.apache.spark.sql.Row] = {
+          val got = rows
+            .withColumn("__dup", lit(null).cast(dups.schema("__dup").dataType))
+            .unionByName(dups.withColumn("__file", lit(null).cast("string")),
+              allowMissingColumns = true)
+            .groupBy(col("__file"))
+            .agg(first(col("__dup"), ignoreNulls = true).as("__dup"), aggs: _*)
+            .filter(col("__file").isNull || keep)
+            .collect()
+          refuseDuplicate(got.find(_.isNullAt(0))
+            .flatMap(r => Option(r.getStruct(1))))
+          got.filterNot(_.isNullAt(0))
+        }
         /** OR over a side's clause conditions (could ANY clause fire on
           * this row?) — the file-probe predicate. */
         def anyClauseHit(cs: Seq[MergeClause]): org.apache.spark.sql.Column =
@@ -3651,29 +3742,27 @@ object CommitLog {
         // previously two separate full-scan+join jobs.
         val (matchedFiles, nmbsFiles) =
           if (matched.nonEmpty && nmbsActive) {
-            val probed = tagged
+            val probed = probeFiles(tagged
               .join(srcRenamed.select(keys.map(col): _*)
                 .withColumn("__probe_m", lit(true)), keys, "left_outer")
               .select(col("__graft_dv_file").as("__file"),
                 coalesce(col("__probe_m"), lit(false)).as("__m"),
-                anyClauseHit(notMatchedBySource).as("__h"))
-              .groupBy(col("__file"))
-              .agg(max(when(col("__m"), 1).otherwise(0)).as("__am"),
+                anyClauseHit(notMatchedBySource).as("__h")),
+              Seq(max(when(col("__m"), 1).otherwise(0)).as("__am"),
                 max(when(!col("__m") && coalesce(col("__h"),
-                  lit(false)), 1).otherwise(0)).as("__ah"))
-              .filter(col("__am") === 1 || col("__ah") === 1)
-              .collect()
-            (probed.filter(_.getInt(1) == 1).map(_.getString(0)),
-              probed.filter(_.getInt(2) == 1).map(_.getString(0)))
+                  lit(false)), 1).otherwise(0)).as("__ah")),
+              col("__am") === 1 || col("__ah") === 1)
+            (probed.filter(_.getInt(2) == 1).map(_.getString(0)),
+              probed.filter(_.getInt(3) == 1).map(_.getString(0)))
           } else {
             val mf =
               if (matched.isEmpty) Array.empty[String]
-              else tagged
+              else probeFiles(tagged
                 .select((keys.map(col) :+
                   col("__graft_dv_file").as("__file")): _*)
                 .join(srcRenamed.select(keys.map(col): _*), keys,
                   "left_semi")
-                .select("__file").distinct().collect()
+                .select("__file"), Nil, lit(true))
                 .map(_.getString(0))
             // NOT-MATCHED-BY-SOURCE widens the rewrite to files holding
             // at least one unmatched row that satisfies a BY-SOURCE
@@ -3821,38 +3910,38 @@ object CommitLog {
               else recomputeGenerated(projected0, logical,
                 only = Some(omittedGens))
             // PIN the insert frame: its anti join re-scans the WHOLE
-            // table's keys, and unpinned it would run three times (the
-            // emptiness probe here, the CDC write, the rewrite) —
-            // bounded by the source delta, released per attempt
-            val pinned = tx.pin(projected)
-            if (pinned.isEmpty) None else Some(pinned)
+            // table's keys, and unpinned it would run twice (the CDC
+            // write and the rewrite) — bounded by the source delta,
+            // released per attempt
+            Some(tx.pin(projected))
           }
-        if (touched.isEmpty && inserts.isEmpty)
-          Done((cur.version, 0L, 0L, 0L))
+        val changeDir =
+          tx.stage(s"$table/_changes/${java.util.UUID.randomUUID()}")
+        // every clause records under the SAME CDC vocabulary (delete /
+        // update_pre+postimage) regardless of side or position — a
+        // change-feed consumer sees one uniform merge commit, exactly
+        // as Delta records it
+        val deletedRows = project(joined.filter(delCond || nmbsDelCond),
+            Map.empty)
+          .withColumn("_change_type", lit("delete"))
+        val insRows = inserts.map(_.withColumn("_change_type",
+          lit("insert"))).getOrElse(deletedRows.filter(lit(false)))
+        val changeRows = updateImages.foldLeft(
+          deletedRows.unionByName(insRows)) { case (acc, (pre, post)) =>
+            acc.unionByName(pre.withColumn("_change_type",
+                lit("update_preimage")))
+              .unionByName(post.withColumn("_change_type",
+                lit("update_postimage")))
+          }
+        val byType = writeChanges(changeDir,
+          changeRows.transform(changePhysical(cur)))
+        val nDel = byType.getOrElse("delete", 0L)
+        val nUpd = byType.getOrElse("update_preimage", 0L)
+        val nIns = byType.getOrElse("insert", 0L)
+        // nothing touched and nothing inserted: no commit (the staged
+        // change record is dropped with the attempt)
+        if (touched.isEmpty && nIns == 0L) Done((cur.version, 0L, 0L, 0L))
         else {
-          val changeDir =
-            tx.stage(s"$table/_changes/${java.util.UUID.randomUUID()}")
-          // every clause records under the SAME CDC vocabulary (delete /
-          // update_pre+postimage) regardless of side or position — a
-          // change-feed consumer sees one uniform merge commit, exactly
-          // as Delta records it
-          val deletedRows = project(joined.filter(delCond || nmbsDelCond),
-              Map.empty)
-            .withColumn("_change_type", lit("delete"))
-          val insRows = inserts.map(_.withColumn("_change_type",
-            lit("insert"))).getOrElse(deletedRows.filter(lit(false)))
-          val changeRows = updateImages.foldLeft(
-            deletedRows.unionByName(insRows)) { case (acc, (pre, post)) =>
-              acc.unionByName(pre.withColumn("_change_type",
-                  lit("update_preimage")))
-                .unionByName(post.withColumn("_change_type",
-                  lit("update_postimage")))
-            }
-          val byType = writeChanges(spark, changeDir,
-            changeRows.transform(changePhysical(cur)))
-          val nDel = byType.getOrElse("delete", 0L)
-          val nUpd = byType.getOrElse("update_preimage", 0L)
-          val nIns = byType.getOrElse("insert", 0L)
           // rewritten touched rows (survivors: no clause fired →
           // byte-identical pass-through; update clauses → post-images) +
           // inserts → one segment
@@ -3866,10 +3955,8 @@ object CommitLog {
           // updates AND inserts re-land bucket-split
           val bucketStaged = CommitLogStats.stageDmlBucketed(spark, table,
             cur, touched.toSet, newRows)
-          val newSegs = tx.stage(bucketStaged.map(_._1).getOrElse {
-            if (newRows.isEmpty) Seq.empty[String]
-            else Seq(writeSegment(spark, table, newRows))
-          })
+          val newSegs = bucketStaged.fold(
+            stageRows(spark, tx, table, newRows))(b => tx.stage(b._1))
           // BY DEFAULT identity columns touched by SET (ALWAYS refuses at
           // refuseGeneratedSet): fold the post-image extent into the
           // marks — the same auto-SYNC the append path gives provided
@@ -3966,10 +4053,22 @@ object CommitLog {
       s"CommitLog.changeFeed: versions ${expected.toSet -- vs.toSet} of " +
         s"$table are vacuumed — cannot reconstruct the feed after " +
         s"$afterVersion; start from a full snapshot read instead")
-    // one forward resolution pass over the whole retained history —
-    // O(V) small-file reads, not O(V × checkpointInterval)
-    val byVersion = snapshotsAsc(spark, table)
+    // one forward resolution pass over the served range and its
+    // replay base — O(range) small-file reads, not the whole retained
+    // history
+    val fromV = math.max(1L, afterVersion)
+    val byVersion = snapshotsRange(spark, table,
+      fromV, vs.lastOption.getOrElse(0L))
       .map(s => s.version -> s).toMap
+    // the base (afterVersion itself) must resolve too: a vacuum whose
+    // retain floor is afterVersion+1 leaves the range intact but the
+    // base gone, exactly as in [[changes]]
+    if (vs.nonEmpty && !byVersion.contains(fromV))
+      throw new IllegalStateException(
+        s"CommitLog.changeFeed: version $fromV of $table (the feed's " +
+          s"replay base after $afterVersion) is vacuumed — cannot " +
+          "reconstruct the feed; start from a full snapshot read " +
+          "instead")
     // Delta CDF's rule: the feed is served under the LATEST schema —
     // whenever one is recorded, NOT just when its mapping is
     // non-identity: after a DROP COLUMN the mapping can return to
@@ -3980,16 +4079,13 @@ object CommitLog {
     // logical names; schema-less tables keep the inferred fast path.
     val latestSchema = vs.lastOption.flatMap(v => byVersion(v).schema)
       .map(decodeSchema)
-    def readAdded(added: Seq[String]): DataFrame = latestSchema match {
-      case Some(sch) => readSegments(spark, added,
-        Some(encodeSchema(sch)))
-      case None => spark.read.parquet(added: _*)
-    }
+    def readAdded(added: Seq[String]): DataFrame =
+      readSegments(spark, added, latestSchema.map(encodeSchema))
     // change RECORDS project onto the latest column set too: columns
     // dropped since the record was written leave the feed, columns
     // added since serve typed NULLs (plus the record's feed stamps)
     def readChanges(dir: String): DataFrame = {
-      val raw = spark.read.parquet(dir)
+      val raw = ParquetFooters.read(spark, Seq(dir))
       latestSchema match {
         case Some(sch) =>
           val logical = fromPhysicalFrame(raw, sch)
@@ -4078,10 +4174,14 @@ object CommitLog {
       // rewritten segment holds live rows only and the new version
       // carries no dv field
       val df = readLive(spark, cur)
-      val n = df.count()
+      // without a deletion vector every footer row is live, so the
+      // footers give the count without a Spark job
+      val n = (if (cur.dv.isEmpty) ParquetFooters.rowCount(spark,
+        cur.segments) else None).getOrElse(df.count())
       val files = math.max(1L,
         (n + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-      val seg = tx.stage(writeSegment(spark, table, df.repartition(files)))
+      val seg = tx.stage(writeSegment(spark, table, df.repartition(files),
+        tx.cur))
       Publish(Snapshot(cur.version + 1L, Seq(seg), cur.version,
         "compact", schema = cur.schema), cur.version + 1L)
     }
@@ -4135,9 +4235,7 @@ object CommitLog {
             else byVersion(v - 1L).segments.toSet
           val added = snap.segments.filterNot(prev)
           if (added.isEmpty) None
-          else Some(v -> (if (snap.schema.isDefined)
-            readSegments(spark, added, snap.schema)
-          else spark.read.parquet(added: _*)))
+          else Some(v -> readSegments(spark, added, snap.schema))
         case "compact" => None // content-preserving rewrite
         case "create" => None  // zero-segment schema-only commit
         case "evolve" | "rename_column" | "drop_column" |

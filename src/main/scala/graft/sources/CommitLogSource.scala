@@ -1457,7 +1457,7 @@ class CommitLogStreamSource(spark: SparkSession, metadataPath: String,
             val d = if (snap.schema.map(CommitLog.decodeSchema)
                 .exists(s => !CommitLog.isIdentityMapping(s)))
               CommitLog.readSegments(spark, added, snap.schema)
-            else spark.read.parquet(added: _*)
+            else ParquetFooters.read(spark, added)
             Some(if (readChangeFeed)
               d.withColumn("_change_type", lit("insert"))
                 .withColumn("_commit_version", lit(ver))
@@ -1475,7 +1475,7 @@ class CommitLogStreamSource(spark: SparkSession, metadataPath: String,
             new IllegalStateException(
               s"commitlog stream: version $ver of $table is a " +
                 s"'${snap.op}' with no recorded change directory"))
-          val raw = spark.read.parquet(dir)
+          val raw = ParquetFooters.read(spark, Seq(dir))
           val mapped = snap.schema.map(CommitLog.decodeSchema)
             .filter(s => !CommitLog.isIdentityMapping(s))
             .fold(raw)(CommitLog.fromPhysicalFrame(raw, _))

@@ -576,7 +576,8 @@ object CommitLogStats {
     * first manifest names the segment. */
   def appendWithStats(spark: SparkSession, table: String, df: DataFrame,
       statsCols: Seq[String]): Long = {
-    val (seg, gated0) = CommitLog.writeSegmentGated(spark, table, df)
+    val (seg, gated0) = CommitLog.writeSegmentGated(spark, table, df,
+      CommitLog.snapshot(spark, table))
     var gated = gated0
     // the segment's file bytes carry physical names (writeSegment's
     // mapping fold); the sidecar keys must match them

@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.GraftListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,30 +24,6 @@ class CatalogSpec extends AnyFunSuite {
   // o_orderdate is TIMESTAMP(MICROS, isAdjustedToUTC=false)
   val sfDir = "perfbench/data/sf0.01"
 
-  /** `body`'s result and the Spark jobs it launched on this thread (its
-    * job group), counted after draining the listener bus. */
-  private def jobsLaunchedBy[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"catalog-spec-${System.nanoTime()}"
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            js.properties.getProperty("spark.jobGroup.id") == group)
-          n.incrementAndGet(): Unit
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "CatalogSpec")
-    val result =
-      try body
-      finally {
-        sc.clearJobGroup()
-        GraftListenerBus.drain(sc, 10000)
-        sc.removeSparkListener(listener)
-      }
-    (result, n.get)
-  }
-
   private def tempSource(): String =
     Files.createTempDirectory("graft_catalog").toString
 
@@ -58,8 +31,10 @@ class CatalogSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = tempSource()
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(s"$dir/t.parquet")
-    assert(jobsLaunchedBy(Catalog.table(spark, dir, "t"))._2 >= 1)
-    val (again, jobs) = jobsLaunchedBy(Catalog.table(spark, dir, "t"))
+    assert(SparkJobs.launchedBy(spark)(Catalog.table(spark, dir, "t"))._2
+      >= 1)
+    val (again, jobs) =
+      SparkJobs.launchedBy(spark)(Catalog.table(spark, dir, "t"))
     assert(jobs == 0)
     assert(again.columns.toSeq == Seq("id", "v"))
     assert(again.count() == 2)

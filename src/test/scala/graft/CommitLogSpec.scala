@@ -5252,8 +5252,16 @@ class CommitLogSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains("replay base") &&
         e.getMessage.contains("vacuumed"))
+      // changeFeed resolves the same range and refuses the same way
+      val f = intercept[IllegalStateException] {
+        CommitLog.changeFeed(spark, t, afterVersion = 2L)
+      }
+      assert(f.getMessage.contains("replay base") &&
+        f.getMessage.contains("vacuumed"))
       // the fully-retained feed still serves
       assert(CommitLog.changes(spark, t, afterVersion = 3L).size === 1)
+      assert(CommitLog.changeFeed(spark, t, afterVersion = 3L).count()
+        === 1L)
     } finally rm(t)
   }
 
