@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
 import graft.sources.Catalog
+import StagedBases.{rmTree, stageDir}
 
 /** Source/sink format round-trips (q115–q116): write a driver table
   * out in another interchange format, read it back, and aggregate a
@@ -29,15 +30,6 @@ object Formats {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Catalog.table(s, dir, name)
 
-  private def stageDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_${tag}_").toString
-
-  private def rmStage(s: SparkSession, stage: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q115_jsonl_roundtrip" -> ((s, dir) => {
       val d = t(s, dir, "documents")
@@ -52,7 +44,7 @@ object Formats {
           sum(TextFunctions.polyHash(col("lang"))).as("lang_hash_sum"))
         .orderBy(col("source"))
         .localCheckpoint(true)
-      rmStage(s, stage)
+      rmTree(stage)
       out
     }),
 
@@ -79,7 +71,7 @@ object Formats {
           sum(col("l_orderkey")).as("key_sum"))
         .orderBy(col("l_returnflag"), col("l_linestatus"))
         .localCheckpoint(true)
-      rmStage(s, stage)
+      rmTree(stage)
       out
     })
   )

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
 import graft.sources.Catalog
+import StagedBases.{rmTree, stageDir}
 
 /** Storage-layout round-trips (q117–q119): the three techniques a
   * 100 TB deployment leans on to avoid reading or shuffling data it
@@ -39,15 +40,6 @@ object Layouts {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Catalog.table(s, dir, name)
 
-  private def stageDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_${tag}_").toString
-
-  private def rmStage(s: SparkSession, stage: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-  }
-
   /** documents + a quoting-hostile derived column (comma, quote,
     * newline, tab all embedded). Shared by the query and LayoutSpec. */
   private[graft] def hostileDocs(s: SparkSession, dir: String): DataFrame =
@@ -79,7 +71,7 @@ object Layouts {
           sum(TextFunctions.polyHash(col("hostile"))).as("hostile_hash_sum"))
         .orderBy(col("source"))
         .localCheckpoint(true)
-      rmStage(s, stage)
+      rmTree(stage)
       out
     }),
 
@@ -100,7 +92,7 @@ object Layouts {
             .as("sum_price"))
         .orderBy(col("o_year"))
         .localCheckpoint(true)
-      rmStage(s, stage)
+      rmTree(stage)
       out
     }),
 
@@ -132,7 +124,7 @@ object Layouts {
         .localCheckpoint(true)
       s.sql(s"DROP TABLE IF EXISTS $oTab")
       s.sql(s"DROP TABLE IF EXISTS $lTab")
-      rmStage(s, stage)
+      rmTree(stage)
       out
     }),
 
@@ -159,7 +151,7 @@ object Layouts {
           sum(TextFunctions.polyHash(col("text"))).as("text_hash_sum"))
         .orderBy(col("source"))
         .localCheckpoint(true)
-      rmStage(s, stage)
+      rmTree(stage)
       out
     }),
 
@@ -190,7 +182,7 @@ object Layouts {
           sum(TextFunctions.polyHash(col("text"))).as("text_hash_sum"))
         .orderBy(col("source"))
         .localCheckpoint(true)
-      rmStage(s, stage)
+      rmTree(stage)
       out
     })
   )

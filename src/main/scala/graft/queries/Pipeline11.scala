@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.operators.{Components, FuzzyDedup}
 import graft.sources.Catalog
+import StagedBases.{rmTree, stageDir}
 
 /** Round-7 block: runtime-pruning/retrieval capabilities the suite
   * still lacked, plus the two curation-governance steps between
@@ -69,15 +70,6 @@ object Pipeline11 {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Catalog.table(s, dir, name)
 
-  private def stageDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_${tag}_").toString
-
-  private def rmStage(s: SparkSession, stage: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-  }
-
   /** BM25 fixed-point scale (6 decimal digits of score resolution). */
   private val BmScale = 1000000L
 
@@ -116,7 +108,7 @@ object Pipeline11 {
             .as("sum_price"))
         .orderBy(col("ship_year"))
         .localCheckpoint(true)
-      rmStage(s, stage)
+      rmTree(stage)
       out
     }),
 

@@ -44,8 +44,8 @@ object Pipeline13 {
         .unionByName(orders.filter(col("o_orderkey") % 7 === 0)
           .select((col("o_orderkey") + 500000000L).as("k"),
             col("o_custkey"), (col("o_totalprice") + 1).as("price")))
-      val tbl = java.nio.file.Files
-        .createTempDirectory("graft_q150_").resolve("tbl").toString
+      val root = StagedBases.stageDir("q150")
+      val tbl = s"$root/tbl"
       try {
         // the v1 bulk merge is cached and zero-copy cloned (clone v1
         // serves identical content); the incremental merge under
@@ -64,12 +64,7 @@ object Pipeline13 {
             .withColumn("version", lit(2L)))
           .orderBy(col("version"), col("k"))
           .localCheckpoint(true)
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(new java.io.File(tbl).getParentFile)
-      }
+      } finally StagedBases.rmTree(root)
     })
   )
 

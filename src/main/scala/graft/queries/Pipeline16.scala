@@ -7,6 +7,7 @@ import graft.functions.TextFunctions
 import graft.operators.TopK
 import graft.plans.{MvDef, MvRegistry}
 import graft.sources.{Catalog, Formats}
+import StagedBases.{rmTree, stageDir}
 
 /** Round-9 additions, part 3 — planning-layer and aggregation-layer
   * scale levers plus the tokenizer-training loop:
@@ -43,15 +44,6 @@ object Pipeline16 {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Catalog.table(s, dir, name)
-
-  private def stageDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_${tag}_").toString
-
-  private def rmStage(s: SparkSession, stage: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-  }
 
   private val Dec = "decimal(30,6)"
   private val BpeRounds = 3
@@ -99,7 +91,7 @@ object Pipeline16 {
             count(lit(1)).as("n_rows"))
           .orderBy(col("l_returnflag"))
           .localCheckpoint(true)
-      } finally { MvRegistry.unregister(mv); rmStage(s, stage) }
+      } finally { MvRegistry.unregister(mv); rmTree(stage) }
     }),
 
     // Bloom-gated point lookup: orders laid out by DATE (8 range
@@ -121,7 +113,7 @@ object Pipeline16 {
           col("o_totalprice"))
         .orderBy(col("o_orderkey"))
         .localCheckpoint(true)
-      rmStage(s, stage)
+      rmTree(stage)
       out
     }),
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.operators.Multimodal
 import graft.sources.Catalog
+import StagedBases.{rmTree, stageDir}
 
 /** Round-9 additions, part 4 — the inference half of tokenizer
   * training, and content-level dedup for the image modality:
@@ -44,15 +45,6 @@ object Pipeline17 {
 
   private val Rounds = 3
   private val Dims = Multimodal.FakeCodec.FeatDims
-
-  private def stageDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_${tag}_").toString
-
-  private def rmStage(s: SparkSession, stage: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true): Unit
-  }
 
   private def pairsOf(df: DataFrame, textCol: String): DataFrame =
     df.select(TextFunctions.tokens(col(textCol)).as("toks"))
@@ -124,7 +116,7 @@ object Pipeline17 {
           coalesce(col("qty_v1"), lit(0.0)).as("qty_v1"))
         .orderBy(col("l_returnflag"))
         .localCheckpoint(true)
-      rmStage(s, stage)
+      rmTree(stage)
       out
     }),
 
@@ -161,7 +153,7 @@ object Pipeline17 {
           col("qty_sum"))
         .orderBy(col("version"), col("l_returnflag"))
         .localCheckpoint(true)
-      rmStage(s, stage)
+      rmTree(stage)
       out
     }),
 
@@ -215,7 +207,7 @@ object Pipeline17 {
           col("n_rows"), col("qty_sum"))
         .orderBy(col("version"), col("ctype"), col("l_returnflag"))
         .localCheckpoint(true)
-      rmStage(s, stage)
+      rmTree(stage)
       out
     }),
 

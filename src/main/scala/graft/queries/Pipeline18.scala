@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Catalog, CommitLog, CommitLogStats}
+import graft.plans.PlanProbe
+import StagedBases.{rmTree, stageDir, withCatalog}
 
 /** Round-9 additions, part 5 — segment-level data skipping inside the
   * commit protocol (the Iceberg manifest-stats layering over the
@@ -57,15 +59,6 @@ object Pipeline18 {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Catalog.table(s, dir, name)
-
-  private def stageDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_${tag}_").toString
-
-  private def rmStage(s: SparkSession, stage: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true): Unit
-  }
 
   /** See [[StagedBases]] — immutable staged fixtures build once per
     * JVM; every mutating run works on a zero-copy clone. */
@@ -142,7 +135,7 @@ object Pipeline18 {
           .orderBy(col("l_returnflag"))
           .localCheckpoint(true)
         out
-      } finally rmStage(s, stage)
+      } finally rmTree(stage)
     }),
 
     // Ingest-scattered table: 4 shuffled appends, every segment spans
@@ -187,7 +180,7 @@ object Pipeline18 {
           .orderBy(col("l_returnflag"))
           .localCheckpoint(true)
         out
-      } finally rmStage(s, stage)
+      } finally rmTree(stage)
     }),
 
     // ADD-COLUMN schema evolution through the manifest: v1 appends a
@@ -223,7 +216,7 @@ object Pipeline18 {
           .orderBy(col("priority_class"))
           .localCheckpoint(true)
         out
-      } finally rmStage(s, stage)
+      } finally rmTree(stage)
     }),
 
     // Full three-clause MERGE INTO: target = keys ≡ 0 (mod 3), source
@@ -258,7 +251,7 @@ object Pipeline18 {
           .orderBy(col("o_orderstatus"))
           .localCheckpoint(true)
         out
-      } finally rmStage(s, stage)
+      } finally rmTree(stage)
     }),
 
     // DESCRIBE HISTORY over a deterministic five-commit lifecycle:
@@ -286,7 +279,7 @@ object Pipeline18 {
         CommitLog.history(s, tbl).drop("commit_ts")
           .orderBy(col("version"))
           .localCheckpoint(true)
-      } finally rmStage(s, stage)
+      } finally rmTree(stage)
     }),
 
     // CHECK constraints at the commit gate: a clean append lands, a
@@ -327,7 +320,7 @@ object Pipeline18 {
           .orderBy(col("o_orderstatus"))
           .localCheckpoint(true)
         out
-      } finally rmStage(s, stage)
+      } finally rmTree(stage)
     }),
 
     // Zero-copy shallow clone + restore: the clone pins the source's
@@ -364,7 +357,7 @@ object Pipeline18 {
           .orderBy(col("l_returnflag"))
           .localCheckpoint(true)
         out
-      } finally rmStage(s, stage)
+      } finally rmTree(stage)
     }),
 
     // Metadata-only COUNT/MIN/MAX: the whole answer comes from the
@@ -405,7 +398,7 @@ object Pipeline18 {
           lit(matches).as("matches_scan"))
         val out = one.localCheckpoint(true)
         out
-      } finally rmStage(s, stage)
+      } finally rmTree(stage)
     }),
 
     // Z-ORDER OPTIMIZE + 2-D box probe: scattered appends prune
@@ -451,7 +444,7 @@ object Pipeline18 {
           .withColumn("kept_after", lit(after.kept.size))
           .localCheckpoint(true)
         out
-      } finally rmStage(s, stage)
+      } finally rmTree(stage)
     }),
 
     // Key-bucketed OPTIMIZE bounds copy-on-write write amplification:
@@ -492,7 +485,7 @@ object Pipeline18 {
           .orderBy(col("o_orderstatus"))
           .localCheckpoint(true)
         out
-      } finally rmStage(s, stage)
+      } finally rmTree(stage)
     }),
 
     // The standard WRITER surface: df.write.format("commitlog") in
@@ -521,7 +514,7 @@ object Pipeline18 {
           .orderBy(col("r_regionkey"))
           .localCheckpoint(true)
         out
-      } finally rmStage(s, stage)
+      } finally rmTree(stage)
     }),
 
     // The plain-SQL surface end to end: CREATE TABLE / INSERT INTO …
@@ -534,10 +527,7 @@ object Pipeline18 {
       // live conf at every access, so re-registration with a fresh
       // stage directory takes effect (spec-pinned re-initialization)
       val cat = "graftq178"
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          "graft.sources.CommitLogCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", stage)
+      try withCatalog(s, cat, stage) {
         t(s, dir, "nation").createOrReplaceTempView("q178_nation")
         s.sql(s"CREATE TABLE $cat.ns.nations " +
           "(n_nationkey BIGINT, n_name STRING, n_regionkey BIGINT)")
@@ -559,9 +549,7 @@ object Pipeline18 {
         out
       } finally {
         s.catalog.dropTempView("q178_nation"): Unit
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        rmStage(s, stage)
+        rmTree(stage)
       }
     }),
 
@@ -569,15 +557,12 @@ object Pipeline18 {
     // through the catalog): year-sliced stats appends, then a plain
     // `SELECT … WHERE l_shipdate BETWEEN …` via spark.sql — the
     // connector's scan builder prunes the segment list from sidecars
-    // before any footer I/O. Witnessed from the EXECUTED plan: the
+    // before any footer I/O. Witnessed from the planned plan: the
     // scan's file index holds only the kept year-segments' files.
     "q179_commitlog_sql_skipping" -> ((s, dir) => {
       val stage = stageDir("q179_sqlskip")
       val cat = "graftq179"
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          "graft.sources.CommitLogCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", stage)
+      try withCatalog(s, cat, stage) {
         val tbl = s"$stage/ns/li"
         val li = t(s, dir, "lineitem").select(col("l_orderkey"),
           col("l_linenumber"), col("l_quantity"), col("l_returnflag"),
@@ -600,31 +585,24 @@ object Pipeline18 {
              |WHERE l_shipdate >= TIMESTAMP_NTZ '${fmt.format(lo)}'
              |  AND l_shipdate <= TIMESTAMP_NTZ '${fmt.format(hi)}'
              |GROUP BY l_returnflag""".stripMargin)
-        val scanned = scannedSegmentCount(q)
+        val scanned = PlanProbe.scannedSegments(q)
         q.withColumn("n_segments_scanned", lit(scanned))
           .withColumn("n_segments_live", lit(y1 - y0 + 1))
           .orderBy(col("l_returnflag"))
           .localCheckpoint(true)
-      } finally {
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        rmStage(s, stage)
-      }
+      } finally rmTree(stage)
     }),
 
     // METADATA-ONLY AGGREGATES ON THE SQL SURFACE: COUNT / MIN / MAX
     // over a fully-sidecar'd table answer from sidecars alone — the
-    // scan builder serves a LocalScan, the executed plan holds a
+    // scan builder serves a LocalScan, the planned plan holds a
     // LocalTableScan and NO file scan (witness column), and string
     // min/max — which parquet FOOTER pushdown refuses because binary
     // stats may be truncated — are served exactly.
     "q180_commitlog_sql_metadata_agg" -> ((s, dir) => {
       val stage = stageDir("q180_sqlmeta")
       val cat = "graftq180"
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          "graft.sources.CommitLogCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", stage)
+      try withCatalog(s, cat, stage) {
         val tbl = s"$stage/ns/ord"
         val o = t(s, dir, "orders").select(col("o_orderkey"),
           col("o_orderstatus"), col("o_totalprice"))
@@ -642,19 +620,14 @@ object Pipeline18 {
              |  MIN(o_totalprice) AS min_price,
              |  MAX(o_totalprice) AS max_price
              |FROM $cat.ns.ord""".stripMargin)
-        q.collect(): Unit // finalize the adaptive plan before reading it
-        val leaves = planLeaves(q.queryExecution.executedPlan)
-        val metadataOnly = leaves.exists(_.isInstanceOf[
+        val planned = PlanProbe.nodes(q)
+        val metadataOnly = planned.exists(_.isInstanceOf[
             org.apache.spark.sql.execution.LocalTableScanExec]) &&
-          !leaves.exists(_.isInstanceOf[
+          !planned.exists(_.isInstanceOf[
             org.apache.spark.sql.execution.datasources.v2.BatchScanExec])
         q.withColumn("metadata_only", lit(metadataOnly))
           .localCheckpoint(true)
-      } finally {
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        rmStage(s, stage)
-      }
+      } finally rmTree(stage)
     })
   )
 
@@ -671,10 +644,7 @@ object Pipeline18 {
     "q181_commitlog_sql_merge" -> ((s, dir) => {
       val stage = stageDir("q181_sqlmerge")
       val cat = "graftq181"
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          "graft.sources.CommitLogCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", stage)
+      try withCatalog(s, cat, stage) {
         val tbl = s"$stage/ns/t"
         val o = t(s, dir, "orders").select(col("o_orderkey"),
           col("o_custkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -710,9 +680,7 @@ object Pipeline18 {
         out
       } finally {
         s.catalog.dropTempView("q181_src"): Unit
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        rmStage(s, stage)
+        rmTree(stage)
       }
     }),
 
@@ -726,10 +694,7 @@ object Pipeline18 {
     "q188_commitlog_sql_add_columns" -> ((s, dir) => {
       val stage = stageDir("q188_ddl")
       val cat = "graftq188"
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          "graft.sources.CommitLogCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", stage)
+      try withCatalog(s, cat, stage) {
         val tbl = s"$stage/ns/o"
         val o = t(s, dir, "orders")
         CommitLog.append(s, tbl,
@@ -766,9 +731,7 @@ object Pipeline18 {
           .localCheckpoint(true)
       } finally {
         s.catalog.dropTempView("q188_src"): Unit
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        rmStage(s, stage)
+        rmTree(stage)
       }
     }),
 
@@ -783,10 +746,7 @@ object Pipeline18 {
     "q190_commitlog_sql_constraints" -> ((s, dir) => {
       val stage = stageDir("q190_cons")
       val cat = "graftq190"
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          "graft.sources.CommitLogCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", stage)
+      try withCatalog(s, cat, stage) {
         val tbl = s"$stage/ns/o"
         val o = t(s, dir, "orders").select(col("o_orderkey"),
           col("o_orderstatus"), col("o_totalprice"))
@@ -840,9 +800,7 @@ object Pipeline18 {
           .localCheckpoint(true)
       } finally {
         s.catalog.dropTempView("q190_src"): Unit
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        rmStage(s, stage)
+        rmTree(stage)
       }
     })
   )
@@ -854,15 +812,12 @@ object Pipeline18 {
     // PARTITIONED APPEND: orders lands as one segment per
     // o_orderstatus in ONE commit (partition value recorded as a
     // min=max sidecar), and a SQL equality probe on the partition
-    // column scans exactly one segment — witnessed from the executed
+    // column scans exactly one segment — witnessed from the planned
     // plan, aggregate hash-checked against the oracle.
     "q182_commitlog_partitioned" -> ((s, dir) => {
       val stage = stageDir("q182_part")
       val cat = "graftq182"
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          "graft.sources.CommitLogCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", stage)
+      try withCatalog(s, cat, stage) {
         val tbl = s"$stage/ns/ord"
         val o = t(s, dir, "orders").select(col("o_orderkey"),
           col("o_orderstatus"), col("o_totalprice"))
@@ -877,16 +832,12 @@ object Pipeline18 {
              |FROM $cat.ns.ord
              |WHERE o_orderstatus = 'F'
              |GROUP BY o_orderstatus""".stripMargin)
-        val scanned = scannedSegmentCount(q)
+        val scanned = PlanProbe.scannedSegments(q)
         q.withColumn("n_segments_scanned", lit(scanned))
           .withColumn("n_segments_live", lit(live))
           .orderBy(col("o_orderstatus"))
           .localCheckpoint(true)
-      } finally {
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        rmStage(s, stage)
-      }
+      } finally rmTree(stage)
     }),
 
     // DELETION VECTORS end-to-end (merge-on-read DELETE): two
@@ -902,10 +853,7 @@ object Pipeline18 {
     "q183_commitlog_deletion_vectors" -> ((s, dir) => {
       val stage = stageDir("q183_dv")
       val cat = "graftq183"
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          "graft.sources.CommitLogCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", stage)
+      try withCatalog(s, cat, stage) {
         val tbl = s"$stage/ns/ord"
         // shared immutable base (also q185's), zero-copy cloned —
         // the DML under measurement runs on the clone
@@ -950,11 +898,7 @@ object Pipeline18 {
           .withColumn("dv_read_matches_compacted", lit(materialized))
           .orderBy(col("o_orderstatus"))
           .localCheckpoint(true)
-      } finally {
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        rmStage(s, stage)
-      }
+      } finally rmTree(stage)
     }),
 
     // BLOOM-SIDECAR POINT LOOKUP: the skipping tier min/max cannot
@@ -968,10 +912,7 @@ object Pipeline18 {
     "q184_commitlog_bloom_lookup" -> ((s, dir) => {
       val stage = stageDir("q184_bloom")
       val cat = "graftq184"
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          "graft.sources.CommitLogCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", stage)
+      try withCatalog(s, cat, stage) {
         val tbl = s"$stage/ns/ord"
         // bloom sidecars live INSIDE segment dirs, so the bloomed
         // layout cannot be cloned-then-bloomed without dirtying the
@@ -1007,17 +948,13 @@ object Pipeline18 {
           s"""SELECT o_orderkey, o_orderstatus,
              |  CAST(o_totalprice AS DOUBLE) AS price
              |FROM $cat.ns.ord WHERE o_orderkey = $key""".stripMargin)
-        val scanned = scannedSegmentCount(q)
+        val scanned = PlanProbe.scannedSegments(q)
         q.withColumn("n_kept_minmax", lit(preBloom))
           .withColumn("n_kept_bloom", lit(postBloom))
           .withColumn("n_segments_scanned", lit(scanned))
           .orderBy(col("o_orderkey"))
           .localCheckpoint(true)
-      } finally {
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        rmStage(s, stage)
-      }
+      } finally rmTree(stage)
     }),
 
     // VECTORED UPDATE (merge-on-read): matched rows' old positions
@@ -1031,10 +968,7 @@ object Pipeline18 {
     "q185_commitlog_update_vectored" -> ((s, dir) => {
       val stage = stageDir("q185_updv")
       val cat = "graftq185"
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          "graft.sources.CommitLogCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", stage)
+      try withCatalog(s, cat, stage) {
         val tbl = s"$stage/ns/ord"
         // q183's shared immutable base, zero-copy cloned
         CommitLog.cloneTable(s, ordersTwoSegmentBase(s, dir), tbl)
@@ -1075,11 +1009,7 @@ object Pipeline18 {
           .withColumn("dv_read_matches_compacted", lit(materialized))
           .orderBy(col("o_orderstatus"))
           .localCheckpoint(true)
-      } finally {
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        rmStage(s, stage)
-      }
+      } finally rmTree(stage)
     }),
 
     // CURATION AS MERGE-ON-READ DELETES: the training-data dedup
@@ -1127,7 +1057,7 @@ object Pipeline18 {
           .withColumn("n_segment_rewrites", lit(rewrites))
           .orderBy(col("lang"))
           .localCheckpoint(true)
-      } finally rmStage(s, stage)
+      } finally rmTree(stage)
     }),
 
     // INCREMENTAL OPTIMIZE: nightly maintenance must cost O(new
@@ -1208,44 +1138,9 @@ object Pipeline18 {
           .withColumn("probe_prunes", lit(probeLe2))
           .orderBy(col("l_returnflag"))
           .localCheckpoint(true)
-      } finally rmStage(s, stage)
+      } finally rmTree(stage)
     })
   )
-
-  // ---- executed-plan witnesses for the SQL read path ------------------
-
-  private def planLeaves(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-      planLeaves(a.executedPlan)
-    case st: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-      planLeaves(st.plan)
-    case other => other.children.flatMap(planLeaves) :+ other
-  }
-
-  /** Distinct segment directories the executed plan's file scans
-    * actually read — the hard witness that sidecar pruning reached
-    * the SQL surface (file lists come from the scan's own index). */
-  private def scannedSegmentCount(df: DataFrame): Int = {
-    // NO execution: the scan's file list is fixed when the sidecar
-    // tier builds the pruned index at PLANNING — the witness reads the
-    // planned plan's file indexes, so the probe no longer pays a full
-    // execution (previously a collect() that also hauled the scan
-    // output to the driver)
-    planLeaves(df.queryExecution.executedPlan).collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        // the stats-reporting wrapper hides the FileScan — unwrap
-        (b.scan match {
-          case w: graft.sources.CommitLogStatsScan => w.innerScan
-          case s => s
-        }) match {
-          case f: org.apache.spark.sql.execution.datasources.v2.FileScan =>
-            f.fileIndex.inputFiles.toSeq
-              .map(p => p.substring(0, p.lastIndexOf('/')))
-          case _ => Seq.empty
-        }
-    }.flatten.distinct.size
-  }
 
   /** DuckDB twin of [[yearSpan]]/[[probeBounds]]: the probe window and
     * total segment count derived from the data, as the engine does. */
@@ -1496,7 +1391,7 @@ object Pipeline18 {
         |ORDER BY n_regionkey""".stripMargin,
 
     // q165's witness algebra, but the kept count comes from the SQL
-    // read path's executed plan: a year-segment is scanned iff it has
+    // read path's planned plan: a year-segment is scanned iff it has
     // a row in the probe window (segments are whole calendar years)
     "q179_commitlog_sql_skipping" ->
       s"""WITH $sqlWindow,

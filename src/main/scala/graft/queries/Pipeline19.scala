@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Catalog, CommitLog}
+import graft.plans.PlanProbe
+import StagedBases.{rmTree, stageDir, withCatalog}
 
 /** Round-12 additions: the delta-log format evolution and atomic
   * CTAS/RTAS under the oracle gate.
@@ -34,20 +36,12 @@ object Pipeline19 {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Catalog.table(s, dir, name)
 
-  private def rmTree(path: String): Unit = {
-    def go(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(go)); f.delete(): Unit
-    }
-    go(new java.io.File(path))
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q191_commitlog_checkpoint_lifecycle" -> ((s, dir) => {
       val orders = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"),
           col("o_totalprice"))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q191_").toString
+      val root = stageDir("q191")
       val tbl = s"$root/tbl"
       try {
         // 12 append commits (one per o_orderkey residue class) cross
@@ -89,14 +83,10 @@ object Pipeline19 {
     }),
 
     "q193_commitlog_column_mapping" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q193_").toString
+      val root = stageDir("q193")
       val tbl = s"$root/ns/c"
       t(s, dir, "customer").createOrReplaceTempView("q193_customer")
-      s.conf.set("spark.sql.catalog.g193",
-        "graft.sources.CommitLogCatalog")
-      s.conf.set("spark.sql.catalog.g193.root", root)
-      try {
+      try withCatalog(s, "g193", root) {
         s.sql("""CREATE TABLE g193.ns.c AS
           SELECT c_custkey, c_nationkey, c_acctbal, c_mktsegment
           FROM q193_customer""")
@@ -122,8 +112,6 @@ object Pipeline19 {
           .orderBy(col("c_nationkey"))
           .localCheckpoint(true)
       } finally {
-        s.conf.unset("spark.sql.catalog.g193")
-        s.conf.unset("spark.sql.catalog.g193.root")
         s.catalog.dropTempView("q193_customer"): Unit
         rmTree(root)
       }
@@ -132,8 +120,7 @@ object Pipeline19 {
     "q194_commitlog_vacuum_lifecycle" -> ((s, dir) => {
       val orders = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice"))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q194_").toString
+      val root = stageDir("q194")
       val tbl = s"$root/tbl"
       try {
         // 8 appends, then vacuum at retain=3: the floor (v6) must be
@@ -163,14 +150,10 @@ object Pipeline19 {
     }),
 
     "q192_commitlog_ctas" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q192_").toString
+      val root = stageDir("q192")
       val tblPath = s"$root/ns/cust"
       t(s, dir, "customer").createOrReplaceTempView("q192_customer")
-      s.conf.set("spark.sql.catalog.g192",
-        "graft.sources.CommitLogCatalog")
-      s.conf.set("spark.sql.catalog.g192.root", root)
-      try {
+      try withCatalog(s, "g192", root) {
         // CTAS: one commit lands schema + data atomically
         s.sql("""CREATE TABLE g192.ns.cust AS
           SELECT c_custkey, c_nationkey, c_acctbal
@@ -190,8 +173,6 @@ object Pipeline19 {
           .orderBy(col("c_nationkey"))
           .localCheckpoint(true)
       } finally {
-        s.conf.unset("spark.sql.catalog.g192")
-        s.conf.unset("spark.sql.catalog.g192.root")
         s.catalog.dropTempView("q192_customer"): Unit
         rmTree(root)
       }
@@ -207,8 +188,7 @@ object Pipeline19 {
     // constraint count. Final content = exactly the clean slices,
     // so the oracle re-derives everything from predicate algebra.
     "q195_commitlog_versioned_constraints" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q195_").toString
+      val root = stageDir("q195")
       val tbl = s"$root/tbl"
       try {
         val o = t(s, dir, "orders").select(col("o_orderkey"),
@@ -265,8 +245,7 @@ object Pipeline19 {
     // pre-widen version time-traveling with its own NARROW types,
     // and a narrowing attempt refused.
     "q196_commitlog_type_widening" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q196_").toString
+      val root = stageDir("q196")
       val tbl = s"$root/tbl"
       try {
         val li = t(s, dir, "lineitem")
@@ -322,8 +301,7 @@ object Pipeline19 {
     // induced corruption; the oracle pins the finding counts as
     // literals because each is fully determined by the spec.
     "q197_commitlog_fsck" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q197_").toString
+      val root = stageDir("q197")
       val tbl = s"$root/tbl"
       try {
         val o = t(s, dir, "orders")
@@ -381,8 +359,7 @@ object Pipeline19 {
     // conservatively keeping the old-era segments whose sidecars
     // never recorded that column.
     "q198_commitlog_partition_evolution" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q198_").toString
+      val root = stageDir("q198")
       val tbl = s"$root/tbl"
       try {
         val o = t(s, dir, "orders").select(col("o_orderkey"),
@@ -427,8 +404,7 @@ object Pipeline19 {
     // runnable CALL. Every signal is deterministic, so the oracle
     // pins the action multiset as literals alongside the content agg.
     "q199_commitlog_maintenance" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q199_").toString
+      val root = stageDir("q199")
       val tbl = s"$root/tbl"
       try {
         val o = t(s, dir, "orders")
@@ -475,16 +451,12 @@ object Pipeline19 {
     // bucket prunes exactly 3 of the 4 segments. The oracle
     // re-derives the per-bucket content from o_orderkey % 4.
     "q200_commitlog_generated_columns" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q200_").toString
+      val root = stageDir("q200")
       val tblPath = s"$root/ns/o"
       t(s, dir, "orders").select(col("o_orderkey"),
           col("o_totalprice"))
         .createOrReplaceTempView("q200_orders")
-      s.conf.set("spark.sql.catalog.g200",
-        "graft.sources.CommitLogCatalog")
-      s.conf.set("spark.sql.catalog.g200.root", root)
-      try {
+      try withCatalog(s, "g200", root) {
         s.sql("""CREATE TABLE g200.ns.o (o_orderkey BIGINT,
           o_totalprice DOUBLE,
           bucket BIGINT GENERATED ALWAYS AS (o_orderkey % 4))
@@ -514,8 +486,6 @@ object Pipeline19 {
           .orderBy(col("bucket"))
           .localCheckpoint(true)
       } finally {
-        s.conf.unset("spark.sql.catalog.g200")
-        s.conf.unset("spark.sql.catalog.g200.root")
         s.catalog.dropTempView("q200_orders"): Unit
         rmTree(root)
       }
@@ -533,8 +503,7 @@ object Pipeline19 {
     // and DV carry through the hash gate; the oracle re-derives all
     // three contents from orders arithmetic.
     "q201_commitlog_clone" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q201_").toString
+      val root = stageDir("q201")
       val src = s"$root/src"; val sh = s"$root/sh"; val dp = s"$root/dp"
       val orders = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -588,15 +557,11 @@ object Pipeline19 {
     // (single-writer: min=1, max=n), the payload round-trips, and
     // an explicit id refuses.
     "q202_commitlog_identity" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q202_").toString
+      val root = stageDir("q202")
       val tblPath = s"$root/ns/o"
-      s.conf.set("spark.sql.catalog.g202",
-        "graft.sources.CommitLogCatalog")
-      s.conf.set("spark.sql.catalog.g202.root", root)
       val orders = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice"))
-      try {
+      try withCatalog(s, "g202", root) {
         s.sql("""CREATE TABLE g202.ns.o (
           id BIGINT GENERATED ALWAYS AS IDENTITY,
           o_orderkey BIGINT, o_totalprice DOUBLE)""")
@@ -618,11 +583,7 @@ object Pipeline19 {
               .cast("double").as("sum_price"))
           .withColumn("refused_explicit", lit(refused))
           .localCheckpoint(true)
-      } finally {
-        s.conf.unset("spark.sql.catalog.g202")
-        s.conf.unset("spark.sql.catalog.g202.root")
-        rmTree(root)
-      }
+      } finally rmTree(root)
     }),
 
     // Column DEFAULT values (round 13, SUPPORT_COLUMN_DEFAULT_VALUE):
@@ -635,16 +596,12 @@ object Pipeline19 {
     // coalesce). The per-tier aggregate is fully derivable from
     // orders arithmetic in DuckDB.
     "q203_commitlog_column_defaults" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q203_").toString
+      val root = stageDir("q203")
       val tblPath = s"$root/ns/o"
-      s.conf.set("spark.sql.catalog.g203",
-        "graft.sources.CommitLogCatalog")
-      s.conf.set("spark.sql.catalog.g203.root", root)
       t(s, dir, "orders").select(col("o_orderkey"),
           col("o_totalprice"))
         .createOrReplaceTempView("q203_orders")
-      try {
+      try withCatalog(s, "g203", root) {
         s.sql("""CREATE TABLE g203.ns.o (o_orderkey BIGINT,
           o_totalprice DOUBLE, tier STRING DEFAULT 'standard')""")
         s.sql("""INSERT INTO g203.ns.o (o_orderkey, o_totalprice)
@@ -664,8 +621,6 @@ object Pipeline19 {
           .orderBy(col("tier"))
           .localCheckpoint(true)
       } finally {
-        s.conf.unset("spark.sql.catalog.g203")
-        s.conf.unset("spark.sql.catalog.g203.root")
         s.catalog.dropTempView("q203_orders"): Unit
         rmTree(root)
       }
@@ -681,15 +636,11 @@ object Pipeline19 {
     // arithmetic: all rows except the negated-price half-open band
     // land exactly once.
     "q204_commitlog_constraint_ddl" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q204_").toString
-      s.conf.set("spark.sql.catalog.g204",
-        "graft.sources.CommitLogCatalog")
-      s.conf.set("spark.sql.catalog.g204.root", root)
+      val root = stageDir("q204")
       t(s, dir, "orders").select(col("o_orderkey"),
           col("o_totalprice"))
         .createOrReplaceTempView("q204_orders")
-      try {
+      try withCatalog(s, "g204", root) {
         s.sql("""CREATE TABLE g204.ns.o (o_orderkey BIGINT,
           o_totalprice DOUBLE,
           CONSTRAINT price_pos CHECK (o_totalprice > 0))""")
@@ -730,8 +681,6 @@ object Pipeline19 {
           .withColumn("blocked_by_add", lit(blockedByAdd))
           .localCheckpoint(true)
       } finally {
-        s.conf.unset("spark.sql.catalog.g204")
-        s.conf.unset("spark.sql.catalog.g204.root")
         s.catalog.dropTempView("q204_orders"): Unit
         rmTree(root)
       }
@@ -751,16 +700,12 @@ object Pipeline19 {
     // orders arithmetic; surrogate-key uniqueness is pinned by
     // n_ids == n_rows per bucket through the hash gate.
     "q205_commitlog_governed_ingest" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q205_").toString
+      val root = stageDir("q205")
       val tblPath = s"$root/ns/o"
-      s.conf.set("spark.sql.catalog.g205",
-        "graft.sources.CommitLogCatalog")
-      s.conf.set("spark.sql.catalog.g205.root", root)
       val orders = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice"))
       orders.createOrReplaceTempView("q205_orders")
-      try {
+      try withCatalog(s, "g205", root) {
         s.sql("""CREATE TABLE g205.ns.o (
           row_id BIGINT GENERATED ALWAYS AS IDENTITY,
           o_orderkey BIGINT NOT NULL,
@@ -806,8 +751,6 @@ object Pipeline19 {
           .orderBy(col("bucket"))
           .localCheckpoint(true)
       } finally {
-        s.conf.unset("spark.sql.catalog.g205")
-        s.conf.unset("spark.sql.catalog.g205.root")
         s.catalog.dropTempView("q205_orders"): Unit
         rmTree(root)
       }
@@ -825,8 +768,7 @@ object Pipeline19 {
     // converted table serves the post-DML subset, and the conversion
     // appears in the change feed as the initial insert.
     "q206_commitlog_convert_parquet" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q206_").toString
+      val root = stageDir("q206")
       val src = s"$root/plain"; val tbl = s"$root/tbl"
       try {
         t(s, dir, "orders").select(col("o_orderkey"),
@@ -856,8 +798,7 @@ object Pipeline19 {
     // past-end/degenerate bounds refuse loudly (witnessed). The
     // oracle re-derives the bounded window from residue arithmetic.
     "q207_commitlog_bounded_feed" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q207_").toString
+      val root = stageDir("q207")
       val tbl = s"$root/tbl"
       val orders = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -904,8 +845,7 @@ object Pipeline19 {
     // record classifies the commit as deletes + inserts. The oracle
     // re-derives the final state and the CDC counts from orders.
     "q208_commitlog_replace_where" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q208_").toString
+      val root = stageDir("q208")
       val tbl = s"$root/tbl"
       val orders = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"),
@@ -966,8 +906,7 @@ object Pipeline19 {
     // second repair finding nothing. The oracle re-derives the
     // survivors from residue arithmetic.
     "q209_commitlog_fsck_repair" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q209_").toString
+      val root = stageDir("q209")
       val tbl = s"$root/tbl"
       val orders = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -1009,8 +948,7 @@ object Pipeline19 {
     // exact interleave + bucketing arithmetic in SQL and re-derives
     // the kept-count, as q174 does for 2-D.
     "q210_commitlog_zorder_nd" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q210_").toString
+      val root = stageDir("q210")
       val tbl = s"$root/tbl"
       val li = t(s, dir, "lineitem").select(col("l_orderkey"),
         col("l_linenumber"), col("l_partkey"), col("l_suppkey"),
@@ -1057,13 +995,8 @@ object Pipeline19 {
     // hash gate proves the co-location serves exactly the right
     // rows.
     "q211_commitlog_spj" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q211_").toString
-      try {
-        s.conf.set("spark.sql.catalog.gq211",
-          "graft.sources.CommitLogCatalog")
-        s.conf.set("spark.sql.catalog.gq211.root", root)
-        val bcast = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      val root = stageDir("q211")
+      try withCatalog(s, "gq211", root) {
         CommitLog.append(s, s"$root/ns/li",
           t(s, dir, "lineitem").select(col("l_orderkey"),
             col("l_extendedprice")))
@@ -1077,32 +1010,15 @@ object Pipeline19 {
         val joinSql = "SELECT o.o_orderstatus, l.l_extendedprice " +
           "FROM gq211.ns.li l JOIN gq211.ns.ord o " +
           "ON l.l_orderkey = o.o_orderkey"
-        def shuffles(df: org.apache.spark.sql.DataFrame): Int = {
-          // NO execution: whether the join claims a storage-partitioned
-          // layout (zero exchanges) is decided by EnsureRequirements at
-          // PLANNING — the witness reads the planned adaptive plan, so
-          // the probe no longer pays a full execution (previously a
-          // collect() that also hauled the join output to the driver)
-          def nodes(p: org.apache.spark.sql.execution.SparkPlan)
-              : Seq[org.apache.spark.sql.execution.SparkPlan] =
-            (p +: p.children.flatMap(nodes)) ++ (p match {
-              case a: org.apache.spark.sql.execution.adaptive
-                  .AdaptiveSparkPlanExec => nodes(a.executedPlan)
-              case q: org.apache.spark.sql.execution.adaptive
-                  .QueryStageExec => nodes(q.plan)
-              case _ => Seq.empty
-            })
-          nodes(df.queryExecution.executedPlan).collect {
-            case e: org.apache.spark.sql.execution.exchange
-              .ShuffleExchangeLike => e
-          }.distinct.size
-        }
-        try {
-          s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-          val spjShuffles = shuffles(s.sql(joinSql))
-          s.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
-          val controlShuffles = shuffles(s.sql(joinSql))
-          s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+        // broadcast off for the result too: the hash gate checks the
+        // rows the co-located join serves, not a broadcast's
+        PlanProbe.withConf(s,
+            "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+          val spjShuffles = PlanProbe.exchanges(s.sql(joinSql))
+          val controlShuffles = PlanProbe.withConf(s,
+              "spark.sql.sources.v2.bucketing.enabled" -> "false") {
+            PlanProbe.exchanges(s.sql(joinSql))
+          }
           s.sql(joinSql)
             .groupBy(col("o_orderstatus"))
             .agg(count(lit(1)).as("n_rows"),
@@ -1112,13 +1028,8 @@ object Pipeline19 {
             .withColumn("control_shuffled", lit(controlShuffles >= 2))
             .orderBy(col("o_orderstatus"))
             .localCheckpoint(true)
-        } finally
-          s.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq211")
-        s.conf.unset("spark.sql.catalog.gq211.root")
-        rmTree(root)
-      }
+        }
+      } finally rmTree(root)
     }),
 
     // SPJ SURVIVES DML (round 14): after the q211 layout, the orders
@@ -1130,13 +1041,8 @@ object Pipeline19 {
     // delete's write amplification staying bounded to its bucket.
     // The oracle re-derives the post-DML join aggregate.
     "q212_commitlog_spj_dml" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q212_").toString
-      try {
-        s.conf.set("spark.sql.catalog.gq212",
-          "graft.sources.CommitLogCatalog")
-        s.conf.set("spark.sql.catalog.gq212.root", root)
-        val bcast = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      val root = stageDir("q212")
+      try withCatalog(s, "gq212", root) {
         val oTbl = s"$root/ns/ord"; val lTbl = s"$root/ns/li"
         // a quarter slice of both sides: every witness (layout
         // survival, exchange count, amplification) is data-size
@@ -1182,29 +1088,9 @@ object Pipeline19 {
         val joinSql = "SELECT o.o_orderstatus, o.o_totalprice, " +
           "l.l_extendedprice FROM gq212.ns.li l JOIN gq212.ns.ord o " +
           "ON l.l_orderkey = o.o_orderkey"
-        def shuffles(df: org.apache.spark.sql.DataFrame): Int = {
-          // NO execution: whether the join claims a storage-partitioned
-          // layout (zero exchanges) is decided by EnsureRequirements at
-          // PLANNING — the witness reads the planned adaptive plan, so
-          // the probe no longer pays a full execution (previously a
-          // collect() that also hauled the join output to the driver)
-          def nodes(p: org.apache.spark.sql.execution.SparkPlan)
-              : Seq[org.apache.spark.sql.execution.SparkPlan] =
-            (p +: p.children.flatMap(nodes)) ++ (p match {
-              case a: org.apache.spark.sql.execution.adaptive
-                  .AdaptiveSparkPlanExec => nodes(a.executedPlan)
-              case qe: org.apache.spark.sql.execution.adaptive
-                  .QueryStageExec => nodes(qe.plan)
-              case _ => Seq.empty
-            })
-          nodes(df.queryExecution.executedPlan).collect {
-            case e: org.apache.spark.sql.execution.exchange
-              .ShuffleExchangeLike => e
-          }.distinct.size
-        }
-        try {
-          s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-          val spjShuffles = shuffles(s.sql(joinSql))
+        PlanProbe.withConf(s,
+            "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+          val spjShuffles = PlanProbe.exchanges(s.sql(joinSql))
           s.sql(joinSql)
             .groupBy(col("o_orderstatus"))
             .agg(count(lit(1)).as("n_rows"),
@@ -1217,13 +1103,8 @@ object Pipeline19 {
             .withColumn("amplification_bounded", lit(bounded))
             .orderBy(col("o_orderstatus"))
             .localCheckpoint(true)
-        } finally
-          s.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq212")
-        s.conf.unset("spark.sql.catalog.gq212.root")
-        rmTree(root)
-      }
+        }
+      } finally rmTree(root)
     })
   )
 

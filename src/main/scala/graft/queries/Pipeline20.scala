@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Catalog, CommitLog}
+import graft.plans.PlanProbe
+import StagedBases.{rmTree, stageDir, withCatalog}
 
 /** Round-15 additions: the last two standard-DML surfaces a migrating
   * Delta/warehouse user reaches for.
@@ -32,13 +34,6 @@ object Pipeline20 {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Catalog.table(s, dir, name)
-
-  private def rmTree(path: String): Unit = {
-    def go(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(go)); f.delete(): Unit
-    }
-    go(new java.io.File(path))
-  }
 
   /** Shared q213/q214 shape: target = keys ≡ 0 (mod 3), source =
     * keys ≡ 0 (mod 2) carrying new_price. */
@@ -90,8 +85,7 @@ object Pipeline20 {
     // the combined counts from raw orders with the same
     // delete-before-update, matched-before-by-source semantics.
     "q213_commitlog_merge_nmbs" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q213_").toString
+      val root = stageDir("q213")
       try {
         val tbl = s"$root/tbl"
         val (target, source) = mergeFixture(s, dir)
@@ -115,13 +109,9 @@ object Pipeline20 {
     // under the same delete/update_pre+postimage vocabulary), all
     // hash-checked by q213's oracle algebra.
     "q214_commitlog_sql_merge_nmbs" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q214_").toString
+      val root = stageDir("q214")
       val cat = "graftq214"
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          "graft.sources.CommitLogCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      try withCatalog(s, cat, root) {
         val tbl = s"$root/ns/t"
         val (target, source) = mergeFixture(s, dir)
         CommitLog.append(s, tbl, target)
@@ -150,8 +140,6 @@ object Pipeline20 {
           byType.getOrElse("insert", 0L))
       } finally {
         s.catalog.dropTempView("q214_src"): Unit
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
         rmTree(root)
       }
     }),
@@ -162,13 +150,9 @@ object Pipeline20 {
     // and an IN-subquery UPDATE — each a bounded copy-on-write
     // commit (version count witnessed), final state hash-matched.
     "q215_commitlog_sql_delete_subquery" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q215_").toString
+      val root = stageDir("q215")
       val cat = "graftq215"
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          "graft.sources.CommitLogCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      try withCatalog(s, cat, root) {
         val tbl = s"$root/ns/t"
         CommitLog.append(s, tbl, t(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"),
@@ -198,8 +182,6 @@ object Pipeline20 {
           .localCheckpoint(true)
       } finally {
         s.catalog.dropTempView("q215_cust"): Unit
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
         rmTree(root)
       }
     }),
@@ -213,15 +195,8 @@ object Pipeline20 {
     // slice: the witnesses are data-size independent and q211
     // already prices the full-table SPJ.
     "q216_commitlog_spj_multikey" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q216_").toString
-      try {
-        s.conf.set("spark.sql.catalog.gq216",
-          "graft.sources.CommitLogCatalog")
-        s.conf.set("spark.sql.catalog.gq216.root", root)
-        val bcast = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        val bkt0 = s.conf
-          .getOption("spark.sql.sources.v2.bucketing.enabled")
+      val root = stageDir("q216")
+      try withCatalog(s, "gq216", root) {
         val aTbl = s"$root/ns/a"; val bTbl = s"$root/ns/b"
         val li = t(s, dir, "lineitem")
           .filter(pmod(col("l_orderkey"), lit(4)) === 1)
@@ -243,30 +218,10 @@ object Pipeline20 {
           "b.l_quantity FROM gq216.ns.a a JOIN gq216.ns.b b " +
           "ON a.l_orderkey = b.l_orderkey " +
           "AND a.l_linenumber = b.l_linenumber"
-        def shuffles(df: DataFrame): Int = {
-          // NO execution: whether the join claims a storage-partitioned
-          // layout (zero exchanges) is decided by EnsureRequirements at
-          // PLANNING — the witness reads the planned adaptive plan, so
-          // the probe no longer pays a full execution (previously a
-          // collect() that also hauled the join output to the driver)
-          def nodes(p: org.apache.spark.sql.execution.SparkPlan)
-              : Seq[org.apache.spark.sql.execution.SparkPlan] =
-            (p +: p.children.flatMap(nodes)) ++ (p match {
-              case a: org.apache.spark.sql.execution.adaptive
-                  .AdaptiveSparkPlanExec => nodes(a.executedPlan)
-              case qe: org.apache.spark.sql.execution.adaptive
-                  .QueryStageExec => nodes(qe.plan)
-              case _ => Seq.empty
-            })
-          nodes(df.queryExecution.executedPlan).collect {
-            case e: org.apache.spark.sql.execution.exchange
-              .ShuffleExchangeLike => e
-          }.distinct.size
-        }
-        try {
-          s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-          s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-          val spjShuffles = shuffles(s.sql(joinSql))
+        PlanProbe.withConf(s,
+            "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+            "spark.sql.sources.v2.bucketing.enabled" -> "true") {
+          val spjShuffles = PlanProbe.exchanges(s.sql(joinSql))
           s.sql(joinSql)
             .groupBy(col("l_returnflag"))
             .agg(count(lit(1)).as("n_rows"),
@@ -278,20 +233,8 @@ object Pipeline20 {
             .withColumn("spec_aligned", lit(aligned))
             .orderBy(col("l_returnflag"))
             .localCheckpoint(true)
-        } finally {
-          s.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
-          bkt0 match {
-            case Some(v) => s.conf
-              .set("spark.sql.sources.v2.bucketing.enabled", v)
-            case None => s.conf
-              .unset("spark.sql.sources.v2.bucketing.enabled")
-          }
         }
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq216")
-        s.conf.unset("spark.sql.catalog.gq216.root")
-        rmTree(root)
-      }
+      } finally rmTree(root)
     }),
 
     // Trigger.AvailableNow catch-up-then-stop over the commit-log
@@ -302,8 +245,7 @@ object Pipeline20 {
     // termination observed; the drained union hash-matches the raw
     // batch twin through the oracle.
     "q217_streaming_available_now" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q217_").toString
+      val root = stageDir("q217")
       try {
         val tbl = s"$root/tbl"
         val sink = s"$root/sink"
@@ -353,13 +295,9 @@ object Pipeline20 {
     // recommendation goes quiet — the full advisor loop, content
     // hash-checked against the merge algebra replayed in the oracle.
     "q218_commitlog_maintenance_bucket" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q218_").toString
+      val root = stageDir("q218")
       val cat = "graftq218"
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          "graft.sources.CommitLogCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      try withCatalog(s, cat, root) {
         val tbl = s"$root/ns/t"
         import s.implicits._
         CommitLog.append(s, tbl, t(s, dir, "nation")
@@ -394,11 +332,7 @@ object Pipeline20 {
         // coerces to BIGINT — align the types explicitly
         nationResult(s, tbl, nSegsFragmented, recommended, segsAfter,
           quietAfter)
-      } finally {
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        rmTree(root)
-      }
+      } finally rmTree(root)
     }),
 
     // SIX-clause MERGE (round-15 second wave): multiple CONDITIONAL
@@ -409,13 +343,9 @@ object Pipeline20 {
     // inserts. Counts from CDC; the oracle replays the exact clause
     // cascade as CASE algebra.
     "q219_commitlog_merge_multiclause" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q219_").toString
+      val root = stageDir("q219")
       val cat = "graftq219"
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          "graft.sources.CommitLogCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      try withCatalog(s, cat, root) {
         val tbl = s"$root/ns/t"
         val (target, source) = mergeFixture(s, dir)
         CommitLog.append(s, tbl, target)
@@ -445,8 +375,6 @@ object Pipeline20 {
           byType.getOrElse("insert", 0L))
       } finally {
         s.catalog.dropTempView("q219_src"): Unit
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
         rmTree(root)
       }
     }),
@@ -459,13 +387,9 @@ object Pipeline20 {
     // pre-evolution rows read NULL, inserts carry it. The oracle
     // groups the final state by the evolved column.
     "q220_commitlog_merge_schema_evolution" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q220_").toString
+      val root = stageDir("q220")
       val cat = "graftq220"
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          "graft.sources.CommitLogCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      try withCatalog(s, cat, root) {
         val tbl = s"$root/ns/t"
         val o = t(s, dir, "orders")
         CommitLog.append(s, tbl,
@@ -496,8 +420,6 @@ object Pipeline20 {
           .localCheckpoint(true)
       } finally {
         s.catalog.dropTempView("q220_src"): Unit
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
         rmTree(root)
       }
     }),
@@ -512,8 +434,7 @@ object Pipeline20 {
     // witnesses ride as columns.
     "q221_commitlog_cdc_replication" -> ((s, dir) => {
       import graft.sources.CommitLog.MergeDelete
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q221_").toString
+      val root = stageDir("q221")
       try {
         val src = s"$root/src"; val rep = s"$root/rep"
         val o = t(s, dir, "orders").select(col("o_orderkey"),
@@ -593,8 +514,7 @@ object Pipeline20 {
     // version count = batch count witnesses the per-batch txn stamp.
     // The oracle re-derives the per-key max algebra from raw orders.
     "q222_streaming_upsert_sink" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q222_").toString
+      val root = stageDir("q222")
       try {
         val staged = s"$root/in"; val tbl = s"$root/tbl"
         val o = t(s, dir, "orders")

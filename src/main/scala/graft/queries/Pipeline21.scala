@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Catalog, CommitLog}
+import graft.plans.PlanProbe
+import StagedBases.{rmTree, stageDir, withCatalog}
 
 /** Round-16 additions: CORRELATED subqueries in SQL DML — the last
   * loud refusal a migrating warehouse user hits (`DELETE FROM t WHERE
@@ -34,13 +36,6 @@ object Pipeline21 {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Catalog.table(s, dir, name)
 
-  private def rmTree(path: String): Unit = {
-    def go(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(go)); f.delete(): Unit
-    }
-    go(new java.io.File(path))
-  }
-
   private def statusResult(s: SparkSession, tbl: String,
       nVersions: Int): DataFrame =
     CommitLog.read(s, tbl)
@@ -54,13 +49,9 @@ object Pipeline21 {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q223_commitlog_sql_delete_correlated" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q223_").toString
+      val root = stageDir("q223")
       val cat = "graftq223"
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          "graft.sources.CommitLogCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      try withCatalog(s, cat, root) {
         val tbl = s"$root/ns/t"
         CommitLog.append(s, tbl, t(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"),
@@ -86,20 +77,14 @@ object Pipeline21 {
         statusResult(s, tbl, CommitLog.versions(s, tbl).size)
       } finally {
         s.catalog.dropTempView("q223_cust"): Unit
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
         rmTree(root)
       }
     }),
 
     "q224_commitlog_sql_update_correlated_scalar" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q224_").toString
+      val root = stageDir("q224")
       val cat = "graftq224"
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          "graft.sources.CommitLogCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      try withCatalog(s, cat, root) {
         val tbl = s"$root/ns/t"
         CommitLog.append(s, tbl, t(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"),
@@ -131,8 +116,6 @@ object Pipeline21 {
         statusResult(s, tbl, CommitLog.versions(s, tbl).size)
       } finally {
         s.catalog.dropTempView("q224_li"): Unit
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
         rmTree(root)
       }
     }),
@@ -148,13 +131,9 @@ object Pipeline21 {
     // segments' narrow bytes up-converted at scan) hash-checks
     // against the oracle's replay of the same algebra.
     "q225_commitlog_merge_evolution_widening" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q225_").toString
+      val root = stageDir("q225")
       val cat = "graftq225"
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          "graft.sources.CommitLogCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      try withCatalog(s, cat, root) {
         val tbl = s"$root/ns/t"
         val o = t(s, dir, "orders")
         // the narrow-INT fixture column mods the key first: scaled
@@ -196,8 +175,6 @@ object Pipeline21 {
           .localCheckpoint(true)
       } finally {
         s.catalog.dropTempView("q225_src"): Unit
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
         rmTree(root)
       }
     }),
@@ -213,15 +190,8 @@ object Pipeline21 {
     // a version-stable no-op. All five protocol steps ride as witness
     // columns over the q216-style join algebra.
     "q226_commitlog_optimize_grid_migration" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q226_").toString
-      try {
-        s.conf.set("spark.sql.catalog.gq226",
-          "graft.sources.CommitLogCatalog")
-        s.conf.set("spark.sql.catalog.gq226.root", root)
-        val bcast = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        val bkt0 = s.conf
-          .getOption("spark.sql.sources.v2.bucketing.enabled")
+      val root = stageDir("q226")
+      try withCatalog(s, "gq226", root) {
         val aTbl = s"$root/ns/a"; val bTbl = s"$root/ns/b"
         val li = t(s, dir, "lineitem")
           .filter(pmod(col("l_orderkey"), lit(4)) === 2)
@@ -242,36 +212,16 @@ object Pipeline21 {
           "b.l_quantity FROM gq226.ns.a a JOIN gq226.ns.b b " +
           "ON a.l_orderkey = b.l_orderkey " +
           "AND a.l_linenumber = b.l_linenumber"
-        def shuffles(df: DataFrame): Int = {
-          // NO execution: whether the join claims a storage-partitioned
-          // layout (zero exchanges) is decided by EnsureRequirements at
-          // PLANNING — the witness reads the planned adaptive plan, so
-          // the probe no longer pays a full execution (previously a
-          // collect() that also hauled the join output to the driver)
-          def nodes(p: org.apache.spark.sql.execution.SparkPlan)
-              : Seq[org.apache.spark.sql.execution.SparkPlan] =
-            (p +: p.children.flatMap(nodes)) ++ (p match {
-              case a: org.apache.spark.sql.execution.adaptive
-                  .AdaptiveSparkPlanExec => nodes(a.executedPlan)
-              case qe: org.apache.spark.sql.execution.adaptive
-                  .QueryStageExec => nodes(qe.plan)
-              case _ => Seq.empty
-            })
-          nodes(df.queryExecution.executedPlan).collect {
-            case e: org.apache.spark.sql.execution.exchange
-              .ShuffleExchangeLike => e
-          }.distinct.size
-        }
-        try {
-          s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-          s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-          val legacyShuffled = shuffles(s.sql(joinSql)) > 0
+        PlanProbe.withConf(s,
+            "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+            "spark.sql.sources.v2.bucketing.enabled" -> "true") {
+          val legacyShuffled = PlanProbe.exchanges(s.sql(joinSql)) > 0
           val recommended = graft.sources.CommitLogMaintenance
             .maintenancePlan(s, aTbl).collect()
             .exists(_.getString(0) == "optimize_grid")
           s.sql("CALL gq226.system.optimize_grid(table => 'ns.a')")
           s.sql("CALL gq226.system.optimize_grid(table => 'ns.b')")
-          val spjShuffles = shuffles(s.sql(joinSql))
+          val spjShuffles = PlanProbe.exchanges(s.sql(joinSql))
           val quiet = !graft.sources.CommitLogMaintenance
             .maintenancePlan(s, aTbl).collect()
             .exists(_.getString(0) == "optimize_grid")
@@ -292,20 +242,8 @@ object Pipeline21 {
             .withColumn("recall_noop", lit(noop))
             .orderBy(col("l_returnflag"))
             .localCheckpoint(true)
-        } finally {
-          s.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
-          bkt0 match {
-            case Some(v) => s.conf
-              .set("spark.sql.sources.v2.bucketing.enabled", v)
-            case None => s.conf
-              .unset("spark.sql.sources.v2.bucketing.enabled")
-          }
         }
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq226")
-        s.conf.unset("spark.sql.catalog.gq226.root")
-        rmTree(root)
-      }
+      } finally rmTree(root)
     }),
 
     // Subqueries in MERGE clause conditions (round 16): an IN-gated
@@ -316,13 +254,9 @@ object Pipeline21 {
     // hash join; the oracle replays the same gated algebra over raw
     // orders/customer.
     "q228_commitlog_sql_merge_subquery_conditions" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q228_").toString
+      val root = stageDir("q228")
       val cat = "graftq228"
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          "graft.sources.CommitLogCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      try withCatalog(s, cat, root) {
         val tbl = s"$root/ns/t"
         val o = t(s, dir, "orders").select(col("o_orderkey"),
           col("o_custkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -352,8 +286,6 @@ object Pipeline21 {
       } finally {
         s.catalog.dropTempView("q228_src"): Unit
         s.catalog.dropTempView("q228_allow"): Unit
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
         rmTree(root)
       }
     }),
@@ -370,8 +302,7 @@ object Pipeline21 {
     // maintained index hash-matches DuckDB's brute-force top-k over
     // the corpus' FINAL state — the approximation-free oracle mode.
     "q227_ann_ivf_incremental" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q227_").toString
+      val root = stageDir("q227")
       try {
         val corpus = s"$root/corpus"
         val index = s"$root/index"
@@ -430,8 +361,7 @@ object Pipeline21 {
     // fit(initial)→encode(final)→ADC pipeline in SQL, so the
     // approximation itself is hash-verified, not just its recall.
     "q229_pq_adc_incremental" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q229_").toString
+      val root = stageDir("q229")
       try {
         val corpus = s"$root/corpus"
         val codes = s"$root/codes"

@@ -40,14 +40,28 @@ private[queries] object StagedBases {
 
   def cachedBase[T](tag: String, dir: String)(build: String => T): T =
     cache.computeIfAbsent(s"$tag|$dir|${fingerprint(dir)}", _ => {
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft_base_${tag}_").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def go(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(go)); f.delete(): Unit
-        }
-        go(new java.io.File(root))
-      }))
+      val root = stageDir(s"base_$tag")
+      Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(root)))
       build(s"$root/tbl")
     }).asInstanceOf[T]
+
+  /** A fresh local staging directory, `graft_<tag>_…` under tmp. */
+  def stageDir(tag: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft_${tag}_").toString
+
+  /** Recursive delete of a local directory; a missing path is a no-op. */
+  def rmTree(path: String): Unit = {
+    def go(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(go)); f.delete(): Unit
+    }
+    go(new java.io.File(path))
+  }
+
+  /** Runs `body` with the commit-log catalog registered as `name`
+    * over `root`; the registration is undone on exit. */
+  def withCatalog[T](s: org.apache.spark.sql.SparkSession, name: String,
+      root: String)(body: => T): T =
+    graft.plans.PlanProbe.withConf(s,
+      s"spark.sql.catalog.$name" -> "graft.sources.CommitLogCatalog",
+      s"spark.sql.catalog.$name.root" -> root)(body)
 }

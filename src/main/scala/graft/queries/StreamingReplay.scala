@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.Catalog
+import StagedBases.{rmTree, stageDir}
 
 /** Oracle-checked STREAMING execution (SURVEY §2.4 streaming row).
   *
@@ -58,11 +59,8 @@ object StreamingReplay {
   private def withReplayConf[T](s: SparkSession)(body: => T): T =
     sys.props.get("graft.replay.statePartitions") match {
       case None => body
-      case Some(np) =>
-        val k = "spark.sql.shuffle.partitions"
-        val prev = s.conf.get(k)
-        s.conf.set(k, np)
-        try body finally s.conf.set(k, prev)
+      case Some(np) => graft.plans.PlanProbe.withConf(s,
+        "spark.sql.shuffle.partitions" -> np)(body)
     }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -71,8 +69,7 @@ object StreamingReplay {
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
       // stage as multiple files so the replay is genuinely multi-micro-batch
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_q107_replay_").toString
+      val stage = stageDir("q107_replay")
       events.repartition(replayFiles).write.mode(SaveMode.Overwrite).parquet(stage)
       val stream = s.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", "1").parquet(stage)
@@ -90,9 +87,7 @@ object StreamingReplay {
         .outputMode("complete").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       // the memory sink owns the rows now — the staged files can go
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(stage), true)
+      rmTree(stage)
       s.table(sink)
         .select(unix_micros(col("session_start")).as("session_start_us"),
           unix_micros(col("session_end")).as("session_end_us"),
@@ -114,8 +109,7 @@ object StreamingReplay {
       val events = Catalog.table(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_q113_replay_").toString
+      val stage = stageDir("q113_replay")
       events.repartition(replayFiles).write.mode(SaveMode.Overwrite).parquet(stage)
       def side(tpe: String) = s.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", "1").parquet(stage)
@@ -127,9 +121,7 @@ object StreamingReplay {
       val q = joined.writeStream.format("memory").queryName(sink)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(stage), true)
+      rmTree(stage)
       s.table(sink)
         .select(col("user_id"),
           col("l_event_id").as("view_id"),
@@ -158,8 +150,7 @@ object StreamingReplay {
           col("event_type"), col("value"))
       val feed = events.unionAll(
         events.filter(pmod(col("event_id"), lit(3L)) === 0))
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_q124_replay_").toString
+      val stage = stageDir("q124_replay")
       feed.repartition(replayFiles).write.mode(SaveMode.Overwrite).parquet(stage)
       val stream = s.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", "1").parquet(stage)
@@ -169,9 +160,7 @@ object StreamingReplay {
       val q = deduped.writeStream.format("memory").queryName(sink)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(stage), true)
+      rmTree(stage)
       s.table(sink)
         .groupBy(col("event_type"))
         .agg(
@@ -205,10 +194,8 @@ object StreamingReplay {
         .select(col("user_id"), col("ts"),
           col("event_id").as("purchase_id"),
           col("value").as("purchase_value"))
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_q145_replay_").toString
-      val outDir = java.nio.file.Files
-        .createTempDirectory("graft_q145_out_").toString
+      val stage = stageDir("q145_replay")
+      val outDir = stageDir("q145_out")
       // delete both scratch dirs on EVERY exit path — a failed batch
       // write used to leak the staged parquet and the half-written
       // output dir (localCheckpoint(true) detaches `out` from the
@@ -236,10 +223,8 @@ object StreamingReplay {
           .orderBy(col("event_id"))
           .localCheckpoint(true)
       } finally {
-        val fs = org.apache.hadoop.fs.FileSystem
-          .get(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-        fs.delete(new org.apache.hadoop.fs.Path(outDir), true)
+        rmTree(stage)
+        rmTree(outDir)
       }
     }),
 
@@ -253,8 +238,7 @@ object StreamingReplay {
     // the check is exact regardless of how admission packs versions
     // into micro-batches — each version's rows arrive exactly once.
     "q164_commitlog_stream_replay" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_q164_cl_").toString
+      val stage = stageDir("q164_cl")
       val tbl = s"$stage/tbl"
       val outDir = s"$stage/out"
       try {
@@ -291,11 +275,7 @@ object StreamingReplay {
             col("n_rows"), col("qty_sum"))
           .orderBy(col("version"), col("ctype"), col("l_returnflag"))
           .localCheckpoint(true)
-      } finally {
-        val fs = org.apache.hadoop.fs.FileSystem
-          .get(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-      }
+      } finally rmTree(stage)
     })
   )
 

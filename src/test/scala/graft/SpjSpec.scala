@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.plans.PlanProbe
 import graft.sources.{CommitLog, CommitLogStats}
 
 /** Storage-partitioned joins (Iceberg's SPJ, SPARK-37375) over
@@ -23,10 +24,10 @@ import graft.sources.{CommitLog, CommitLogStats}
   */
 class SpjSpec extends AnyFunSuite {
 
-  // NOTE: the suite-specific confs (bucketing, broadcast-off) are set
-  // and RESTORED inside the test body — builder configs would leak
-  // into the shared test JVM's session and poison other suites'
-  // plan-shape assertions
+  // NOTE: the suite-specific confs (bucketing, broadcast-off) are
+  // scoped to each test body by PlanProbe.withConf — builder configs
+  // would leak into the shared test JVM's session and poison other
+  // suites' plan-shape assertions
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
@@ -62,17 +63,13 @@ class SpjSpec extends AnyFunSuite {
     import spark.implicits._
     val root = java.nio.file.Files
       .createTempDirectory("graft_spj_").toString
-    val bcast0 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val bkt0 = spark.conf
-      .getOption("spark.sql.sources.v2.bucketing.enabled")
-    try {
-      // the law is about SHUFFLE elimination — a broadcast join would
-      // trivially have none; force the hash-join path for this test
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      spark.conf.set("spark.sql.catalog.gspj",
-        "graft.sources.CommitLogCatalog")
-      spark.conf.set("spark.sql.catalog.gspj.root", root)
+    // the law is about SHUFFLE elimination — a broadcast join would
+    // trivially have none; force the hash-join path for this test
+    try PlanProbe.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.catalog.gspj" -> "graft.sources.CommitLogCatalog",
+        "spark.sql.catalog.gspj.root" -> root) {
       val a = s"$root/ns/a"; val b = s"$root/ns/b"; val c = s"$root/ns/c"
       CommitLog.append(spark, a,
         (1L to 10000L).map(k => (k, k * 2.0)).toDF("k", "v"))
@@ -95,9 +92,13 @@ class SpjSpec extends AnyFunSuite {
         "JOIN gspj.ns.b b ON a.k = b.k"
       // ---- the law: zero exchanges, both sides key-grouped --------
       val spj = spark.sql(q)
-      assert(shuffleCount(spj) === 0,
+      val nSpj = shuffleCount(spj)
+      assert(nSpj === 0,
         s"bucket-aligned join must not shuffle:\n" +
           spj.queryExecution.executedPlan)
+      // the planned witness the oracle queries report attests the
+      // executed plan
+      assert(PlanProbe.exchanges(spj) === nSpj)
       // result parity with the shuffled plan (bucketing disabled)
       spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
       val shuffled = spark.sql(q)
@@ -113,8 +114,9 @@ class SpjSpec extends AnyFunSuite {
       // ---- mismatched bucket counts: plain shuffle, right rows ----
       val mixed = spark.sql("SELECT a.k FROM gspj.ns.a a " +
         "JOIN gspj.ns.c c ON a.k = c.k")
-      assert(shuffleCount(mixed) > 0,
-        "8-vs-4 buckets must not co-locate")
+      val nMixed = shuffleCount(mixed)
+      assert(nMixed > 0, "8-vs-4 buckets must not co-locate")
+      assert(PlanProbe.exchanges(mixed) === nMixed)
       assert(mixed.collect().length === 5000)
 
       // ---- DML PRESERVES the layout: delete/update/merge re-land
@@ -191,9 +193,8 @@ class SpjSpec extends AnyFunSuite {
       // the lever: the fact's bytes never move.
       CommitLog.append(spark, s"$root/ns/d",
         (1L to 200L).map(k => (k, s"d$k")).toDF("k", "d"))
-      spark.conf.set(
-        "spark.sql.sources.v2.bucketing.shuffle.enabled", "true")
-      try {
+      PlanProbe.withConf(spark,
+          "spark.sql.sources.v2.bucketing.shuffle.enabled" -> "true") {
         val oneSide = spark.sql("SELECT a.k, d.d FROM gspj.ns.a a " +
           "JOIN gspj.ns.d d ON a.k = d.k")
         val n = shuffleCount(oneSide)
@@ -202,16 +203,14 @@ class SpjSpec extends AnyFunSuite {
             s"side to move, got $n exchanges:\n" +
             oneSide.queryExecution.executedPlan)
         assert(oneSide.collect().length === 199) // k=7 DML-deleted
-      } finally spark.conf.unset(
-        "spark.sql.sources.v2.bucketing.shuffle.enabled")
+      }
 
       // ---- partially-clustered SPJ (the skew remedy: Spark may
       // replicate the smaller side's groups instead of giving each
       // bucket one task) stays shuffle-free and value-identical
-      spark.conf.set(
-        "spark.sql.sources.v2.bucketing.partiallyClustered.enabled",
-        "true")
-      try {
+      PlanProbe.withConf(spark,
+          "spark.sql.sources.v2.bucketing.partiallyClustered.enabled" ->
+            "true") {
         val pc = spark.sql(q)
         assert(shuffleCount(pc) === 0,
           "partially-clustered SPJ must stay shuffle-free")
@@ -224,8 +223,7 @@ class SpjSpec extends AnyFunSuite {
         spark.conf.set("spark.sql.sources.v2.bucketing.enabled",
           "true")
         assert(pcRows === ctrl2 && pcRows.length === 4999)
-      } finally spark.conf.unset(
-        "spark.sql.sources.v2.bucketing.partiallyClustered.enabled")
+      }
 
       // ---- MULTI-key buckets claim SPJ via the per-key GRID layout
       // (Spark's KeyGroupedShuffleSpec requires single-reference
@@ -297,18 +295,7 @@ class SpjSpec extends AnyFunSuite {
       assert(shuffleCount(mAfterDml) === 0,
         "2-key join must stay shuffle-free after grid-preserved DML")
       assert(mAfterDml.collect().length === 2499)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast0)
-      bkt0 match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.v2.bucketing.enabled", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.v2.bucketing.enabled")
-      }
-      spark.conf.unset("spark.sql.catalog.gspj")
-      spark.conf.unset("spark.sql.catalog.gspj.root")
-      rm(root)
-    }
+    } finally rm(root)
   }
 
   /** Rewrite a table's newest manifest (and checkpoint, if one rode
@@ -344,15 +331,11 @@ class SpjSpec extends AnyFunSuite {
     import spark.implicits._
     val root = java.nio.file.Files
       .createTempDirectory("graft_spjmig_").toString
-    val bcast0 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val bkt0 = spark.conf
-      .getOption("spark.sql.sources.v2.bucketing.enabled")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      spark.conf.set("spark.sql.catalog.gmig",
-        "graft.sources.CommitLogCatalog")
-      spark.conf.set("spark.sql.catalog.gmig.root", root)
+    try PlanProbe.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.catalog.gmig" -> "graft.sources.CommitLogCatalog",
+        "spark.sql.catalog.gmig.root" -> root) {
       val a = s"$root/ns/a"; val b = s"$root/ns/b"
       def rows(n: Long) = (1L to n).map(k => (k, k % 7, k * 2.0))
       CommitLog.append(spark, a, rows(8000).toDF("k1", "k2", "v"))
@@ -409,17 +392,6 @@ class SpjSpec extends AnyFunSuite {
       spark.sql("CALL gmig.system.optimize_grid(table => 'ns.a')")
       assert(CommitLog.versions(spark, a).max === v0,
         "no-op migration must not commit")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast0)
-      bkt0 match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.v2.bucketing.enabled", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.v2.bucketing.enabled")
-      }
-      spark.conf.unset("spark.sql.catalog.gmig")
-      spark.conf.unset("spark.sql.catalog.gmig.root")
-      rm(root)
-    }
+    } finally rm(root)
   }
 }
