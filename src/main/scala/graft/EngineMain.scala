@@ -1,11 +1,15 @@
 package graft
 
-import graft.pipelines.{Jobs, Orchestrator}
+import graft.pipelines.{Jobs, LogForwarder, Orchestrator}
 
 /** Headless CLI entry point (SURVEY §3 EP3: every pipeline must be
   * runnable standalone, logging to stdout).
   *
   *   runMain graft.EngineMain <jobName|all> [sfDir] [outDir] [parallel]
+  *
+  * `all` runs the five jobs over their declared table dependencies
+  * (`Jobs.standardDeps`); a named job runs alone. `parallel` runs up
+  * to four ready jobs at once instead of one.
   *
   * Exit code 0 only if every requested job succeeded — the contract
   * the reference's run-all queue keys on (`ETL.py:426-427`).
@@ -17,7 +21,7 @@ object EngineMain {
     val outDir = args.lift(2).getOrElse("/tmp/graft_out")
     val spark = EngineSession.create("graft-engine")
     try {
-      val listener = new Orchestrator.ProgressListener
+      val listener = new LogForwarder
       val runner = new Orchestrator.PipelineRunner(spark, Some(listener))
       val jobs = Jobs.standardJobs(sfDir, outDir)
       val selected =
@@ -29,15 +33,10 @@ object EngineMain {
         }
       // run-all rides the declared table-dependency DAG (EP2's
       // generalization — identical order to the reference's linear
-      // queue on the chain, but an unrelated branch survives a
-      // failure); `parallel` overlaps independent branches; a single
-      // selected job runs directly
-      val results =
-        if (jobName == "all" && args.lift(3).contains("parallel"))
-          runner.runDagParallel(selected, Jobs.standardDeps)
-        else if (jobName == "all")
-          runner.runDag(selected, Jobs.standardDeps)
-        else runner.runAll(selected)
+      // queue on the chain, but an unrelated branch survives a failure)
+      val results = runner.runDag(selected,
+        if (jobName == "all") Jobs.standardDeps else Map.empty,
+        parallelism = if (args.lift(3).contains("parallel")) 4 else 1)
       // progress events ride the async listener bus; deliver them all
       // before reading the counters (the runner only drains lazily)
       runner.drainEvents()

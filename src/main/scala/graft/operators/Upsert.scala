@@ -36,27 +36,27 @@ object IdempotentInsert {
       .select(incoming.columns.toSeq.map(c => col(s"`$c`")): _*)
   }
 
+  /** The target's one read relation, which serves as existence probe,
+    * schema gate and anti-join side. `None` ("first run") means the path
+    * is missing (PATH_NOT_FOUND) or an existing-but-empty directory
+    * (UNABLE_TO_INFER_SCHEMA). Any other read failure (IO, permissions,
+    * corruption) aborts: treating it as empty would double-insert on a
+    * re-run. */
+  private def existing(spark: SparkSession, path: String)
+      : Option[DataFrame] =
+    try Some(spark.read.parquet(path))
+    catch {
+      case e: org.apache.spark.sql.AnalysisException
+          if e.getErrorClass == "PATH_NOT_FOUND" ||
+            e.getErrorClass == "UNABLE_TO_INFER_SCHEMA" => None
+    }
+
   /** Variant (a): idempotent append into a parquet directory.
     * Returns the number of rows actually inserted (second identical
     * run returns 0 — the S4 idempotence law). */
   def intoParquet(spark: SparkSession, incoming: DataFrame, path: String,
       keys: Seq[String]): Long = {
-    // only PATH_NOT_FOUND means "first run" — any other failure (IO,
-    // permissions, corruption) must abort, or a re-run would treat the
-    // target as empty and double-insert
-    // one read relation serves existence probe, schema gate and
-    // anti-join; "first run" = path missing OR an existing-but-empty
-    // directory (UNABLE_TO_INFER_SCHEMA). Any OTHER read failure (IO,
-    // permissions, corruption) must abort — treating it as empty would
-    // double-insert on re-run.
-    val existing =
-      try Some(spark.read.parquet(path))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getErrorClass == "PATH_NOT_FOUND" ||
-              e.getErrorClass == "UNABLE_TO_INFER_SCHEMA" => None
-      }
-    val toInsert = existing match {
+    val toInsert = existing(spark, path) match {
       case Some(ex) =>
         // schema drift into an append target silently corrupts the
         // table — gate on the existing schema first (SURVEY O10)
@@ -90,14 +90,7 @@ object IdempotentInsert {
       else graft.operators.Dedup.latestPerKey(incoming,
         partition = keys.map(col),
         order = Seq(struct(payloadCols.map(col): _*).desc))
-    val existing =
-      try Some(spark.read.parquet(path))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getErrorClass == "PATH_NOT_FOUND" ||
-              e.getErrorClass == "UNABLE_TO_INFER_SCHEMA" => None
-      }
-    existing match {
+    existing(spark, path) match {
       case None =>
         val staged = incOne.persist()
         val n = staged.count()

@@ -1,6 +1,7 @@
 package graft.pipelines
 
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler._
 
@@ -15,19 +16,30 @@ import org.apache.spark.scheduler._
   * failures, outcome — exactly the surface the reference's log pane
   * renders.
   *
+  * O7: it also counts real task progress per job group — tasks of the
+  * group's submitted stages against its successfully ended tasks —
+  * in place of the reference's simulated 150 ms timer bar
+  * (`ETL.py:385-390`). The sink defaults to a no-op for callers that
+  * only read [[progress]].
+  *
   * Delivery is the Spark listener bus (async); the runner's own
   * lifecycle events are emitted synchronously. Per-group state is
   * evicted by [[evict]] (the runner resets a group at the start of a
   * re-run), so a long-lived session's maps are bounded by the number
   * of distinct jobs, never the number of runs.
   */
-final class LogForwarder(sink: LogForwarder.LogEvent => Unit)
+final class LogForwarder(sink: LogForwarder.LogEvent => Unit = _ => ())
     extends SparkListener {
 
   import LogForwarder._
 
   private val stageGroup = new ConcurrentHashMap[Int, String]()
   private val jobGroup = new ConcurrentHashMap[Int, String]()
+  private val total = new ConcurrentHashMap[String, AtomicLong]()
+  private val done = new ConcurrentHashMap[String, AtomicLong]()
+
+  private def counter(m: ConcurrentHashMap[String, AtomicLong], g: String) =
+    m.computeIfAbsent(g, _ => new AtomicLong())
 
   def emit(level: String, group: String, source: String, msg: String): Unit =
     sink(LogEvent(level, Option(group), source, msg))
@@ -56,6 +68,7 @@ final class LogForwarder(sink: LogForwarder.LogEvent => Unit)
       .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
       .foreach { g =>
         stageGroup.put(e.stageInfo.stageId, g)
+        counter(total, g).addAndGet(e.stageInfo.numTasks.toLong)
         emit(Debug, g, "scheduler",
           s"stage ${e.stageInfo.stageId} submitted " +
             s"(${e.stageInfo.numTasks} tasks)")
@@ -75,8 +88,11 @@ final class LogForwarder(sink: LogForwarder.LogEvent => Unit)
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
     val g = stageGroup.get(e.stageId)
+    // failed/killed task ends are not progress (their stage attempt
+    // re-adds its tasks to `total` on resubmission); speculative
+    // duplicates are rare enough to accept
     if (g != null) e.reason match {
-      case org.apache.spark.Success => ()
+      case org.apache.spark.Success => counter(done, g).incrementAndGet(): Unit
       case _: org.apache.spark.TaskKilled => () // cancellation, not error
       case reason =>
         emit(Warn, g, "executor",
@@ -85,8 +101,17 @@ final class LogForwarder(sink: LogForwarder.LogEvent => Unit)
     }
   }
 
-  /** Drop per-group scheduler state (stage/job mappings) for `group`. */
+  /** (completedTasks, totalTasks) for a job group. */
+  def progress(group: String): (Long, Long) =
+    (counter(done, group).get(), counter(total, group).get())
+
+  /** Drop per-group scheduler state (stage/job mappings and task
+    * counters) for `group` — the runner calls it at the start of a
+    * re-run (fresh progress per run); a UI may call it when it stops
+    * displaying a group. */
   def evict(group: String): Unit = {
+    total.remove(group)
+    done.remove(group)
     stageGroup.entrySet.removeIf(en => en.getValue == group)
     jobGroup.entrySet.removeIf(en => en.getValue == group)
   }

@@ -1,11 +1,11 @@
 package graft.pipelines
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+import java.util.concurrent.{ConcurrentHashMap, Executor, ExecutorCompletionService, Executors}
+import java.util.concurrent.atomic.AtomicReference
 
+import scala.annotation.tailrec
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Pipeline orchestration (SURVEY §2.3, O1-O7) — the Spark-side
@@ -39,70 +39,26 @@ object Orchestrator {
   final case class JobResult(job: PipelineJob, status: JobStatus,
       wallMillis: Long)
 
-  /** O7: real progress — completed/total tasks per job group, mapped
-    * task → stage → group via the stage-submitted properties. */
-  final class ProgressListener extends SparkListener {
-    private val stageGroup = new ConcurrentHashMap[Int, String]()
-    private val total = new ConcurrentHashMap[String, AtomicLong]()
-    private val done = new ConcurrentHashMap[String, AtomicLong]()
-
-    private def counter(m: ConcurrentHashMap[String, AtomicLong], g: String) =
-      m.computeIfAbsent(g, _ => new AtomicLong())
-
-    override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
-      Option(s.properties)
-        .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        .foreach { g =>
-          stageGroup.put(s.stageInfo.stageId, g)
-          counter(total, g).addAndGet(s.stageInfo.numTasks.toLong)
-        }
-
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      // failed/killed task ends are not progress (their stage attempt
-      // re-adds its tasks to `total` on resubmission); speculative
-      // duplicates are rare enough to accept
-      val g = stageGroup.get(t.stageId)
-      if (g != null && t.reason == org.apache.spark.Success)
-        counter(done, g).incrementAndGet()
-    }
-
-    /** (completedTasks, totalTasks) for a job group. */
-    def progress(group: String): (Long, Long) =
-      (counter(done, group).get(), counter(total, group).get())
-
-    /** Drop a group's counters and stage mappings — called by the
-      * runner at the start of a re-run (fresh progress per run) and
-      * available to a UI when it stops displaying a group, so a
-      * long-lived session's maps stay bounded by distinct jobs. */
-    def evict(group: String): Unit = {
-      total.remove(group)
-      done.remove(group)
-      stageGroup.entrySet.removeIf(e => e.getValue == group)
-    }
-  }
-
   /** Runs jobs with per-job status, timing, job-group isolation and
     * fail-fast queueing. Thread-safe status map so a monitoring thread
     * (the reference's UI role) can poll. */
   final class PipelineRunner(spark: SparkSession,
-      listener: Option[ProgressListener] = None,
-      logForwarder: Option[LogForwarder] = None) {
+      listener: Option[LogForwarder] = None) {
 
     private val statuses =
       new ConcurrentHashMap[String, AtomicReference[JobStatus]]()
     private val ranOnce = ConcurrentHashMap.newKeySet[String]()
     listener.foreach(spark.sparkContext.addSparkListener)
-    logForwarder.foreach(spark.sparkContext.addSparkListener)
 
     def status(name: String): JobStatus =
       Option(statuses.get(name)).map(_.get()).getOrElse(Pending)
 
     /** Deliver all queued scheduler events to the listeners (bounded
-      * wait). Call before reading [[ProgressListener.progress]] when
+      * wait). Call before reading [[LogForwarder.progress]] when
       * exact post-run counts matter — scheduler events ride an async
       * bus and may lag a completed job by milliseconds. */
     def drainEvents(timeoutMillis: Long = 10000): Unit =
-      if (listener.nonEmpty || logForwarder.nonEmpty)
+      if (listener.nonEmpty)
         org.apache.spark.GraftListenerBus.drain(spark.sparkContext,
           timeoutMillis)
 
@@ -120,8 +76,7 @@ object Orchestrator {
       // traffic — never pay a bus-drain per job.
       if (!ranOnce.add(g)) drainEvents()
       listener.foreach(_.evict(g))
-      logForwarder.foreach(_.evict(g))
-      logForwarder.foreach(_.emit(LogForwarder.Info, g, "runner",
+      listener.foreach(_.emit(LogForwarder.Info, g, "runner",
         s"job '${job.name}' (${job.label}) started"))
       val t0 = System.nanoTime()
       spark.sparkContext.setJobGroup(g,
@@ -130,14 +85,14 @@ object Orchestrator {
         job.run(spark)
         ref.set(Succeeded)
         val ms = (System.nanoTime() - t0) / 1000000
-        logForwarder.foreach(_.emit(LogForwarder.Info, g, "runner",
+        listener.foreach(_.emit(LogForwarder.Info, g, "runner",
           s"job '${job.name}' succeeded in ${ms} ms"))
         JobResult(job, Succeeded, ms)
       } catch {
         case e: Throwable =>
           ref.set(Failed(e))
           val ms = (System.nanoTime() - t0) / 1000000
-          logForwarder.foreach(_.emit(LogForwarder.Error, g, "runner",
+          listener.foreach(_.emit(LogForwarder.Error, g, "runner",
             s"job '${job.name}' FAILED after ${ms} ms: ${e.getMessage}"))
           JobResult(job, Failed(e), ms)
       } finally {
@@ -148,137 +103,80 @@ object Orchestrator {
     /** O3/EP2: sequential queue, fail-fast — the next job starts only
       * if the previous succeeded (`ETL.py:426-427`); on failure the
       * remaining queue is abandoned (`ETL.py:419`), and remaining jobs
-      * keep status Pending. */
-    def runAll(jobs: Seq[PipelineJob]): Seq[JobResult] = {
-      val out = mutable.Buffer[JobResult]()
-      val it = jobs.iterator
-      var ok = true
-      while (ok && it.hasNext) {
-        val r = runOne(it.next())
-        out += r
-        ok = r.status == Succeeded
-      }
-      out.toSeq
-    }
+      * keep status Pending. A chain DAG: each job depends on the one
+      * before it. */
+    def runAll(jobs: Seq[PipelineJob]): Seq[JobResult] =
+      runDag(jobs, jobs.zip(jobs.drop(1)).map { case (a, b) =>
+        b.name -> Seq(a.name) }.toMap)
 
     /** DAG generalization of the linear queue (SURVEY §3 EP2 note):
-      * run in dependency order; a failure marks every transitive
-      * dependent as never-run (status stays Pending) while independent
-      * branches continue — strictly more useful than the reference's
-      * whole-queue abort, and identical to it on a linear chain.
-      * `deps`: job name → names it depends on. Cycles are a hard error. */
-    def runDag(jobs: Seq[PipelineJob], deps: Map[String, Seq[String]])
-        : Seq[JobResult] = {
-      val byName = jobs.map(j => j.name -> j).toMap
-      deps.foreach { case (j, ds) =>
-        require(byName.contains(j), s"unknown job in deps: $j")
-        ds.foreach(d => require(byName.contains(d), s"unknown dep: $d"))
-      }
-      // Kahn topological order, stable by input position
-      val order = scala.collection.mutable.ArrayBuffer[PipelineJob]()
-      val pending = scala.collection.mutable.LinkedHashSet(jobs.map(_.name): _*)
-      while (pending.nonEmpty) {
-        val ready = pending.filter(n =>
-          deps.getOrElse(n, Nil).forall(d => !pending.contains(d)))
-        require(ready.nonEmpty, s"dependency cycle among: $pending")
-        ready.foreach { n => order += byName(n); pending -= n }
-      }
-      val failed = scala.collection.mutable.Set[String]()
-      order.toSeq.flatMap { job =>
-        val blockedBy = deps.getOrElse(job.name, Nil).filter(failed)
-        if (blockedBy.nonEmpty) { failed += job.name; None }
-        else {
-          val r = runOne(job)
-          if (r.status != Succeeded) failed += job.name
-          Some(r)
-        }
-      }
+      * run in dependency order; a failure leaves every transitive
+      * dependent never-run (status stays Pending, no result) while
+      * independent branches continue — strictly more useful than the
+      * reference's whole-queue abort, and identical to it on a chain.
+      * `deps`: job name → names it depends on; repeated job names,
+      * unknown names and cycles are rejected before anything runs.
+      *
+      * Up to `parallelism` ready jobs are in flight at once, always
+      * the first ready ones in [[order]]. At 1 every job runs inline
+      * on the calling thread in that order; above 1 they run on a
+      * fixed pool of that size (`setJobGroup` is thread-local, so
+      * per-job groups, cancellation and progress hold per worker) and
+      * results return in completion order. */
+    def runDag(jobs: Seq[PipelineJob], deps: Map[String, Seq[String]],
+        parallelism: Int = 1): Seq[JobResult] = {
+      require(parallelism >= 1, "parallelism must be >= 1")
+      val queue = order(jobs, deps)
+      val pool =
+        Option.when(parallelism > 1)(Executors.newFixedThreadPool(parallelism))
+      val finished =
+        new ExecutorCompletionService[JobResult](pool.getOrElse[Executor](_.run()))
+      val started = mutable.Set[String]()
+      val succeeded = mutable.Set[String]()
+      val results = mutable.Buffer[JobResult]()
+      def next = queue.find(j => !started(j.name) &&
+        deps.getOrElse(j.name, Nil).forall(succeeded))
+      var inFlight = 0
+      try {
+        while (inFlight > 0 || next.nonEmpty)
+          next.filter(_ => inFlight < parallelism) match {
+            case Some(j) =>
+              started += j.name
+              finished.submit(() => runOne(j))
+              inFlight += 1
+            case None =>
+              val r = finished.take().get()
+              inFlight -= 1
+              results += r
+              if (r.status == Succeeded) succeeded += r.job.name
+          }
+        results.toSeq
+      } finally pool.foreach(_.shutdown())
     }
 
-    /** [[runDag]] with CONCURRENT independent branches: jobs whose
-      * dependencies are all satisfied run simultaneously on a bounded
-      * pool (Spark schedules concurrent jobs from one session fine —
-      * `setJobGroup` is thread-local, so per-job groups, cancellation
-      * and progress isolation all hold per worker thread). Failure
-      * semantics match [[runDag]]: a failure prunes its TRANSITIVE
-      * dependents (never started, status Pending) while everything
-      * else keeps running to completion. Results return in job
-      * COMPLETION order; `parallelism` bounds in-flight jobs (beyond
-      * it, ready jobs queue). The wall-clock win is real for the
-      * 5-pipeline registry: the four independent view jobs overlap
-      * instead of serializing. */
-    def runDagParallel(jobs: Seq[PipelineJob],
-        deps: Map[String, Seq[String]], parallelism: Int = 4)
-        : Seq[JobResult] = {
-      require(parallelism >= 1, "parallelism must be >= 1")
-      // an empty DAG completes trivially — without this, the latch
-      // (counted down only inside settle()) would never release
-      if (jobs.isEmpty) return Seq.empty
-      val byName = jobs.map(j => j.name -> j).toMap
+    /** Kahn topological order, level by level and stable by input
+      * position. */
+    private def order(jobs: Seq[PipelineJob],
+        deps: Map[String, Seq[String]]): Seq[PipelineJob] = {
+      val names = jobs.map(_.name)
+      require(names.distinct.size == names.size,
+        s"repeated job names: ${names.diff(names.distinct).mkString(", ")}")
       deps.foreach { case (j, ds) =>
-        require(byName.contains(j), s"unknown job in deps: $j")
-        ds.foreach(d => require(byName.contains(d), s"unknown dep: $d"))
+        require(names.contains(j), s"unknown job in deps: $j")
+        ds.foreach(d => require(names.contains(d), s"unknown dep: $d"))
       }
-      // cycle check up front (Kahn) — fail before launching anything
-      val pending = scala.collection.mutable.LinkedHashSet(
-        jobs.map(_.name): _*)
-      while (pending.nonEmpty) {
-        val ready = pending.filter(n =>
-          deps.getOrElse(n, Nil).forall(d => !pending.contains(d)))
-        require(ready.nonEmpty, s"dependency cycle among: $pending")
-        pending --= ready
-      }
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(parallelism)
-      val lock = new Object
-      val done = scala.collection.mutable.Set[String]()
-      val failed = scala.collection.mutable.Set[String]()
-      val launched = scala.collection.mutable.Set[String]()
-      val results = scala.collection.mutable.Buffer[JobResult]()
-      val remaining = new java.util.concurrent.atomic.AtomicInteger(
-        jobs.size)
-      val all = new java.util.concurrent.CountDownLatch(1)
-      def transitiveDependents(of: String): Seq[String] =
-        jobs.map(_.name).filter { j =>
-          def reaches(x: String, seen: Set[String]): Boolean =
-            !seen(x) && deps.getOrElse(x, Nil)
-              .exists(d => d == of || reaches(d, seen + x))
-          reaches(j, Set.empty)
+      @tailrec def levels(pending: Seq[PipelineJob], done: Seq[PipelineJob])
+          : Seq[PipelineJob] =
+        if (pending.isEmpty) done
+        else {
+          val waiting = pending.map(_.name).toSet
+          val (ready, rest) = pending.partition(j =>
+            !deps.getOrElse(j.name, Nil).exists(waiting))
+          require(ready.nonEmpty,
+            s"dependency cycle among: ${waiting.mkString(", ")}")
+          levels(rest, done ++ ready)
         }
-      def settle(n: Int): Unit =
-        if (remaining.addAndGet(-n) <= 0) all.countDown()
-      def launchReady(): Unit = lock.synchronized {
-        jobs.filter { j =>
-          !launched(j.name) && !failed(j.name) &&
-            deps.getOrElse(j.name, Nil).forall(done)
-        }.foreach { j =>
-          launched += j.name
-          pool.execute(() => {
-            val r = runOne(j)
-            lock.synchronized {
-              results += r
-              if (r.status == Succeeded) done += j.name
-              else {
-                // prune every transitive dependent NOW (they can
-                // never become ready; counting them here lets the
-                // latch settle)
-                val pruned = transitiveDependents(j.name)
-                  .filterNot(launched).filterNot(failed)
-                failed += j.name
-                failed ++= pruned
-                settle(pruned.size)
-              }
-            }
-            settle(1)
-            launchReady()
-          })
-        }
-      }
-      try {
-        launchReady()
-        all.await()
-        results.toSeq
-      } finally { pool.shutdown(): Unit }
+      levels(jobs, Seq.empty)
     }
 
     /** O4: cooperative cancellation of a running job's Spark stages. */

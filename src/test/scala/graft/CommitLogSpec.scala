@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.plans.PlanProbe
 import graft.sources.CommitLog
 
 /** The versioned-manifest commit protocol: write-write safety under
@@ -4010,19 +4011,16 @@ class CommitLogSpec extends AnyFunSuite {
       }
       // isolate the HINT from the planner's own small-table choice:
       // with autoBroadcast off, only the hint can broadcast
-      val priorThresh = spark.conf.get(
-        "spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
+      PlanProbe.withConf(spark,
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         // under the cap: the hint forces the broadcast regime
         assert(hasBcastAnti && liveIds == (5L until 20L))
         // past the cap the hint is dropped — the anti-join shuffles
         // (no forced hundreds-of-MB broadcast), identical result
-        spark.conf.set("spark.graft.dv.broadcastRows", "0")
-        try assert(!hasBcastAnti && liveIds == (5L until 20L))
-        finally spark.conf.unset("spark.graft.dv.broadcastRows")
-      } finally spark.conf.set(
-        "spark.sql.autoBroadcastJoinThreshold", priorThresh)
+        PlanProbe.withConf(spark, "spark.graft.dv.broadcastRows" -> "0") {
+          assert(!hasBcastAnti && liveIds == (5L until 20L))
+        }
+      }
     } finally rm(t)
   }
 

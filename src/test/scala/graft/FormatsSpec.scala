@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.plans.PlanProbe
 import graft.sources.{Catalog, Formats}
 
 /** Format round-trips and partition-pruning evidence. */
@@ -57,9 +58,7 @@ class FormatsSpec extends AnyFunSuite {
     Formats.writeBucketed(ord, "b_orders", Seq("l_orderkey"), 8)
     // force the sort-merge path (tiny test tables would broadcast and
     // the planner then ignores bucketing entirely)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    PlanProbe.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("b_lineitem").join(spark.table("b_orders"),
         Seq("l_orderkey"))
       val plan = joined.queryExecution.executedPlan.toString
@@ -69,7 +68,7 @@ class FormatsSpec extends AnyFunSuite {
       assert(plan.contains("Bucketed: true"), plan)
       val expected = li.join(ord, Seq("l_orderkey")).count()
       assert(joined.count() == expected)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("partitioned write prunes partitions at the scan") {

@@ -7,6 +7,8 @@ import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.plans.PlanProbe
+
 /** Plan-level laws for the storage-layout block (q117–q119). The
   * value-level gate is the DuckDB oracle; these pin the properties the
   * oracle can't see — that the partition predicate actually prunes
@@ -269,9 +271,8 @@ class LayoutSpec extends AnyFunSuite
     val lTab = "graft_spec_bkt_lineitem"
     // disable broadcast so the bucketing (not a broadcast) is what
     // removes the exchange — this is the 100 TB fact⋈fact shape
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try PlanProbe.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       sources.Catalog.table(spark, dir, "orders").select("o_orderkey", "o_custkey")
         .write.mode(SaveMode.Overwrite).format("parquet")
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
@@ -301,7 +302,6 @@ class LayoutSpec extends AnyFunSuite
       assert(j.count() === plain.count())
       assert(j.exceptAll(plain).count() === 0)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
       spark.sql(s"DROP TABLE IF EXISTS $oTab")
       spark.sql(s"DROP TABLE IF EXISTS $lTab")
       rm(stage)

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipelines.Jobs
+import graft.pipelines.{Jobs, LogForwarder}
 import graft.pipelines.Orchestrator._
 
 /** Orchestrator semantics (SURVEY O1-O7): fail-fast queue, status
@@ -41,8 +41,8 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(runner.status("j3") == Pending) // never started
   }
 
-  test("ProgressListener reports real task counts for a job group") {
-    val listener = new ProgressListener
+  test("LogForwarder reports real task counts for a job group") {
+    val listener = new LogForwarder
     val runner = new PipelineRunner(spark, Some(listener))
     val j = job("progress_job",
       s => { s.range(0, 1000, 1, 8).selectExpr("sum(id)").collect(); () })
@@ -55,11 +55,10 @@ class OrchestratorSpec extends AnyFunSuite {
   }
 
   test("LogForwarder: failed job emits structured error events (O5)") {
-    import graft.pipelines.LogForwarder
     val events =
       new java.util.concurrent.ConcurrentLinkedQueue[LogForwarder.LogEvent]()
     val fwd = new LogForwarder(events.add(_))
-    val runner = new PipelineRunner(spark, logForwarder = Some(fwd))
+    val runner = new PipelineRunner(spark, Some(fwd))
     val bad = job("bad_job", s => {
       // real distributed failure: tasks throw on executors
       s.range(0, 8, 1, 4).rdd.foreach(_ => sys.error("task boom")); ()
@@ -95,8 +94,8 @@ class OrchestratorSpec extends AnyFunSuite {
       e.source == "runner" && e.message.contains("succeeded")))
   }
 
-  test("ProgressListener evicts per-group state and resets on re-run") {
-    val listener = new ProgressListener
+  test("LogForwarder evicts per-group state and resets on re-run") {
+    val listener = new LogForwarder
     val runner = new PipelineRunner(spark, Some(listener))
     val j = job("evict_job",
       s => { s.range(0, 100, 1, 4).selectExpr("sum(id)").collect(); () })
@@ -215,22 +214,37 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(bumped.toSeq == orig.map(_ + 5.0).toSeq)
   }
 
+  /** The DAG tests run at both scheduler modes: inline on the calling
+    * thread (1) and on a pool (2). */
+  val parallelisms = Seq(1, 2)
+
   test("runDag skips transitive dependents of a failure, runs independents") {
-    val ran = scala.collection.mutable.Buffer[String]()
-    val runner = new PipelineRunner(spark)
-    //   a → b → d ;  c independent ;  b fails
-    val jobs = Seq(
-      job("a", _ => ran += "a"),
-      job("b", _ => { ran += "b"; sys.error("boom") }),
-      job("c", _ => ran += "c"),
-      job("d", _ => ran += "d"))
-    val results = runner.runDag(jobs,
-      Map("b" -> Seq("a"), "d" -> Seq("b")))
-    assert(ran.toSet == Set("a", "b", "c")) // d skipped, c still ran
-    assert(results.map(_.job.name).toSet == Set("a", "b", "c"))
-    assert(runner.status("d") == Pending)
-    intercept[IllegalArgumentException] { // cycle detection
-      runner.runDag(jobs.take(2), Map("a" -> Seq("b"), "b" -> Seq("a")))
+    for (p <- parallelisms) {
+      val ran = java.util.Collections.synchronizedList(
+        new java.util.ArrayList[String]())
+      val runner = new PipelineRunner(spark)
+      //   a → b → d ;  c independent ;  b fails
+      val jobs = Seq(
+        job("a", _ => ran.add("a"): Unit),
+        job("b", _ => { ran.add("b"): Unit; sys.error("boom") }),
+        job("c", _ => ran.add("c"): Unit),
+        job("d", _ => ran.add("d"): Unit))
+      val results = runner.runDag(jobs,
+        Map("b" -> Seq("a"), "d" -> Seq("b")), p)
+      // d skipped, c still ran
+      assert(ran.toArray.toSet == Set("a", "b", "c"), s"parallelism $p")
+      assert(results.map(_.job.name).toSet == Set("a", "b", "c"))
+      assert(runner.status("d") == Pending)
+      // rejected before anything runs: a cycle, a repeated job name
+      for (bad <- Seq(
+          () => runner.runDag(jobs.take(2),
+            Map("a" -> Seq("b"), "b" -> Seq("a")), p),
+          () => runner.runDag(jobs :+ job("c", _ => ran.add("c2"): Unit),
+            Map.empty, p))) {
+        ran.clear()
+        intercept[IllegalArgumentException](bad())
+        assert(ran.isEmpty, s"parallelism $p")
+      }
     }
   }
 
@@ -243,76 +257,68 @@ class OrchestratorSpec extends AnyFunSuite {
     //      d
     val diamond = Map("b" -> Seq("a"), "c" -> Seq("a"),
       "d" -> Seq("b", "c"))
-    val ran = scala.collection.mutable.Buffer[String]()
-    val runner = new PipelineRunner(spark)
-    val ok = Seq(
-      job("a", _ => ran += "a"), job("b", _ => ran += "b"),
-      job("c", _ => ran += "c"), job("d", _ => ran += "d"))
-    // submission order deliberately scrambled — the DAG restores it
-    val results = runner.runDag(Seq(ok(3), ok(1), ok(0), ok(2)), diamond)
-    val pos = results.map(_.job.name).zipWithIndex.toMap
-    assert(pos("a") < pos("b") && pos("a") < pos("c") &&
-      pos("b") < pos("d") && pos("c") < pos("d"))
-    assert(results.forall(_.status == Succeeded) && ran.size == 4)
+    for (p <- parallelisms) {
+      val ran = java.util.Collections.synchronizedList(
+        new java.util.ArrayList[String]())
+      val runner = new PipelineRunner(spark)
+      val ok = Seq(
+        job("a", _ => ran.add("a"): Unit), job("b", _ => ran.add("b"): Unit),
+        job("c", _ => ran.add("c"): Unit), job("d", _ => ran.add("d"): Unit))
+      // submission order deliberately scrambled — the DAG restores it
+      val results = runner.runDag(Seq(ok(3), ok(1), ok(0), ok(2)), diamond, p)
+      val pos = results.map(_.job.name).zipWithIndex.toMap
+      assert(pos("a") < pos("b") && pos("a") < pos("c") &&
+        pos("b") < pos("d") && pos("c") < pos("d"), s"parallelism $p")
+      assert(results.forall(_.status == Succeeded) && ran.size == 4)
 
-    // one middle branch fails → the OTHER branch still runs, only the
-    // sink is pruned
-    ran.clear()
-    val half = Seq(
-      job("a", _ => ran += "a"),
-      job("b", _ => { ran += "b"; sys.error("boom") }),
-      job("c", _ => ran += "c"), job("d", _ => ran += "d"))
-    val r2 = new PipelineRunner(spark).runDag(half, diamond)
-    assert(ran.toSet == Set("a", "b", "c"))
-    assert(r2.count(_.status == Succeeded) == 2)
+      // one middle branch fails → the OTHER branch still runs, only the
+      // sink is pruned
+      ran.clear()
+      val half = Seq(
+        job("a", _ => ran.add("a"): Unit),
+        job("b", _ => { ran.add("b"): Unit; sys.error("boom") }),
+        job("c", _ => ran.add("c"): Unit), job("d", _ => ran.add("d"): Unit))
+      val r2 = new PipelineRunner(spark).runDag(half, diamond, p)
+      assert(ran.toArray.toSet == Set("a", "b", "c"), s"parallelism $p")
+      assert(r2.count(_.status == Succeeded) == 2 &&
+        r2.count(_.status.isInstanceOf[Failed]) == 1)
+    }
   }
 
-  test("runDagParallel overlaps independent branches (witnessed by " +
-      "a rendezvous), respects dependencies, and prunes only the " +
-      "transitive dependents of a failure") {
+  test("runDag at parallelism 1 runs inline in level-by-level Kahn order") {
+    val caller = Thread.currentThread()
+    val ran = scala.collection.mutable.Buffer[(String, Thread)]()
+    def rec(n: String) = job(n, _ => ran += n -> Thread.currentThread())
+    val results = new PipelineRunner(spark).runDag(
+      Seq(rec("a"), rec("c"), rec("b")), Map("c" -> Seq("a")))
+    assert(ran.map(_._1).toSeq == Seq("a", "b", "c"))
+    assert(results.map(_.job.name) == Seq("a", "b", "c"))
+    assert(ran.forall(_._2 eq caller))
+    // an empty DAG finishes at once, inline or pooled
+    for (p <- Seq(1, 4))
+      assert(new PipelineRunner(spark).runDag(Nil, Map.empty, p).isEmpty)
+  }
+
+  test("runDag at parallelism 2 overlaps independent branches (rendezvous)") {
     // rendezvous: b and c (both ready after a) must be IN FLIGHT
     // simultaneously — each arrives and waits for the other
     val both = new java.util.concurrent.CountDownLatch(2)
     val order = java.util.Collections.synchronizedList(
       new java.util.ArrayList[String]())
     val runner = new PipelineRunner(spark)
-    val jobs = Seq(
-      job("a", _ => order.add("a"): Unit),
-      job("b", _ => {
-        order.add("b"): Unit
-        both.countDown()
-        assert(both.await(30, java.util.concurrent.TimeUnit.SECONDS),
-          "b and c must run concurrently")
-      }),
-      job("c", _ => {
-        order.add("c"): Unit
-        both.countDown()
-        assert(both.await(30, java.util.concurrent.TimeUnit.SECONDS),
-          "b and c must run concurrently")
-      }),
+    def meet(n: String) = job(n, _ => {
+      order.add(n): Unit
+      both.countDown()
+      assert(both.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "b and c must run concurrently")
+    })
+    val jobs = Seq(job("a", _ => order.add("a"): Unit), meet("b"), meet("c"),
       job("d", _ => order.add("d"): Unit))
     val deps = Map("b" -> Seq("a"), "c" -> Seq("a"), "d" -> Seq("b", "c"))
-    val results = runner.runDagParallel(jobs, deps, parallelism = 2)
+    val results = runner.runDag(jobs, deps, parallelism = 2)
     assert(results.size == 4 && results.forall(_.status == Succeeded))
     val seq = order.toArray.map(_.toString).toSeq
     assert(seq.head == "a" && seq.last == "d")
-
-    // failure pruning: b fails → d never runs, c completes
-    val ran2 = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[String]())
-    val r2 = new PipelineRunner(spark).runDagParallel(Seq(
-      job("a", _ => ran2.add("a"): Unit),
-      job("b", _ => { ran2.add("b"): Unit; sys.error("boom") }),
-      job("c", _ => ran2.add("c"): Unit),
-      job("d", _ => ran2.add("d"): Unit)), deps, parallelism = 2)
-    assert(ran2.toArray.map(_.toString).toSet == Set("a", "b", "c"))
-    assert(r2.count(_.status == Succeeded) == 2 &&
-      r2.count(_.status.isInstanceOf[Failed]) == 1)
-
-    intercept[IllegalArgumentException] { // cycle detection up front
-      new PipelineRunner(spark).runDagParallel(jobs.take(2),
-        Map("a" -> Seq("b"), "b" -> Seq("a")))
-    }
   }
 
   test("the standard registry's declared deps order manifestos/" +
