@@ -6,9 +6,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Replaces the reference's connection bootstrap
   * (`Select de Importação de Dados.py:14-23,156-164`) — instead of two
-  * RDBMS connections, one Catalyst-hosting session. Defaults are sized
-  * for the judged local[32] harness but every knob is overridable via
-  * env, mirroring the reference's env-with-defaults config style (S8).
+  * RDBMS connections, one Catalyst-hosting session. The master and the
+  * shuffle partitions follow `cores` (default 32, or `SPARK_GRAFT_CPUS`),
+  * and every conf is overridable via `SPARK_GRAFT_EXTRA_CONF`, mirroring
+  * the reference's env-with-defaults config style (S8).
   *
   * Scale notes (100 TB design intent):
   *   - AQE on: runtime partition coalescing, skew-join splitting, and
@@ -19,8 +20,28 @@ import org.apache.spark.sql.SparkSession
   *     mostly irrelevant as long as it is high enough.
   *   - UTC session timezone pinned: the reference lands pre-formatted
   *     date strings (SURVEY §1.2), so formatting must be tz-stable.
+  *   - [[codegen]] is fixed, not derived from the core count: it sizes
+  *     each JVM's cache of generated classes, whose working set is set
+  *     by how many distinct plans a pass runs, not by how many tasks run
+  *     them.
   */
 object EngineSession {
+
+  /** The generated-class cache settings every engine session runs with.
+    * The reference starts a fresh process per pipeline script; the
+    * engine re-runs its queue in one JVM, so a warm pass should reuse
+    * the classes the pass before compiled.
+    *   - `cache.maxEntries` is a static conf: it sizes the JVM-wide
+    *     LRU of compiled classes once, when the first class compiles.
+    *     Spark's 100 (about 25 per cache segment) is smaller than one
+    *     ETL or commit-log pass, so each pass evicted the classes of the
+    *     last one and recompiled 52–77 of them.
+    *   - `useIdInClassName=false` keeps the whole-stage codegen id out
+    *     of the class name: AQE numbers stages per plan, so the same
+    *     stage under a new id would otherwise compile again. */
+  val codegen: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.cache.maxEntries" -> "2000",
+    "spark.sql.codegen.useIdInClassName" -> "false")
 
   def create(
       appName: String = "graft",
@@ -43,6 +64,7 @@ object EngineSession {
       .config("spark.sql.sources.v2.bucketing.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(codegen.toMap)
     // free-form overrides, S8's env-with-defaults style generalized:
     // "key=value;key=value" — the A/B lever for configuration tuning
     // (optimization guide §1.2 step 3) without a recompile, and the

@@ -4018,6 +4018,17 @@ object CommitLog {
         "txn_batch", "has_changes", "n_columns", "commit_ts")
   }
 
+  /** `_commit_version` = `v` for every row, as a column whose generated
+    * code does not contain `v`. `lit(v)` is inlined into the Java source
+    * as a constant, so each version range compiled new classes for every
+    * stage of the feed. Here `v` reaches the code as one reference object
+    * (the closure), and a zero-argument UDF is not constant-folded back
+    * into a literal, so feeds and micro-batches over different versions
+    * share their compiled classes. Used by [[changeFeed]] and the
+    * streaming source's change-feed batches. */
+  private[sources] def commitVersion(v: Long): org.apache.spark.sql.Column =
+    udf(() => v).asNonNullable().apply()
+
   /** The FULL change-data feed after `afterVersion`, one DataFrame:
     * table columns + `_change_type` ('insert' | 'delete' |
     * 'update_preimage' | 'update_postimage') + `_commit_version`.
@@ -4109,13 +4120,14 @@ object CommitLog {
           if (added.isEmpty) None
           else Some(readAdded(added)
             .withColumn("_change_type", lit("insert"))
-            .withColumn("_commit_version", lit(v)))
+            .withColumn("_commit_version", commitVersion(v)))
         case "delete" | "delete_dv" | "update" | "update_dv" |
             "merge_into" | "replace_where" =>
           val dir = snap.changes.getOrElse(throw new IllegalStateException(
             s"CommitLog.changeFeed: version $v of $table is a " +
               s"'${snap.op}' with no recorded change directory"))
-          Some(readChanges(dir).withColumn("_commit_version", lit(v)))
+          Some(readChanges(dir)
+            .withColumn("_commit_version", commitVersion(v)))
         case "compact" => None
         // the catalog's CREATE TABLE commit records a schema and zero
         // segments — no content change, same class as compact; an

@@ -1460,7 +1460,8 @@ class CommitLogStreamSource(spark: SparkSession, metadataPath: String,
             else ParquetFooters.read(spark, added)
             Some(if (readChangeFeed)
               d.withColumn("_change_type", lit("insert"))
-                .withColumn("_commit_version", lit(ver))
+                .withColumn("_commit_version",
+                  CommitLog.commitVersion(ver))
             else d)
           }
         case "compact" => None // content-preserving rewrite
@@ -1479,7 +1480,8 @@ class CommitLogStreamSource(spark: SparkSession, metadataPath: String,
           val mapped = snap.schema.map(CommitLog.decodeSchema)
             .filter(s => !CommitLog.isIdentityMapping(s))
             .fold(raw)(CommitLog.fromPhysicalFrame(raw, _))
-          Some(mapped.withColumn("_commit_version", lit(ver)))
+          Some(mapped.withColumn("_commit_version",
+            CommitLog.commitVersion(ver)))
         case _ if skipRewrites => None
         case op => throw new IllegalStateException(
           s"commitlog stream: version $ver of $table is a '$op' " +

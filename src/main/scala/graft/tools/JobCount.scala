@@ -1,15 +1,17 @@
 package graft.tools
 
 import org.apache.spark.GraftListenerBus
+import org.apache.spark.metrics.source.CodegenMetrics
 
 import graft.{EngineSession, SparkEntry}
 
 /** Job/stage-count profiler: run registered queries through the same
   * noop-sink materialization the bench uses and report, per query,
-  * the number of Spark jobs and stages it spawned plus wall seconds —
-  * the evidence for "this change removed N redundant jobs" claims
-  * (guide §1: measure first; a removed job is visible here even when
-  * wall time is noise-bound at small SF).
+  * the number of Spark jobs and stages it spawned, the classes it
+  * compiled (`compiles=`: generated classes that missed the JVM-wide
+  * codegen cache) plus wall seconds — the evidence for "this change
+  * removed N redundant jobs" claims (guide §1: measure first; a removed
+  * job is visible here even when wall time is noise-bound at small SF).
   *
   * Usage: runMain graft.tools.JobCount <sfDir> <nameRegex> [runs]
   */
@@ -45,6 +47,7 @@ object JobCount {
           GraftListenerBus.drain(spark.sparkContext, 10000)
           nJobs.set(0); nStages.set(0); nTasks.set(0)
           spark.sparkContext.addSparkListener(listener)
+          val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
           val t0 = System.nanoTime()
           val ok = try {
             q(spark, dir).write.format("noop").mode("overwrite").save()
@@ -53,11 +56,13 @@ object JobCount {
             System.err.println(s"[jobcount] $name failed: $e"); false
           }
           val sec = (System.nanoTime() - t0) / 1e9
+          val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
           GraftListenerBus.drain(spark.sparkContext, 10000)
           spark.sparkContext.removeSparkListener(listener)
           spark.catalog.clearCache()
           if (ok) println(f"JOBCOUNT $name run=$r jobs=${nJobs.get}%d " +
-            f"stages=${nStages.get}%d tasks=${nTasks.get}%d sec=$sec%.2f")
+            f"stages=${nStages.get}%d tasks=${nTasks.get}%d " +
+            f"compiles=$compiles%d sec=$sec%.2f")
         }
       }
     spark.stop()
