@@ -1,7 +1,14 @@
 package graft.operators
 
+import java.util.UUID
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.sources.CommitLog
 
 /** Idempotent first-writer-wins insert (SURVEY S4).
   *
@@ -22,19 +29,37 @@ import org.apache.spark.sql.functions._
   */
 object IdempotentInsert {
 
-  /** Rows of `incoming` whose key tuple is absent from `existing`, in
-    * `incoming`'s column order (a USING join puts the keys first, and
-    * appended files must match the target's column order).
-    * Also dedups within `incoming` itself (the DB PK would reject the
-    * second occurrence of a pair within one load too). */
+  /** Rows of `incoming` whose key tuple is absent from `existing`, one
+    * per key (the DB PK would reject the second occurrence of a pair
+    * within one load too), in `incoming`'s column order (a USING join
+    * puts the keys first, and appended files must match the target's
+    * column order). The anti-join runs first, so only unseen keys reach
+    * the per-key dedup; it needs no `distinct()` on `existing`'s keys,
+    * since a left-anti join ignores duplicates on its build side. The
+    * row kept per key is the one [[onePerKey]] picks. */
   def newRows(incoming: DataFrame, existing: DataFrame, keys: Seq[String])
       : DataFrame = {
-    val existingKeys = existing.select(keys.map(col): _*).distinct()
-    incoming
-      .dropDuplicates(keys)
-      .join(existingKeys, keys, "left_anti")
-      .select(incoming.columns.toSeq.map(c => col(s"`$c`")): _*)
+    val unseen = incoming
+      .join(existing.select(keys.map(quoted): _*), keys, "left_anti")
+      .select(incoming.columns.toSeq.map(quoted): _*)
+    onePerKey(unseen, keys)
   }
+
+  /** One row per `keys` tuple: the one with the greatest payload struct
+    * (every non-key column, in `df`'s order), so the pick does not
+    * depend on partitioning or arrival order. With no payload columns,
+    * or a payload struct Spark cannot order (one holding a map column),
+    * it falls back to `dropDuplicates`, which keeps an arbitrary row per
+    * key. */
+  private def onePerKey(df: DataFrame, keys: Seq[String]): DataFrame = {
+    val payload = df.schema.filterNot(f => keys.contains(f.name))
+    if (payload.isEmpty || !RowOrdering.isOrderable(StructType(payload)))
+      df.dropDuplicates(keys)
+    else Dedup.latestPerKey(df, partition = keys.map(quoted),
+      order = Seq(struct(payload.map(f => quoted(f.name)): _*).desc))
+  }
+
+  private def quoted(c: String) = col(s"`$c`")
 
   /** The target's one read relation, which serves as existence probe,
     * schema gate and anti-join side. `None` ("first run") means the path
@@ -53,7 +78,22 @@ object IdempotentInsert {
 
   /** Variant (a): idempotent append into a parquet directory.
     * Returns the number of rows actually inserted (second identical
-    * run returns 0 — the S4 idempotence law). */
+    * run returns 0 — the S4 idempotence law).
+    *
+    * One Spark job: the new rows are written once, to a staging
+    * directory beside the sink (`.<sink name>.staging-<uuid>`, hidden
+    * and unique, so no reader of the sink's parent takes it for a
+    * sink), and counted by an observation on that same write. Then the
+    * staged `part-*` files are renamed into the sink, and the staging
+    * directory is deleted whatever happened. An empty delta leaves the
+    * sink untouched: no file, not even the 0-row file a direct empty
+    * append writes (and no sink directory on a first run). A failed
+    * write leaves it untouched too. A crash between two renames leaves
+    * part of the delta in the sink; a re-run inserts the rest, since
+    * the row kept per key is deterministic. Reading and writing the
+    * same sink is safe: the `existing` read lists its files when it is
+    * planned, and no new file appears there before the write job has
+    * ended. */
   def intoParquet(spark: SparkSession, incoming: DataFrame, path: String,
       keys: Seq[String]): Long = {
     val toInsert = existing(spark, path) match {
@@ -62,15 +102,27 @@ object IdempotentInsert {
         // table — gate on the existing schema first (SURVEY O10)
         graft.sources.SchemaAssert.require(incoming, ex.schema)
         newRows(incoming, ex, keys)
-      case None => incoming.dropDuplicates(keys)
+      case None => onePerKey(incoming, keys)
     }
-    // Materialize before append: the append invalidates the source
-    // listing we are anti-joining against.
-    val staged = toInsert.persist()
-    val n = staged.count()
-    if (n > 0) staged.write.mode(SaveMode.Append).parquet(path)
-    staged.unpersist()
-    n
+    val sinkPath = new Path(path)
+    val fs = sinkPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val sink = fs.makeQualified(sinkPath)
+    val staging = new Path(sink.getParent,
+      s".${sink.getName}.staging-${UUID.randomUUID()}")
+    try {
+      val n = CommitLog.observedWrite(toInsert, staging.toString,
+        Seq(count(lit(1)).as("n")))("n").asInstanceOf[Number].longValue
+      if (n > 0) {
+        fs.mkdirs(sink)
+        fs.listStatus(staging).map(_.getPath)
+          .filter(_.getName.startsWith("part-")).foreach { f =>
+            if (!fs.rename(f, new Path(sink, f.getName)))
+              throw new java.io.IOException(
+                s"intoParquet: rename $f -> $sink failed")
+          }
+      }
+      n
+    } finally fs.delete(staging, true)
   }
 
   /** MERGE mode — the explicit improvement SURVEY §7.5 anticipates
@@ -80,56 +132,53 @@ object IdempotentInsert {
     * (The reference's `ON CONFLICT DO NOTHING` never refreshes changed
     * upstream values, `SELECT.py:146-148` — intended there, but a
     * view-materialization pipeline usually wants refresh semantics.)
-    * `incoming` is deduplicated per key first (greatest payload struct
-    * wins — deterministic), mirroring the PK's one-row-per-key
-    * guarantee. Returns (inserted, replaced) counts. */
+    * `incoming` is deduplicated per key first ([[onePerKey]]),
+    * mirroring the PK's one-row-per-key guarantee. The merged relation
+    * is written once, to `path + ".tmp"`, with its total and kept-row
+    * counts observed by that write; only the existing row count takes
+    * a job of its own. Returns (inserted, replaced) counts. */
   def mergeIntoParquet(spark: SparkSession, incoming: DataFrame,
       path: String, keys: Seq[String]): (Long, Long) = {
-    val payloadCols = incoming.columns.filterNot(keys.contains).toSeq
-    val incOne = if (payloadCols.isEmpty) incoming.dropDuplicates(keys)
-      else graft.operators.Dedup.latestPerKey(incoming,
-        partition = keys.map(col),
-        order = Seq(struct(payloadCols.map(col): _*).desc))
-    existing(spark, path) match {
-      case None =>
-        val staged = incOne.persist()
-        val n = staged.count()
-        staged.write.mode(SaveMode.Overwrite).parquet(path)
-        staged.unpersist()
-        (n, 0L)
+    val incOne = onePerKey(incoming, keys)
+    val keptFlag = "__graft_kept"
+    val (merged, exCount) = existing(spark, path) match {
+      case None => (incOne.withColumn(keptFlag, lit(0L)), 0L)
       case Some(ex) =>
         graft.sources.SchemaAssert.require(incOne, ex.schema)
-        val kept = ex.join(incOne.select(keys.map(col): _*), keys,
+        val kept = ex.join(incOne.select(keys.map(quoted): _*), keys,
           "left_anti")
-        // materialize the merged relation BEFORE touching the source
-        // it reads from (same hazard as intoParquet's append)
-        val merged = kept.unionByName(incOne).persist()
-        val total = merged.count()
-        val exCount = ex.count()
-        val replaced = exCount - kept.count()
-        val inserted = total - exCount
-        val fs = org.apache.hadoop.fs.FileSystem
-          .get(spark.sparkContext.hadoopConfiguration)
-        val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-        val dst = new org.apache.hadoop.fs.Path(path)
-        try merged.write.mode(SaveMode.Overwrite).parquet(path + ".tmp")
-        catch {
-          // a failed staging write must not leave a partial .tmp lying
-          // around to confuse a later recovery
-          case e: Throwable => fs.delete(tmp, true); throw e
-        } finally merged.unpersist()
-        // swap via one metadata rename instead of a second full data
-        // rewrite: the only non-atomic window is between delete(target)
-        // and rename(tmp), during which the fully-written .tmp copy IS
-        // the recovery point (recover by renaming path+".tmp" to path).
-        // A real lakehouse would commit via table-format metadata.
-        fs.delete(dst, true)
-        if (!fs.rename(tmp, dst))
-          throw new java.io.IOException(
-            s"mergeIntoParquet: rename $tmp -> $dst failed after target " +
-              "delete; recover by renaming the .tmp directory to the target")
-        (inserted, replaced)
+        (kept.withColumn(keptFlag, lit(1L))
+          .unionByName(incOne.withColumn(keptFlag, lit(0L))), ex.count())
     }
+    val tmp = new Path(path + ".tmp")
+    val dst = new Path(path)
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the merged relation is staged BEFORE the source it reads from is
+    // touched
+    val got = try CommitLog.observedWrite(merged, tmp.toString,
+        Seq(count(lit(1)).as("total"), sum(col(keptFlag)).as("kept")),
+        mode = SaveMode.Overwrite, drop = Seq(keptFlag))
+      catch {
+        // a failed staging write must not leave a partial .tmp lying
+        // around to confuse a later recovery
+        case e: Throwable => fs.delete(tmp, true); throw e
+      }
+    // swap via one metadata rename instead of a second full data
+    // rewrite: the only non-atomic window is between delete(target)
+    // and rename(tmp), during which the fully-written .tmp copy IS
+    // the recovery point (recover by renaming path+".tmp" to path).
+    // A real lakehouse would commit via table-format metadata.
+    fs.delete(dst, true)
+    if (!fs.rename(tmp, dst))
+      throw new java.io.IOException(
+        s"mergeIntoParquet: rename $tmp -> $dst failed after target " +
+          "delete; recover by renaming the .tmp directory to the target")
+    // sum over no rows observes NULL
+    def observed(k: String) = got.get(k) match {
+      case Some(n: Number) => n.longValue
+      case _ => 0L
+    }
+    (observed("total") - exCount, exCount - observed("kept"))
   }
 
   /** Variant (b): executor-side batched `INSERT … ON CONFLICT DO

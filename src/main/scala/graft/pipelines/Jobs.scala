@@ -40,21 +40,14 @@ object Jobs {
       "Parcela CIOT", "Importação idempotente de parcelas CIOT",
       s => {
         // the sink PK is (id_manifesto, cd_parcela) — the reference's
-        // ON CONFLICT target (SELECT.py:119,217). Rows sharing the PK
-        // but differing in payload are collapsed to ONE deterministic
-        // representative (greatest payload struct) BEFORE the insert,
-        // then the upsert is keyed on the PK, matching the reference's
-        // keep-first uniqueness semantics without its batch-order
-        // nondeterminism. The sink keeps no row order, so the rows skip
-        // the query's R15 global sort.
-        val rows = ParcelaCiot.rows(s, sfDir)
-        val pk = Seq("id_manifesto", "cd_parcela")
-        val payloadCols = rows.columns.filterNot(pk.contains).toSeq
-        val oneRep = graft.operators.Dedup.latestPerKey(rows,
-          partition = pk.map(col),
-          order = Seq(struct(payloadCols.map(col): _*).desc))
-        IdempotentInsert.intoParquet(s, oneRep,
-          outDir + "/parcela_ciot", keys = pk)
+        // ON CONFLICT target (SELECT.py:119,217). The insert keeps ONE
+        // deterministic representative (greatest payload struct) of the
+        // rows sharing an unseen PK, matching the reference's keep-first
+        // uniqueness semantics without its batch-order nondeterminism.
+        // The sink keeps no row order, so the rows skip the query's R15
+        // global sort.
+        IdempotentInsert.intoParquet(s, ParcelaCiot.rows(s, sfDir),
+          outDir + "/parcela_ciot", keys = Seq("id_manifesto", "cd_parcela"))
         ()
       }))
 

@@ -1627,17 +1627,20 @@ object CommitLog {
     (seg, n)
   }
 
-  /** Write `df` as parquet at the fresh path `path` and return `aggs`
-    * over the written rows, measured by an
+  /** Write `df` as parquet at `path` (a fresh path unless `mode` says
+    * otherwise) and return `aggs` over the written rows, measured by an
     * [[org.apache.spark.sql.Observation]] riding the write itself: no
     * second job re-reads what the write job already saw. Observation
     * metrics are exact under task retries (CollectMetrics counts only
-    * committed tasks). */
-  private def observedWrite(df: DataFrame, path: String,
-      aggs: Seq[org.apache.spark.sql.Column]): Map[String, Any] = {
+    * committed tasks). Columns in `drop` feed `aggs` only: they are
+    * removed after the observation and never written. */
+  private[graft] def observedWrite(df: DataFrame, path: String,
+      aggs: Seq[org.apache.spark.sql.Column],
+      mode: SaveMode = SaveMode.ErrorIfExists,
+      drop: Seq[String] = Nil): Map[String, Any] = {
     val obs = org.apache.spark.sql.Observation()
-    df.observe(obs, aggs.head, aggs.tail: _*)
-      .write.mode(SaveMode.ErrorIfExists).parquet(path)
+    df.observe(obs, aggs.head, aggs.tail: _*).drop(drop: _*)
+      .write.mode(mode).parquet(path)
     obs.get
   }
 

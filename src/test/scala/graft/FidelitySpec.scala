@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.TsqlFunctions._
 import graft.operators.{Dedup, IdempotentInsert}
+import graft.plans.PlanProbe
 
 /** Pins the reference-fidelity semantics the DuckDB oracle can't see
   * (SURVEY §5.2 items 1 & 3). */
@@ -147,5 +148,20 @@ class FidelitySpec extends AnyFunSuite {
     val got = IdempotentInsert.newRows(incoming, empty,
       Seq("id_manifesto", "cd_parcela"))
     assert(got.count() == 2)
+  }
+
+  // The row kept per key is the greatest payload struct, whatever the
+  // partitioning: (1,"a","q") beats (1,"a","p").
+  test("IdempotentInsert keeps a deterministic representative per key") {
+    import spark.implicits._
+    val incoming = Seq((1, "a", "p"), (1, "a", "q"))
+      .toDF("id_manifesto", "cd_parcela", "v")
+    for (n <- Seq("1", "7"))
+      PlanProbe.withConf(spark, "spark.sql.shuffle.partitions" -> n) {
+        val got = IdempotentInsert.newRows(incoming, incoming.limit(0),
+          Seq("id_manifesto", "cd_parcela")).collect()
+          .map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq
+        assert(got == Seq((1, "a", "q")), s"shuffle.partitions=$n")
+      }
   }
 }
