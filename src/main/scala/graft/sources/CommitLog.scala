@@ -1406,13 +1406,10 @@ object CommitLog {
     * executors, compaction, the SQL/DSv2 bridge — goes through this,
     * so a DV'd row can never resurface on any surface. */
   private[graft] def readLive(spark: SparkSession, snap: Snapshot,
-      only: Option[Seq[String]] = None): DataFrame = {
-    val base = readSegments(spark, only.getOrElse(snap.segments),
-      snap.schema)
-    snap.dv.fold(base)(d =>
-      subtractDv(spark, withDvPos(base), d)
-        .select(base.columns.toSeq.map(col): _*))
-  }
+      only: Option[Seq[String]] = None): DataFrame =
+    if (snap.dv.isEmpty)
+      readSegments(spark, only.getOrElse(snap.segments), snap.schema)
+    else taggedLive(spark, snap, only).drop(DvTags: _*)
 
   /** Tag a freshly-read segment frame with the (file, row-position)
     * pair the deletion vector is keyed on. Must be applied directly
@@ -1473,6 +1470,16 @@ object CommitLog {
       }).longValue
     }.sum
 
+  /** Rows in the deletion-vector directory `dvDir`, from the memo. */
+  private def dvRows(spark: SparkSession, dvDir: String): Long = {
+    // bounded: a long-lived driver doing frequent vectored DML mints
+    // a fresh immutable DV dir per commit — reset the memo past 4096
+    // entries (it rebuilds from footer stats) rather than leak
+    if (dvCountCache.size() > 4096) dvCountCache.clear()
+    dvCountCache.computeIfAbsent(dvDir,
+      d => ParquetFooters.read(spark, Seq(d)).count())
+  }
+
   private def subtractDv(spark: SparkSession, tagged: DataFrame,
       dvDir: String): DataFrame = {
     val dvRaw = ParquetFooters.read(spark, Seq(dvDir))
@@ -1485,14 +1492,8 @@ object CommitLog {
       idOf(col("__graft_dv_file")))
     val bcastCap = spark.conf.getOption("spark.graft.dv.broadcastRows")
       .map(_.toLong).getOrElse(1000000L)
-    // bounded: a long-lived driver doing frequent vectored DML mints
-    // a fresh immutable DV dir per commit — reset the memo past 4096
-    // entries (it rebuilds from footer stats) rather than leak
-    if (dvCountCache.size() > 4096) dvCountCache.clear()
-    val dvRows: Long = dvCountCache.computeIfAbsent(dvDir,
-      _ => dvRaw.count())
     val dvSide =
-      if (dvRows <= bcastCap) broadcast(dvIds) else dvIds
+      if (dvRows(spark, dvDir) <= bcastCap) broadcast(dvIds) else dvIds
     withFid.join(dvSide,
       withFid("__graft_dv_fid") === dvIds("_dv_fid") &&
         withFid("__graft_dv_pos") === dvIds("_dv_pos"),
@@ -2595,6 +2596,68 @@ object CommitLog {
   }
 
 
+  // ---- the row-level rewrite core (overview at [[land]]) ----------------
+
+  /** The (file, row-position) tag columns of [[taggedLive]]. */
+  private val DvTags = Seq("__graft_dv_file", "__graft_dv_pos")
+
+  /** The live rows of `snap`, or of its segments `only`, each tagged
+    * with the (file, row-position) pair a deletion vector keys on
+    * ([[DvTags]]). */
+  private def taggedLive(spark: SparkSession, snap: Snapshot,
+      only: Option[Seq[String]] = None): DataFrame = {
+    val tagged = withDvPos(
+      readSegments(spark, only.getOrElse(snap.segments), snap.schema))
+    snap.dv.fold(tagged)(subtractDv(spark, tagged, _))
+  }
+
+  /** The uuid-named segment directories among `segments` that hold any
+    * of the tagged `files`. */
+  private def segmentsOf(segments: Seq[String],
+      files: Seq[String]): Seq[String] =
+    segments.filter { seg =>
+      val uuid = seg.substring(seg.lastIndexOf('/') + 1)
+      files.exists(_.contains(uuid))
+    }
+
+  /** A verb's SET clauses over the table's columns, checked once per
+    * attempt before any scan or staging: unknown columns fail fast
+    * naming them, and generated or ALWAYS-identity columns refuse
+    * ([[refuseGeneratedSet]]). */
+  private final class SetImage(spark: SparkSession, op: String,
+      cur: Snapshot, sets: Seq[Map[String, org.apache.spark.sql.Column]]) {
+    val schema: org.apache.spark.sql.types.StructType =
+      readSegments(spark, cur.segments, cur.schema).schema
+    val logical: Option[org.apache.spark.sql.types.StructType] =
+      cur.schema.map(decodeSchema)
+    private val unknown = sets.flatMap(_.keySet).toSet -- schema.fieldNames
+    require(unknown.isEmpty,
+      s"CommitLog.$op: SET names unknown column(s) " +
+        s"${unknown.mkString(", ")} — table has " +
+        schema.fieldNames.mkString(", "))
+    refuseGeneratedSet(op, sets.flatMap(_.keys), logical)
+
+    /** `df`'s table columns with `set` applied on the rows where `where`
+      * holds (every row when None), each cast back to its declared type
+      * so a widening expression cannot drift the schema. An updating
+      * image recomputes generated columns over the POST-image (a SET
+      * touching a generation source propagates, Delta's rule; the
+      * identity on rows it leaves alone); an empty `set` passes rows
+      * through byte-identical. */
+    def apply(df: DataFrame, set: Map[String, org.apache.spark.sql.Column],
+        where: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+      val sel = df.select(schema.fields.toSeq.map { f =>
+        set.get(f.name) match {
+          case Some(e) =>
+            val v = e.cast(f.dataType)
+            where.fold(v)(w => when(w, v).otherwise(col(f.name))).as(f.name)
+          case None => col(f.name)
+        }
+      }: _*)
+      if (set.nonEmpty) recomputeGenerated(sel, logical) else sel
+    }
+  }
+
   /** CDC records store PHYSICAL column names on a mapped table (the
     * time-invariant names, so one current mapping serves the whole
     * feed); identity mappings make this the identity function. */
@@ -2606,55 +2669,178 @@ object CommitLog {
   private val ChangeTypes =
     Seq("delete", "insert", "update_preimage", "update_postimage")
 
-  /** Write a CDC frame to `changeDir` and return its per-_change_type
-    * row counts, observed by the write itself ([[observedWrite]]).
-    * Absent types read 0 (sum over an empty frame observes NULL). */
-  private def writeChanges(changeDir: String,
-      changes: DataFrame): Map[String, Long] = {
-    val got = observedWrite(changes, changeDir, ChangeTypes.map(t =>
-      sum(when(col("_change_type") === t, 1L)).as(t)))
-    ChangeTypes.map(t => t -> (got.get(t) match {
+  /** Stage the attempt's CDC record under `_changes/` and return its
+    * directory with the per-`_change_type` row counts, observed by the
+    * write itself ([[observedWrite]]). Absent types read 0 (sum over an
+    * empty frame observes NULL). */
+  private def stageChanges(tx: Tx, table: String,
+      changes: DataFrame): (String, Map[String, Long]) = {
+    val dir = tx.stage(s"$table/_changes/${java.util.UUID.randomUUID()}")
+    val got = observedWrite(changes.transform(changePhysical(tx.existing)),
+      dir, ChangeTypes.map(t =>
+        sum(when(col("_change_type") === t, 1L)).as(t)))
+    (dir, ChangeTypes.map(t => t -> (got.get(t) match {
       case Some(n: java.lang.Number) => n.longValue
       case _ => 0L
-    })).toMap
+    })).toMap)
   }
 
-  /** Segment directories that contain at least one row matching
+  /** An update's CDC rows: the `pre` and `post` images of the same rows
+    * (Delta's CDC row pair). */
+  private def imagePair(pre: DataFrame, post: DataFrame): DataFrame =
+    pre.withColumn("_change_type", lit("update_preimage"))
+      .unionByName(post.withColumn("_change_type", lit("update_postimage")))
+
+  /** Where a row-level commit's rows land ([[land]]). */
+  private sealed trait Landing
+
+  /** Copy-on-write: `rows` (None: no rows) replace the `touched`
+    * segments. `staged` segments, written by the verb before its
+    * attempt, join them — not bucket-split, so they void a bucketed
+    * layout. */
+  private final case class Rewrite(touched: Seq[String],
+      rows: Option[DataFrame], staged: Seq[String] = Nil) extends Landing
+
+  /** Merge-on-read: the `n` tagged `matched` rows join the deletion
+    * vector, and `post`, their updated copies if any, appends as one
+    * segment. Past `maxDvRows` vector rows, copy-on-write of exactly
+    * the segments the matched rows sit in. */
+  private final case class Vectored(matched: DataFrame, n: Long,
+      post: Option[DataFrame], maxDvRows: Long) extends Landing
+
+  /** THE ROW-LEVEL REWRITE CORE every commit-log DML verb runs on:
+    * [[delete]], [[overwriteWhere]], [[deleteVectored]] /
+    * [[deleteVectoredKeys]], [[updateVectored]], [[update]] and
+    * [[mergeIntoClauses]]. A verb keeps only its matcher (a predicate, a
+    * key set, MERGE's clauses and probe, a replaceWhere slice) and its
+    * inserts and identity marks; the core owns, once each:
+    *  - the tagged live read ([[taggedLive]]): the segments minus the
+    *    deletion vector, every row tagged with its (file, position);
+    *  - touched files → segment directories ([[segmentsOf]]);
+    *  - the SET image and its checks ([[SetImage]]);
+    *  - the CDC record ([[stageChanges]]), whose observed per-type counts
+    *    are the verb's matched counts and its no-op test;
+    *  - the apply rule and the snapshot to publish (this method), decided
+    *    after the CDC write. A vectored verb whose prior deletion-vector
+    *    rows plus matched rows are at most `maxDvRows` records the
+    *    matches in a new vector (merge-on-read, O(matched rows) written);
+    *    every other commit rewrites exactly the touched segments
+    *    (copy-on-write) on ONE path, which keeps a bucketed layout.
+    * Nothing here nests a transaction: each verb is one [[transact]]
+    * attempt.
+    *
+    * [[land]] lands an attempt's rows and returns the snapshot it
+    * publishes: op `op` (`<op>_dv` on the vector path) with CDC record
+    * `changes`. */
+  private def land(spark: SparkSession, tx: Tx, table: String, op: String,
+      changes: String, landing: Landing): Snapshot = {
+    val cur = tx.existing
+    landing match {
+      case Vectored(matched, n, post, maxDvRows)
+          if cur.dv.fold(0L)(dvRows(spark, _)) + n <= maxDvRows =>
+        val added = post.toSeq.flatMap(stageRows(spark, tx, table, _))
+        val pairs = matched.select(col(DvTags(0)).as("_dv_file"),
+          col(DvTags(1)).as("_dv_pos"))
+        val dvDir = tx.stage(s"$table/_dv/${java.util.UUID.randomUUID()}")
+        // repartition, NOT coalesce: coalesce(1) would collapse the
+        // upstream predicate scan into one task; the shuffle moves
+        // only the matched positions (bounded by maxDvRows)
+        cur.dv.fold(pairs)(d =>
+          ParquetFooters.read(spark, Seq(d)).unionByName(pairs))
+          .repartition(1)
+          .write.mode(SaveMode.ErrorIfExists).parquet(dvDir)
+        Snapshot(cur.version + 1L, cur.segments ++ added, cur.version,
+          s"${op}_dv", changes = Some(changes), schema = cur.schema,
+          dv = Some(dvDir))
+      case Vectored(matched, _, post, _) =>
+        // Past the bound the vector's merge-on-read economics are gone
+        // (it is a relation every later scan subtracts): rewrite the
+        // touched segments instead of refusing — same final state, same
+        // CDC record. The matched rows' tags name the touched files
+        // (collected once, bounded by the table's file count) and are
+        // one anti-join away from the kept rows. The untouched segments
+        // may still owe rows to the current vector, which is carried;
+        // its entries for rewritten-away files match nothing.
+        val touched = segmentsOf(cur.segments, matched.select(DvTags(0))
+          .distinct().collect().map(_.getString(0)).toSeq)
+        val kept = taggedLive(spark, cur, Some(touched))
+          .join(matched.select(DvTags.map(col): _*), DvTags, "left_anti")
+          .drop(DvTags: _*)
+        land(spark, tx, table, op, changes,
+          Rewrite(touched, Some(post.fold(kept)(kept.unionByName(_)))))
+      case Rewrite(touched, rows, staged) =>
+        // a bucketed layout (SPJ spec) survives the DML: the rows
+        // re-land bucket-split (a SET on a bucket KEY re-hashes —
+        // purity per segment is the invariant) and the commit carries
+        // the updated spec
+        val bucketed = rows.filter(_ => staged.isEmpty).flatMap(
+          CommitLogStats.stageDmlBucketed(spark, table, cur, touched.toSet, _))
+        // a segment set rewritten to no rows gets NO empty replacement
+        // segment (a zero-row parquet dir has no footer to infer from)
+        val added = bucketed.fold(
+          rows.toSeq.flatMap(stageRows(spark, tx, table, _)))(b =>
+          tx.stage(b._1)) ++ staged
+        val live = cur.segments.filterNot(touched.toSet) ++ added
+        Snapshot(cur.version + 1L, live, cur.version, op,
+          changes = Some(changes),
+          // a schema-less table left with no segment records the schema
+          // it read, so [[read]] serves an empty frame of that shape
+          schema = cur.schema.orElse(rows.filter(_ => live.isEmpty)
+            .map(r => encodeSchema(r.schema))),
+          dv = cur.dv, bucket = bucketed.map(_._2))
+    }
+  }
+
+  /** The match flag column of [[flagged]] and [[touchedSegments]]. */
+  private val Matched = "__graft_matched"
+
+  /** Segment directories that contain at least one LIVE row matching
     * `matched`: ONE predicate-pushed scan of the whole table collecting
     * only the distinct FILE paths with a match (bounded: one row per
     * touched file — Delta's find-touched-files step, driver-held there
-    * too), mapped back to their uuid-named segment dirs. Untouched
-    * segments survive a DML commit byte-identical. */
+    * too). Untouched segments survive a DML commit byte-identical.
+    * `among` restricts the probe to a sidecar-pruned candidate list
+    * (replaceWhere's partition-bounded rewrite) — the untouched bulk is
+    * then never even probed. Without it a LONE segment counts as
+    * touched unprobed: the probe could not narrow its rewrite, and the
+    * caller's counted CDC write tells whether a row matched. */
   private def touchedSegments(spark: SparkSession, cur: Snapshot,
       matched: org.apache.spark.sql.Column,
-      among: Option[Seq[String]] = None): Seq[String] = {
-    // LIVE rows only: a deletion-vector-dead row matching the
-    // predicate must not mark its segment touched — it would force a
-    // pointless rewrite and a spurious zero-row commit, breaking the
-    // "matching nothing commits NO version" contract. File identity
-    // comes from the `_metadata` tag, not input_file_name(), which
-    // refuses plans with a second source (the DV relation).
-    // `among` restricts the probe to a sidecar-pruned candidate list
-    // (replaceWhere's partition-bounded rewrite) — the untouched bulk
-    // is then never even probed.
-    val candidates = among.getOrElse(cur.segments)
-    if (candidates.isEmpty) return Seq.empty
-    val withPos = withDvPos(
-      readSegments(spark, candidates, cur.schema))
-    val live = cur.dv.fold(withPos)(subtractDv(spark, withPos, _))
-    // the predicate evaluates as a PROJECTED boolean, not a filter
-    // condition: a subquery predicate under NOT in filter position
-    // plans as a null-aware anti join (BroadcastNestedLoopJoin — the
-    // 150k×15k `WHERE NOT EXISTS` frame measured 34 s); in a
-    // projection it plans as a hash ExistenceJoin
-    val files = live.withColumn("__graft_matched", matched)
-      .filter(col("__graft_matched"))
-      .select(col("__graft_dv_file")).distinct()
-      .collect().map(_.getString(0))
-    candidates.filter { seg =>
-      val uuid = seg.substring(seg.lastIndexOf('/') + 1)
-      files.exists(_.contains(uuid))
+      among: Option[Seq[String]] = None): Seq[String] =
+    among.getOrElse(cur.segments) match {
+      case candidates if candidates.isEmpty ||
+          (among.isEmpty && candidates.size == 1) => candidates
+      case candidates =>
+        // a deletion-vector-dead row matching the predicate must not
+        // mark its segment touched: it would force a pointless rewrite
+        // and a spurious zero-row commit. The predicate evaluates as a
+        // PROJECTED boolean, not a filter condition: a subquery
+        // predicate under NOT in filter position plans as a null-aware
+        // anti join (BroadcastNestedLoopJoin — the 150k×15k `WHERE NOT
+        // EXISTS` frame measured 34 s); in a projection it plans as a
+        // hash ExistenceJoin
+        segmentsOf(candidates, taggedLive(spark, cur, Some(candidates))
+          .withColumn(Matched, matched).filter(col(Matched))
+          .select(col(DvTags(0))).distinct()
+          .collect().map(_.getString(0)).toSeq)
     }
+
+  /** The `touched` segments' live rows with `matched` materialized ONCE
+    * as the projected boolean [[Matched]]: the predicate verbs' CDC
+    * record, kept rows and rewrite all filter it, in either polarity —
+    * a negated subquery predicate (`WHERE id IN (SELECT …)` and the
+    * correlated rewrites) nested under NOT plans as a null-aware anti
+    * join Spark can only run as a BroadcastNestedLoopJoin, in a
+    * projection as a hash ExistenceJoin. PINNED when expensive to
+    * recompute (subquery predicates or SET values re-run their joins
+    * per branch); plain predicates skip the pin — a pushed-down parquet
+    * re-scan is cheaper than building the columnar cache (measured,
+    * q163). */
+  private def flagged(spark: SparkSession, tx: Tx, touched: Seq[String],
+      matched: org.apache.spark.sql.Column): DataFrame = {
+    val rows = readLive(spark, tx.existing, Some(touched))
+      .withColumn(Matched, matched)
+    if (expensiveToRecompute(rows)) tx.pin(rows) else rows
   }
 
   /** True when `df` reads rows the session already holds in memory — a
@@ -2714,55 +2900,18 @@ object CommitLog {
     transact(spark, table, "CommitLog.delete") { tx =>
       val cur = tx.existing
       val matched = coalesce(predicate, lit(false))
-      // a lone segment is touched iff a row matches, which the counted
-      // CDC write below tells — the probe could not narrow the rewrite
-      val touched =
-        if (cur.segments.size == 1) cur.segments
-        else touchedSegments(spark, cur, matched)
+      val touched = touchedSegments(spark, cur, matched)
       if (touched.isEmpty) Done((cur.version, 0L)) else {
         // DV-applied read of the touched subset: an already-DV-deleted
-        // row can neither re-report in CDC nor resurrect in the rewrite.
-        // The predicate materializes ONCE as a projected boolean: the
-        // kept set is its NEGATION, and a negated subquery predicate
-        // (`WHERE id IN (SELECT …)` and the correlated rewrites) nested
-        // under NOT plans as a null-aware anti join Spark can only run
-        // as a BroadcastNestedLoopJoin — in a projection it plans as a
-        // hash ExistenceJoin, and both polarities filter the boolean
-        // PIN the flagged frame when it is expensive to recompute
-        // (subquery predicates re-run an existence join per branch):
-        // the CDC write, the kept-row rewrite and the bucketed staging
-        // all filter it. Plain predicates skip the pin — a pushed-down
-        // parquet re-scan is cheaper than building the columnar cache
-        // (measured, q163).
-        val flagged0 = readLive(spark, cur, Some(touched))
-          .withColumn("__graft_matched", matched)
-        val flagged =
-          if (expensiveToRecompute(flagged0)) tx.pin(flagged0) else flagged0
-        val matchedDf = flagged.filter(col("__graft_matched"))
-          .drop("__graft_matched")
-        val changeDir =
-          tx.stage(s"$table/_changes/${java.util.UUID.randomUUID()}")
-        val nDeleted = writeChanges(changeDir,
-          matchedDf
-            .withColumn("_change_type", lit("delete"))
-            .transform(changePhysical(cur)))("delete")
-        if (nDeleted == 0L) Done((cur.version, 0L)) else {
-          val kept = flagged.filter(!col("__graft_matched"))
-            .drop("__graft_matched")
-          // a bucketed layout (SPJ spec) survives the DML: the kept rows
-          // re-land bucket-split and the commit carries the updated spec
-          val bucketStaged = CommitLogStats.stageDmlBucketed(spark, table,
-            cur, touched.toSet, kept)
-          // a fully-deleted segment set gets NO empty replacement segment
-          // (a zero-row parquet dir has no footer to infer schema from)
-          val keptSegs = bucketStaged.fold(
-            stageRows(spark, tx, table, kept))(b => tx.stage(b._1))
-          Publish(Snapshot(cur.version + 1L,
-            cur.segments.filterNot(touched.toSet) ++ keptSegs,
-            cur.version, "delete", changes = Some(changeDir),
-            schema = cur.schema, dv = cur.dv,
-            bucket = bucketStaged.map(_._2)), (cur.version + 1L, nDeleted))
-        }
+        // row can neither re-report in CDC nor resurrect in the rewrite
+        val rows = flagged(spark, tx, touched, matched)
+        val (changes, n) = stageChanges(tx, table,
+          rows.filter(col(Matched)).drop(Matched)
+            .withColumn("_change_type", lit("delete")))
+        if (n("delete") == 0L) Done((cur.version, 0L))
+        else Publish(land(spark, tx, table, "delete", changes,
+          Rewrite(touched, Some(rows.filter(!col(Matched)).drop(Matched)))),
+          (cur.version + 1L, n("delete")))
       }
     }
 
@@ -2794,10 +2943,10 @@ object CommitLog {
     *
     * Returns (version, rowsDeleted, rowsInserted); a no-op (predicate
     * matches nothing AND `df` is empty) commits NO version. A
-    * bucketed (SPJ) layout LAPSES across a replaceWhere — unlike
-    * delete/update/merge, the replacement stages before the OCC loop
-    * resolves the spec; re-run the bucketed OPTIMIZE after a slice
-    * reload if the join layout matters. */
+    * bucketed (SPJ) layout LAPSES across a replaceWhere that writes
+    * rows — unlike delete/update/merge, the replacement stages before
+    * the OCC loop resolves the spec; re-run the bucketed OPTIMIZE
+    * after a slice reload if the join layout matters. */
   def overwriteWhere(spark: SparkSession, table: String, df: DataFrame,
       predicate: org.apache.spark.sql.Column): (Long, Long, Long) = {
     val pre = snapshot(spark, table).getOrElse(
@@ -2884,31 +3033,21 @@ object CommitLog {
               (if (d.columns.exists(_.equalsIgnoreCase(f.name)))
                 col(s"`${f.name}`").cast(f.dataType)
               else lit(null).cast(f.dataType)).as(f.name)): _*)
-          val changeDir =
-            tx.stage(s"$table/_changes/${java.util.UUID.randomUUID()}")
           val delRows = touchedDf.map(t => project(t.filter(matched))
               .withColumn("_change_type", lit("delete")))
           val insRows =
             if (nNew == 0L) None
             else Some(project(pinned)
               .withColumn("_change_type", lit("insert")))
-          val byType = writeChanges(changeDir,
-            (delRows ++ insRows).reduce(_.unionByName(_))
-              .transform(changePhysical(cur)))
-          val nDel = byType.getOrElse("delete", 0L)
-          val nIns = byType.getOrElse("insert", 0L)
+          val (changes, n) = stageChanges(tx, table,
+            (delRows ++ insRows).reduce(_.unionByName(_)))
           // copy-on-write: survivors of the touched segments re-land
-          val kept = touchedDf.map(_.filter(!matched))
-          val keptSegs =
-            kept.fold(Seq.empty[String])(stageRows(spark, tx, table, _))
-          Publish(Snapshot(cur.version + 1L,
-            cur.segments.filterNot(touched.toSet) ++ keptSegs ++ newSegs,
-            cur.version, "replace_where", changes = Some(changeDir),
-            schema = cur.schema, dv = cur.dv,
-            identity = if (idExtents.isEmpty) None
+          Publish(land(spark, tx, table, "replace_where", changes,
+            Rewrite(touched, touchedDf.map(_.filter(!matched)), newSegs))
+            .copy(identity = if (idExtents.isEmpty) None
               else Some(encodeIdentityMarks(syncMarks(
                 decodeIdentity(cur.identity), idExtents)))),
-            (cur.version + 1L, nDel, nIns))
+            (cur.version + 1L, n("delete"), n("insert")))
         }
       }
     } finally pinned.unpersist(): Unit
@@ -2927,11 +3066,11 @@ object CommitLog {
     * contract as [[delete]]; already-DV-deleted rows can neither
     * re-delete nor double-report in the change feed. The DV is a
     * read-side relation, so past `maxDvRows` total the commit
-    * AUTO-FALLS-BACK to copy-on-write of exactly the touched
-    * segments — same final state, same CDC record, one 'delete'
-    * commit — instead of refusing (point-delete economics are gone
-    * there anyway; the caller should not have to know to switch
-    * APIs). */
+    * AUTO-FALLS-BACK to [[delete]]'s copy-on-write path over exactly
+    * the touched segments — same final state, same CDC record, one
+    * 'delete' commit, a bucketed layout kept — instead of refusing
+    * (point-delete economics are gone there anyway; the caller should
+    * not have to know to switch APIs). */
   def deleteVectored(spark: SparkSession, table: String,
       predicate: org.apache.spark.sql.Column,
       maxDvRows: Long = 10000000L): (Long, Long) =
@@ -2964,76 +3103,19 @@ object CommitLog {
     transact(spark, table, "CommitLog.deleteVectored") { tx =>
       val cur = tx.existing
       if (cur.segments.isEmpty) Done((cur.version, 0L)) else {
-        val base = readSegments(spark, cur.segments, cur.schema)
-        val dataCols = base.columns.toSeq
-        val withPos = withDvPos(base)
-        val live = cur.dv.fold(withPos)(subtractDv(spark, withPos, _))
-        // one predicate-pushed scan; persisted so the CDC record and
+        val live = taggedLive(spark, cur)
+        // one predicate-pushed scan, persisted so the CDC record and
         // the DV positions are written from the SAME row set (a
-        // nondeterministic predicate cannot let them diverge)
-        val matches = tx.pin(matcher(live))
-        val nDeleted = matches.count()
-        if (nDeleted == 0L) Done((cur.version, 0L)) else {
-          val priorDv = cur.dv.map(d =>
-            spark.read.parquet(d).count()).getOrElse(0L)
-          val changeDir =
-            tx.stage(s"$table/_changes/${java.util.UUID.randomUUID()}")
-          matches.select(dataCols.map(col): _*)
-            .withColumn("_change_type", lit("delete"))
-            .transform(changePhysical(cur))
-          .write.mode(SaveMode.ErrorIfExists).parquet(changeDir)
-          if (priorDv + nDeleted > maxDvRows) {
-            // Past the bound, merge-on-read economics are gone — the
-            // vector is a relation every subsequent scan subtracts.
-            // Instead of refusing (the caller would have to know to
-            // switch APIs), fall back to COPY-ON-WRITE of exactly the
-            // touched segments: same final state, same CDC record,
-            // one 'delete' commit. `matches` already carries the live
-            // matched rows WITH their (file, pos) tags, so the kept
-            // rows are one anti-join away; the touched-file list is
-            // bounded by the table's file count (collected once, the
-            // same bound as subtractDv's dictionary).
-            val touchedFiles = matches.select(col("__graft_dv_file"))
-              .distinct().collect().map(_.getString(0))
-            val touchedSegs = cur.segments.filter { seg =>
-              val u = seg.substring(seg.lastIndexOf('/') + 1)
-              touchedFiles.exists(_.contains(u))
-            }
-            val touchedTagged = withDvPos(
-              readSegments(spark, touchedSegs, cur.schema))
-            val touchedLive =
-              cur.dv.fold(touchedTagged)(subtractDv(spark, touchedTagged, _))
-            val kept = touchedLive.join(
-              matches.select(col("__graft_dv_file"),
-                col("__graft_dv_pos")),
-              Seq("__graft_dv_file", "__graft_dv_pos"), "left_anti")
-              .select(dataCols.map(col): _*)
-            val keptSegs = stageRows(spark, tx, table, kept)
-            // the untouched segments may still owe rows to the current
-            // vector — carry it; its entries for rewritten-away files
-            // match nothing (readers dictionary by live file paths)
-            Publish(Snapshot(cur.version + 1L,
-              cur.segments.filterNot(touchedSegs.toSet) ++ keptSegs,
-              cur.version, "delete", changes = Some(changeDir),
-              schema = cur.schema, dv = cur.dv), (cur.version + 1L, nDeleted))
-          } else {
-            val newPairs = matches.select(
-              col("__graft_dv_file").as("_dv_file"),
-              col("__graft_dv_pos").as("_dv_pos"))
-            val dvDir = tx.stage(s"$table/_dv/${java.util.UUID.randomUUID()}")
-            // repartition, NOT coalesce: coalesce(1) would collapse the
-            // upstream predicate scan into one task; the shuffle moves
-            // only the matched positions (bounded by maxDvRows)
-            cur.dv.map(d => spark.read.parquet(d).unionByName(newPairs))
-              .getOrElse(newPairs)
-              .repartition(1)
-              .write.mode(SaveMode.ErrorIfExists).parquet(dvDir)
-            Publish(Snapshot(cur.version + 1L, cur.segments,
-              cur.version, "delete_dv", changes = Some(changeDir),
-              schema = cur.schema, dv = Some(dvDir)),
-              (cur.version + 1L, nDeleted))
-          }
-        }
+        // nondeterministic predicate cannot let them diverge); the
+        // select restores the column order a USING join moves
+        val matches = tx.pin(matcher(live)
+          .select(live.columns.toSeq.map(col): _*))
+        val (changes, n) = stageChanges(tx, table, matches
+          .drop(DvTags: _*).withColumn("_change_type", lit("delete")))
+        if (n("delete") == 0L) Done((cur.version, 0L))
+        else Publish(land(spark, tx, table, "delete", changes,
+          Vectored(matches, n("delete"), None, maxDvRows)),
+          (cur.version + 1L, n("delete")))
       }
     }
 
@@ -3044,7 +3126,8 @@ object CommitLog {
     * segment (whose cost is the segment size, not the match count).
     * Same SET-clause semantics (cast back to declared types, unknown
     * columns fail fast), CDC pre/post recording, OCC retry, no-op
-    * and `maxDvRows` contracts as the vectored delete; OPTIMIZE
+    * and `maxDvRows` contracts as the vectored delete — past the bound
+    * it is ONE 'update' commit on the copy-on-write path; OPTIMIZE
     * materializes as usual. */
   def updateVectored(spark: SparkSession, table: String,
       predicate: org.apache.spark.sql.Column,
@@ -3054,64 +3137,16 @@ object CommitLog {
     transact(spark, table, "CommitLog.updateVectored") { tx =>
       val cur = tx.existing
       if (cur.segments.isEmpty) Done((cur.version, 0L)) else {
-        val schema = readSegments(spark, cur.segments, cur.schema).schema
-        val unknown = set.keySet -- schema.fieldNames.toSet
-        require(unknown.isEmpty,
-          s"CommitLog.updateVectored: SET names unknown column(s) " +
-            s"${unknown.mkString(", ")} — table has " +
-            schema.fieldNames.mkString(", "))
-        val logical = cur.schema.map(decodeSchema)
-        refuseGeneratedSet("updateVectored", set.keys, logical)
-        val matched = coalesce(predicate, lit(false))
-        val withPos = withDvPos(
-          readSegments(spark, cur.segments, cur.schema))
-        val live = cur.dv.fold(withPos)(subtractDv(spark, withPos, _))
-        val matches = tx.pin(live.filter(matched))
-        val nUpdated = matches.count()
-        if (nUpdated == 0L) Done((cur.version, 0L))
-        else if (cur.dv.map(d => spark.read.parquet(d).count())
-            .getOrElse(0L) + nUpdated > maxDvRows)
-          // merge-on-read economics gone past the bound — ONE
-          // dispatch to the copy-on-write [[update]] (same SET
-          // semantics, same CDC pre/post recording) instead of a
-          // refusal, mirroring [[deleteVectored]]'s fallback
-          Done(update(spark, table, predicate, set))
-        else {
-          // post-image recompute: a SET touching a generation source
-          // propagates into the generated column (Delta's rule)
-          val applied = recomputeGenerated(
-            matches.select(schema.fieldNames.toSeq.map { f =>
-              set.get(f) match {
-                case Some(e) => e.cast(schema(f).dataType).as(f)
-                case None => col(f)
-              }
-            }: _*), logical)
-          val preImage = matches
-            .select(schema.fieldNames.toSeq.map(col): _*)
-          val changeDir =
-            tx.stage(s"$table/_changes/${java.util.UUID.randomUUID()}")
-          preImage.withColumn("_change_type", lit("update_preimage"))
-            .unionByName(applied
-              .withColumn("_change_type", lit("update_postimage")))
-            .transform(changePhysical(cur))
-          .write.mode(SaveMode.ErrorIfExists).parquet(changeDir)
-          val newSeg = tx.stage(writeSegment(spark, table, applied, tx.cur))
-          val newPairs = matches.select(
-            col("__graft_dv_file").as("_dv_file"),
-            col("__graft_dv_pos").as("_dv_pos"))
-          val dvDir = tx.stage(s"$table/_dv/${java.util.UUID.randomUUID()}")
-          // repartition, NOT coalesce: coalesce(1) would collapse the
-          // upstream predicate scan into one task; the shuffle moves
-          // only the matched positions (bounded by maxDvRows)
-          cur.dv.map(d => spark.read.parquet(d).unionByName(newPairs))
-            .getOrElse(newPairs)
-            .repartition(1)
-            .write.mode(SaveMode.ErrorIfExists).parquet(dvDir)
-          Publish(Snapshot(cur.version + 1L, cur.segments :+ newSeg,
-            cur.version, "update_dv", changes = Some(changeDir),
-            schema = cur.schema, dv = Some(dvDir)),
-            (cur.version + 1L, nUpdated))
-        }
+        val image = new SetImage(spark, "updateVectored", cur, Seq(set))
+        val matches = tx.pin(taggedLive(spark, cur)
+          .filter(coalesce(predicate, lit(false))))
+        val post = image(matches, set)
+        val (changes, n) = stageChanges(tx, table,
+          imagePair(matches.drop(DvTags: _*), post))
+        if (n("update_preimage") == 0L) Done((cur.version, 0L))
+        else Publish(land(spark, tx, table, "update", changes,
+          Vectored(matches, n("update_preimage"), Some(post), maxDvRows)),
+          (cur.version + 1L, n("update_preimage")))
       }
     }
   }
@@ -3130,72 +3165,18 @@ object CommitLog {
     require(set.nonEmpty, "CommitLog.update: empty SET clause")
     transact(spark, table, "CommitLog.update") { tx =>
       val cur = tx.existing
-      val schema = readSegments(spark, cur.segments, cur.schema).schema
-      val unknown = set.keySet -- schema.fieldNames.toSet
-      require(unknown.isEmpty,
-        s"CommitLog.update: SET names unknown column(s) " +
-          s"${unknown.mkString(", ")} — table has " +
-          schema.fieldNames.mkString(", "))
-      val logical = cur.schema.map(decodeSchema)
-      refuseGeneratedSet("update", set.keys, logical)
+      val image = new SetImage(spark, "update", cur, Seq(set))
       val matched = coalesce(predicate, lit(false))
       val touched = touchedSegments(spark, cur, matched)
       if (touched.isEmpty) Done((cur.version, 0L)) else {
-        // projected-boolean evaluation — same planning rationale as
-        // [[delete]]: a subquery predicate in filter position under NOT
-        // would plan a nested-loop anti join; as a projected column it
-        // plans a hash ExistenceJoin and every branch filters the flag
-        // PIN the flagged rewrite frame when it is expensive to
-        // recompute (subquery predicates / SET values re-run their
-        // joins per branch; plain ones re-scan cheaper than they
-        // cache — measured, q163): the CDC write (pre+post image), the
-        // rewrite and the bucketed staging all filter it. Bounded by
-        // the copy-on-write working set; released on every exit path.
-        val touchedDf0 = readLive(spark, cur, Some(touched))
-          .withColumn("__graft_matched", matched)
-        val touchedDf =
-          if (expensiveToRecompute(touchedDf0)) tx.pin(touchedDf0)
-          else touchedDf0
-        // generated columns recompute over the POST-image so a SET
-        // touching a generation source propagates (Delta's rule); the
-        // recompute is the identity on unmatched rows
-        def applied(onlyMatched: Boolean): DataFrame = {
-          val base =
-            if (onlyMatched) touchedDf.filter(col("__graft_matched"))
-            else touchedDf
-          recomputeGenerated(base.select(schema.fieldNames.toSeq.map { f =>
-            set.get(f) match {
-              case Some(e) if onlyMatched =>
-                e.cast(schema(f).dataType).as(f)
-              case Some(e) =>
-                when(col("__graft_matched"), e.cast(schema(f).dataType))
-                  .otherwise(col(f)).as(f)
-              case None => col(f)
-            }
-          }: _*), logical)
-        }
-        val changeDir =
-          tx.stage(s"$table/_changes/${java.util.UUID.randomUUID()}")
-        val nUpdated = writeChanges(changeDir,
-          touchedDf.filter(col("__graft_matched"))
-            .drop("__graft_matched")
-            .withColumn("_change_type", lit("update_preimage"))
-            .unionByName(applied(onlyMatched = true)
-              .withColumn("_change_type", lit("update_postimage")))
-            .transform(changePhysical(cur)))("update_preimage")
-        // a bucketed layout (SPJ spec) survives: post-image rows
-        // re-land bucket-split (SET on a bucket KEY still re-hashes
-        // correctly — purity per segment is the invariant)
-        val bucketStaged = CommitLogStats.stageDmlBucketed(spark, table,
-          cur, touched.toSet, applied(onlyMatched = false))
-        val newSegs = tx.stage(bucketStaged.map(_._1).getOrElse(
-          Seq(writeSegment(spark, table, applied(onlyMatched = false),
-            tx.cur))))
-        Publish(Snapshot(cur.version + 1L,
-          cur.segments.filterNot(touched.toSet) ++ newSegs,
-          cur.version, "update", changes = Some(changeDir),
-          schema = cur.schema, dv = cur.dv,
-          bucket = bucketStaged.map(_._2)), (cur.version + 1L, nUpdated))
+        val rows = flagged(spark, tx, touched, matched)
+        val hit = rows.filter(col(Matched))
+        val (changes, n) = stageChanges(tx, table,
+          imagePair(hit.drop(Matched), image(hit, set)))
+        if (n("update_preimage") == 0L) Done((cur.version, 0L))
+        else Publish(land(spark, tx, table, "update", changes,
+          Rewrite(touched, Some(image(rows, set, Some(col(Matched)))))),
+          (cur.version + 1L, n("update_preimage")))
       }
     }
   }
@@ -3677,19 +3658,13 @@ object CommitLog {
             (tx.attempt > 0 && lastTxn(spark, table, a).exists(_ >= b)) })
         Done((cur.version, 0L, 0L, 0L))
       else {
-        val schema = readSegments(spark, cur.segments, cur.schema).schema
+        val allSets = updateSets(matched) ++ updateSets(notMatchedBySource)
+        val image = new SetImage(spark, "mergeInto", cur, allSets)
+        val (schema, logical) = (image.schema, image.logical)
         val unknownKeys = keys.toSet -- schema.fieldNames.toSet
         require(unknownKeys.isEmpty,
           s"CommitLog.mergeInto: key(s) ${unknownKeys.mkString(", ")} " +
             s"absent from table schema ${schema.fieldNames.mkString(", ")}")
-        val allSets = updateSets(matched) ++ updateSets(notMatchedBySource)
-        val unknownSet = allSets.flatMap(_.keySet).toSet --
-          schema.fieldNames.toSet
-        require(unknownSet.isEmpty,
-          s"CommitLog.mergeInto: SET names unknown column(s) " +
-            unknownSet.mkString(", "))
-        val logical = cur.schema.map(decodeSchema)
-        refuseGeneratedSet("mergeInto", allSets.flatMap(_.keys), logical)
         val nonKeySrc = source.columns.filterNot(keys.contains).toSeq
         val srcRenamed = source.select(keys.map(col) ++
           nonKeySrc.map(c => col(c).as(s"__src_$c")) :+
@@ -3699,11 +3674,7 @@ object CommitLog {
         // file identity from the `_metadata` tag — input_file_name()
         // refuses multi-source plans once the DV relation joins in)
         val all = readLive(spark, cur)
-        val tagged = {
-          val wp = withDvPos(readSegments(spark, cur.segments,
-            cur.schema))
-          cur.dv.fold(wp)(subtractDv(spark, wp, _))
-        }
+        val tagged = taggedLive(spark, cur)
         /** ONE collect answers the touched-file probe AND the
           * duplicate-key guard: `rows` (a `__file` per live target row,
           * plus the probe's flags) and the source's duplicate keys (as
@@ -3782,11 +3753,8 @@ object CommitLog {
                 .distinct().collect().map(_.getString(0))
             (mf, nf)
           }
-        val touchedFiles = (matchedFiles ++ nmbsFiles).distinct
-        val touched = cur.segments.filter { seg =>
-          val uuid = seg.substring(seg.lastIndexOf('/') + 1)
-          touchedFiles.exists(_.contains(uuid))
-        }
+        val touched = segmentsOf(cur.segments,
+          (matchedFiles ++ nmbsFiles).distinct.toSeq)
         // empty touched list: an insert-only merge — keep a same-schema
         // empty frame (an empty parquet path list cannot infer one);
         // the join still runs so src() references stay resolvable
@@ -3842,29 +3810,15 @@ object CommitLog {
             (i, set) }
         val mUpdates = updates(matched)
         val nUpdates = updates(notMatchedBySource)
-        def project(df: DataFrame,
-            set: Map[String, org.apache.spark.sql.Column]): DataFrame = {
-          val sel = df.select(schema.fieldNames.toSeq.map { f =>
-            set.get(f) match {
-              case Some(e) => e.cast(schema(f).dataType).as(f)
-              case _ => col(f)
-            }
-          }: _*)
-          // updated rows recompute generated columns over the
-          // POST-image (a SET touching a generation source propagates
-          // — Delta's rule); pass-through rows keep their gate-proven
-          // values byte-identical
-          if (set.nonEmpty) recomputeGenerated(sel, logical) else sel
-        }
         /** (pre, post) image pairs for every update clause on both
           * sides, each filtered to exactly the rows its clause won. */
         def updateImages: Seq[(DataFrame, DataFrame)] =
           mUpdates.map { case (i, set) =>
-            (project(joined.filter(mFire === i), Map.empty),
-              project(joined.filter(mFire === i), set))
+            (image(joined.filter(mFire === i), Map.empty),
+              image(joined.filter(mFire === i), set))
           } ++ nUpdates.map { case (i, set) =>
-            (project(joined.filter(nFire === i), Map.empty),
-              project(joined.filter(nFire === i), set))
+            (image(joined.filter(nFire === i), Map.empty),
+              image(joined.filter(nFire === i), set))
           }
         // inserts check NOT-MATCHED against the WHOLE table, not just
         // touched segments
@@ -3918,29 +3872,22 @@ object CommitLog {
             // released per attempt
             Some(tx.pin(projected))
           }
-        val changeDir =
-          tx.stage(s"$table/_changes/${java.util.UUID.randomUUID()}")
         // every clause records under the SAME CDC vocabulary (delete /
         // update_pre+postimage) regardless of side or position — a
         // change-feed consumer sees one uniform merge commit, exactly
         // as Delta records it
-        val deletedRows = project(joined.filter(delCond || nmbsDelCond),
+        val deletedRows = image(joined.filter(delCond || nmbsDelCond),
             Map.empty)
           .withColumn("_change_type", lit("delete"))
         val insRows = inserts.map(_.withColumn("_change_type",
           lit("insert"))).getOrElse(deletedRows.filter(lit(false)))
-        val changeRows = updateImages.foldLeft(
-          deletedRows.unionByName(insRows)) { case (acc, (pre, post)) =>
-            acc.unionByName(pre.withColumn("_change_type",
-                lit("update_preimage")))
-              .unionByName(post.withColumn("_change_type",
-                lit("update_postimage")))
-          }
-        val byType = writeChanges(changeDir,
-          changeRows.transform(changePhysical(cur)))
-        val nDel = byType.getOrElse("delete", 0L)
-        val nUpd = byType.getOrElse("update_preimage", 0L)
-        val nIns = byType.getOrElse("insert", 0L)
+        val (changes, byType) = stageChanges(tx, table,
+          updateImages.foldLeft(deletedRows.unionByName(insRows)) {
+            case (acc, (pre, post)) => acc.unionByName(imagePair(pre, post))
+          })
+        val nDel = byType("delete")
+        val nUpd = byType("update_preimage")
+        val nIns = byType("insert")
         // nothing touched and nothing inserted: no commit (the staged
         // change record is dropped with the attempt)
         if (touched.isEmpty && nIns == 0L) Done((cur.version, 0L, 0L, 0L))
@@ -3948,18 +3895,16 @@ object CommitLog {
           // rewritten touched rows (survivors: no clause fired →
           // byte-identical pass-through; update clauses → post-images) +
           // inserts → one segment
-          val untouched = project(
+          val untouched = image(
             joined.filter(mFire === -1 && nFire === -1), Map.empty)
           val survivors = updateImages.foldLeft(untouched) {
             case (acc, (_, post)) => acc.unionByName(post)
           }
-          val newRows = inserts.fold(survivors)(survivors.unionByName(_))
-          // a bucketed layout (SPJ spec) survives the merge: survivors,
-          // updates AND inserts re-land bucket-split
-          val bucketStaged = CommitLogStats.stageDmlBucketed(spark, table,
-            cur, touched.toSet, newRows)
-          val newSegs = bucketStaged.fold(
-            stageRows(spark, tx, table, newRows))(b => tx.stage(b._1))
+          // survivors, updates AND inserts re-land together (bucket-
+          // split on a bucketed layout)
+          val snap = land(spark, tx, table, "merge_into", changes,
+            Rewrite(touched,
+              Some(inserts.fold(survivors)(survivors.unionByName(_)))))
           // BY DEFAULT identity columns touched by SET (ALWAYS refuses at
           // refuseGeneratedSet): fold the post-image extent into the
           // marks — the same auto-SYNC the append path gives provided
@@ -3988,14 +3933,10 @@ object CommitLog {
                 if (step > 0L) math.max(hwm, e) else math.min(hwm, e)))
             })
           }
-          Publish(Snapshot(cur.version + 1L,
-            cur.segments.filterNot(touched.toSet) ++ newSegs,
-            cur.version, "merge_into", changes = Some(changeDir),
-            txnApp = txn.map(_._1), txnBatch = txn.map(_._2),
-            schema = cur.schema, dv = cur.dv,
+          Publish(snap.copy(txnApp = txn.map(_._1),
+            txnBatch = txn.map(_._2),
             identity = idMarks.map(m => encodeConstraints(
-              m.map { case (k, x) => k -> x.toString })),
-            bucket = bucketStaged.map(_._2)),
+              m.map { case (k, x) => k -> x.toString }))),
             (cur.version + 1L, nUpd, nDel, nIns))
         }
       }

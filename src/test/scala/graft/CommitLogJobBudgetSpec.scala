@@ -68,6 +68,7 @@ class CommitLogJobBudgetSpec extends AnyFunSuite {
   test("each commit-log verb stays inside its Spark job budget") {
     val t = seeded()
     val replica = seeded()
+    val dml = seeded()
     try {
       assert(CommitLog.snapshot(spark, t).get.schema.isEmpty)
       val base = CommitLog.currentVersion(spark, t).get
@@ -116,13 +117,45 @@ class CommitLogJobBudgetSpec extends AnyFunSuite {
       // one segment left: the delete needs no touched-file probe
       counts("delete one segment") = jobs(CommitLog.delete(spark, t,
         col("o_custkey") === 7L))._2
+      val bumpPrice = Map("o_totalprice" -> (col("o_totalprice") + 1.0))
+      counts("update one segment") = jobs(CommitLog.update(spark, t,
+        col("o_custkey") === 8L, bumpPrice))._2
+
+      // the row-level verbs on three segments: copy-on-write first, then
+      // a first deletion vector, verbs over it, and both vectored verbs
+      // forced onto copy-on-write
+      CommitLog.append(spark, dml, orders(401L to 500L))
+      counts("update") = jobs(CommitLog.update(spark, dml,
+        col("o_custkey") === 3L, bumpPrice))._2
+      counts("overwriteWhere") = jobs(CommitLog.overwriteWhere(spark, dml,
+        orders(Seq(4L, 41L), bump = 2.0), col("o_custkey") === 4L))._2
+      counts("deleteVectored") = jobs(CommitLog.deleteVectored(spark, dml,
+        col("o_custkey") === 5L))._2
+      counts("deleteVectored prior DV") = jobs(CommitLog.deleteVectored(
+        spark, dml, col("o_custkey") === 6L))._2
+      counts("updateVectored prior DV") = jobs(CommitLog.updateVectored(
+        spark, dml, col("o_custkey") === 7L, bumpPrice))._2
+      counts("deleteVectored maxDvRows 0") = jobs(CommitLog.deleteVectored(
+        spark, dml, col("o_custkey") === 8L, maxDvRows = 0L))._2
+      counts("updateVectored maxDvRows 0") = jobs(CommitLog.updateVectored(
+        spark, dml, col("o_custkey") === 9L, bumpPrice, maxDvRows = 0L))._2
+      val deleted = Set(4L, 5L, 6L, 8L)
+      assert(CommitLog.read(spark, dml).count() ===
+        (1L to 500L).count(k => !deleted(k % 37)) + 2L)
+      assert(CommitLog.read(spark, dml)
+        .filter(col("o_custkey").isin(3L, 7L, 9L)).collect()
+        .forall(r => r.getDouble(3) == r.getLong(0) * 1.5 + 1.0))
 
       val budget = Map("mergeInto" -> 11, "delete" -> 4, "read" -> 0,
         "read+aggregate" -> 2, "changeFeed" -> 0, "mergeIntoClauses" -> 12,
-        "compact" -> 2, "delete one segment" -> 2)
+        "compact" -> 2, "delete one segment" -> 2,
+        "update one segment" -> 2, "update" -> 4, "overwriteWhere" -> 9,
+        "deleteVectored" -> 3, "deleteVectored prior DV" -> 9,
+        "updateVectored prior DV" -> 11, "deleteVectored maxDvRows 0" -> 14,
+        "updateVectored maxDvRows 0" -> 13)
       val over = counts.filter { case (v, n) => n > budget(v) }
       assert(over.isEmpty, s"jobs per verb $counts, budget $budget")
-    } finally { rm(t); rm(replica) }
+    } finally { rm(t); rm(replica); rm(dml) }
   }
 
   test("a merge that matches and inserts nothing, or a delete that " +

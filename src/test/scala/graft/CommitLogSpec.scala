@@ -5963,6 +5963,59 @@ class CommitLogSpec extends AnyFunSuite {
       assert(e2.getMessage.contains("must not nest"))
     } finally rm(t)
   }
+
+  test("a schema-less table emptied by delete records the schema it " +
+      "read: read serves an empty frame, update commits nothing and " +
+      "mergeInto inserts") {
+    val t = tmpTable()
+    try {
+      CommitLog.append(spark, t, df((1L, "a", 1.0), (2L, "b", 2.0)))
+      assert(CommitLog.snapshot(spark, t).get.schema.isEmpty)
+      val (v, n) = CommitLog.delete(spark, t, lit(true))
+      assert(n === 2L)
+      assert(CommitLog.snapshot(spark, t).get.segments.isEmpty)
+      val empty = CommitLog.read(spark, t)
+      assert(empty.columns.toSeq === Seq("id", "name", "v"))
+      assert(empty.count() === 0L)
+      assert(CommitLog.update(spark, t, col("id") === 1L,
+        Map("v" -> lit(0.0))) === ((v, 0L)))
+      assert(CommitLog.currentVersion(spark, t) === Some(v))
+      val (_, _, _, ins) = CommitLog.mergeInto(spark, t,
+        df((3L, "c", 3.0), (4L, "d", 4.0)), Seq("id"),
+        whenMatchedUpdate = Map("v" -> CommitLog.src("v")))
+      assert(ins === 2L)
+      assert(sortedRows(CommitLog.read(spark, t)) ===
+        Seq((3L, "c", 3.0), (4L, "d", 4.0)))
+    } finally rm(t)
+  }
+
+  test("deleteVectored past maxDvRows keeps a bucketed layout, as " +
+      "delete does") {
+    import spark.implicits._
+    val rows = (1L to 64L).map(i => (i, s"n$i", i * 1.0))
+    val tables = Seq(tmpTable(), tmpTable())
+    try {
+      tables.foreach { t =>
+        CommitLog.append(spark, t, rows.toDF("id", "name", "v"))
+        graft.sources.CommitLogStats.compactBucketed(spark, t, Seq("id"),
+          nBuckets = 8, statsCols = Seq("id"))
+      }
+      val Seq(vectored, cow) = tables
+      assert(CommitLog.deleteVectored(spark, vectored, col("id") === 42L,
+        maxDvRows = 0L)._2 === 1L)
+      assert(CommitLog.delete(spark, cow, col("id") === 42L)._2 === 1L)
+      tables.foreach { t =>
+        val snap = CommitLog.snapshot(spark, t).get
+        assert(snap.op === "delete")
+        val spec = snap.bucket.flatMap(CommitLog.decodeBucketSpec)
+        assert(spec.isDefined, s"$t lost its bucket layout")
+        assert(snap.segments.map(s => s.substring(s.lastIndexOf('/') + 1))
+          .forall(spec.get.byUuid.contains))
+        assert(sortedRows(CommitLog.read(spark, t)) ===
+          rows.filterNot(_._1 == 42L))
+      }
+    } finally tables.foreach(rm)
+  }
 }
 
 object CommitLogSpec {

@@ -71,6 +71,14 @@ class CommitLogTransactSpec extends AnyFunSuite {
     "delete" -> (t => CommitLog.delete(spark, t, col("id") === 2L)),
     "deleteVectored" -> (t =>
       CommitLog.deleteVectored(spark, t, col("id") === 2L)),
+    "deleteVectoredKeys" -> (t => CommitLog.deleteVectoredKeys(spark, t,
+      df((2L, "b", 2.0)).select("id"), Seq("id"))),
+    "deleteVectored at maxDvRows 0" -> (t => CommitLog.deleteVectored(
+      spark, t, col("id") === 2L, maxDvRows = 0L)),
+    "updateVectored" -> (t => CommitLog.updateVectored(spark, t,
+      col("id") === 1L, Map("v" -> lit(10.0)))),
+    "updateVectored at maxDvRows 0" -> (t => CommitLog.updateVectored(
+      spark, t, col("id") === 1L, Map("v" -> lit(10.0)), maxDvRows = 0L)),
     "update" -> (t => CommitLog.update(spark, t, col("id") === 1L,
       Map("v" -> lit(10.0)))),
     "overwriteWhere" -> (t => CommitLog.overwriteWhere(spark, t,
@@ -124,7 +132,11 @@ class CommitLogTransactSpec extends AnyFunSuite {
       df((2L, "bb", -1.0)), Seq("id"),
       whenMatchedUpdate = Map("v" -> CommitLog.src("v")))),
     "update" -> (t => CommitLog.update(spark, t, col("id") === 2L,
-      Map("v" -> lit(-1.0)))))
+      Map("v" -> lit(-1.0)))),
+    "updateVectored" -> (t => CommitLog.updateVectored(spark, t,
+      col("id") === 2L, Map("v" -> lit(-1.0)))),
+    "updateVectored at maxDvRows 0" -> (t => CommitLog.updateVectored(
+      spark, t, col("id") === 2L, Map("v" -> lit(-1.0)), maxDvRows = 0L)))
 
   refusedDml.foreach { case (name, verb) =>
     test(s"$name refused by a CHECK constraint leaves no change " +
